@@ -24,7 +24,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 # Headline set ≙ BASELINE.md rows (query name -> baseline table row).
 HEADLINE = [
@@ -283,6 +284,9 @@ def main() -> None:
         "jobs": per_jobs,
         "runs": n_runs,
         "sf": sf,
+        # local[N]'s N: timings from another core count are context,
+        # not a baseline
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     # per-query executor time (ms) of ONE steady-state execution —
     # the load-attributable companion to the wall-clock medians
@@ -317,20 +321,27 @@ def main() -> None:
 def _load_prev_bench() -> dict:
     """Latest committed BENCH_r{N}.json (the driver wraps this
     script's JSON line under "parsed"), with its filename under
-    ``::tag``.  Empty dict when none exists/parses."""
-    import glob
+    ``::tag``.  Empty dict when none exists/parses.
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    prior = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    if not prior:
+    "Latest" is the highest round NUMBER (r100 after r99, which a
+    sorted glob gets wrong), and only plain ``BENCH_r{N}.json`` files
+    count: a ``BENCH_r{N}_c{C}.json`` control run on another core
+    count sorts after its round's own file but is not its baseline."""
+    rounds = {}
+    for name in os.listdir(HERE):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", name)
+        if m:
+            rounds[int(m.group(1))] = name
+    if not rounds:
         return {}
+    tag = rounds[max(rounds)]
     try:
-        with open(prior[-1]) as f:
+        with open(os.path.join(HERE, tag)) as f:
             prev = json.load(f)
     except (OSError, json.JSONDecodeError):
         return {}
     prev = prev.get("parsed", prev)
-    prev["::tag"] = os.path.basename(prior[-1])
+    prev["::tag"] = tag
     return prev
 
 

@@ -891,7 +891,11 @@ def jaccard_threshold_pairs(
 
     Output: (d1, d2, inter, sz1, sz2), d1 < d2 — integer columns;
     callers compute the jaccard double downstream so oracle float
-    semantics are untouched."""
+    semantics are untouched.
+
+    ``toks`` is reduced to its distinct tokens at entry: both routes
+    score token SETS, and only on duplicate-free arrays do their
+    ``sz`` columns agree."""
     from .bitset import (
         blocked_pair_survivors,
         dictionary_ids,
@@ -900,6 +904,7 @@ def jaccard_threshold_pairs(
     )
 
     spark = doc_toks.sparkSession
+    doc_toks = doc_toks.withColumn("toks", F.array_distinct("toks"))
     thr = (F.col("inter") * theta_den
            >= (F.col("sz1") + F.col("sz2") - F.col("inter")) * theta_num)
     # route on DOC-level statistics (one explode + one vocabulary-sized

@@ -24,6 +24,7 @@ outputs write back partitioned — never collected.
 from __future__ import annotations
 
 import struct
+from collections import OrderedDict
 from collections.abc import Iterator
 
 import numpy as np
@@ -1634,12 +1635,13 @@ class _HuffLut:
 
 # decoders re-parse the same DHT segments for every (KB-scale) blob;
 # the parsed LUTs are content-addressed so the parse happens once per
-# distinct table per worker, not once per image.  BOUNDED (r16
-# ADVICE): each _HuffLut holds 128 KB, so adversarially varied DHT
-# segments would otherwise grow worker memory for the executor's
-# lifetime — past the cap the cache is cleared (rebuilding a LUT is
-# cheap relative to unbounded growth; real corpora reuse a handful).
-_HUFF_LUT_CACHE: dict = {}
+# distinct table per worker, not once per image.  BOUNDED: each
+# _HuffLut holds 128 KB, so adversarially varied DHT segments would
+# otherwise grow worker memory for the executor's lifetime.  Past the
+# cap the least recently used LUT is evicted — one entry, not the whole
+# cache, so a corpus cycling through 257 tables keeps 256 of them hot
+# instead of rebuilding every LUT after each overflow.
+_HUFF_LUT_CACHE: OrderedDict = OrderedDict()
 _HUFF_LUT_CACHE_MAX = 256  # ~32 MB worst case
 
 
@@ -1648,8 +1650,10 @@ def _huff_lut(bits, vals) -> _HuffLut:
     t = _HUFF_LUT_CACHE.get(key)
     if t is None:
         if len(_HUFF_LUT_CACHE) >= _HUFF_LUT_CACHE_MAX:
-            _HUFF_LUT_CACHE.clear()
+            _HUFF_LUT_CACHE.popitem(last=False)
         t = _HUFF_LUT_CACHE[key] = _HuffLut(bits, vals)
+    else:
+        _HUFF_LUT_CACHE.move_to_end(key)
     return t
 
 class _BitReader:

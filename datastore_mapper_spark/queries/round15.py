@@ -107,19 +107,21 @@ def dedup_semantic_clusters(spark, sf_dir):
         .select("id1", "id2", "d1", "d2")
         .localCheckpoint()
     )
-    separated = close.filter(~F.col("d1") & ~F.col("d2")) \
-        .limit(1).count() == 0
+    # isEmpty(), not limit(1).count() == 0: a limit inside a codegen
+    # stage takes its counter's name from a JVM-wide sequence, so every
+    # call would compile fresh classes that no codegen cache can reuse
+    separated = close.filter(~F.col("d1") & ~F.col("d2")).isEmpty()
     justified = (
         verdicts.filter(F.col("dropped"))
         .join(close.select(F.col("id2").alias("vec_id")).distinct(),
               "vec_id", "left_anti")
-        .limit(1).count() == 0
+        .isEmpty()
     )
     partition_exact = verdicts.count() == n_corpus
     twins_dropped = (
         verdicts.filter((F.col("vec_id") >= _TWIN_OFF)
                         & ~F.col("dropped"))
-        .limit(1).count() == 0
+        .isEmpty()
     )
     return (
         verdicts.filter(F.col("vec_id") >= _TWIN_OFF)

@@ -18,9 +18,13 @@ lambdas, map-type, bitwise aggs, stratified exact-k, ...) still get a
 timing history and a first-drift alarm.
 
 Output JSON: {"queries": {name: median_sec | "ERR ..."},
-"spread": {name: [min, max]}, "runs": N, "sf_dir": ...,
-"drift_warnings": [...]}.  Older SWEEP_r*.json files are flat
-{name: sec} — the tripwire reads both shapes.
+"spread": {name: [min, max]}, "codegen_compiles": {name: [per run]},
+"runs": N, "sf_dir": ..., "drift_warnings": [...]}.  Older
+SWEEP_r*.json files are flat {name: sec} — the tripwire reads both
+shapes.  ``codegen_compiles`` counts the generated classes Janino
+compiled during each run (``session.codegen_compiles``): a query whose
+later runs still compile either put per-call values into generated code
+or no longer fits the codegen cache beside the queries before it.
 
 Usage: python scripts/time_registry.py [sf_dir] [out.json]
 Continues past per-query errors (reported as "ERR ...") and writes the
@@ -106,7 +110,7 @@ def main() -> int:
 
     from datastore_mapper_spark.catalog import load_tables
     from datastore_mapper_spark.registry import all_queries
-    from datastore_mapper_spark.session import get_session
+    from datastore_mapper_spark.session import codegen_compiles, get_session
 
     spark = get_session("time-registry")
     spark.sparkContext.setLogLevel("ERROR")
@@ -157,19 +161,23 @@ def main() -> int:
 
     queries: dict[str, float | str] = {}
     spread: dict[str, list[float]] = {}
-    out = {"queries": queries, "spread": spread, "runs": n_runs,
-           "sf_dir": sf_dir}
+    compiles: dict[str, list[int]] = {}
+    out = {"queries": queries, "spread": spread,
+           "codegen_compiles": compiles, "runs": n_runs, "sf_dir": sf_dir}
     if load_info:
         out["load"] = load_info
     for name, spec in all_specs.items():
         times: list[float] = []
+        compiles[name] = []
         err = None
         for _ in range(n_runs):
-            t0 = time.perf_counter()
             try:
+                c0 = codegen_compiles(spark)
+                t0 = time.perf_counter()
                 with contextlib.redirect_stdout(io.StringIO()):
                     spec.fn(spark, sf_dir).collect()
                 times.append(round(time.perf_counter() - t0, 3))
+                compiles[name].append(codegen_compiles(spark) - c0)
             except Exception as exc:  # keep hunting past one bad query
                 err = f"ERR {type(exc).__name__}: {exc}"[:200]
                 _isolate()
@@ -211,6 +219,9 @@ def main() -> int:
         print(f"{v:9.2f}  {k}")
     print(f"\n{len(timed)} ok, {len(errs)} errors, "
           f"total {sum(v for v, _ in timed):.1f}s -> {out_path}")
+    per_run = [sum(c[i] for c in compiles.values() if len(c) > i)
+               for i in range(n_runs)]
+    print(f"codegen compiles per run: {per_run}")
     for k, v in errs.items():
         print(f"ERR  {k}: {v}")
     spark.stop()

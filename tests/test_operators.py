@@ -423,8 +423,8 @@ def test_jaccard_threshold_pairs_routes_agree(spark, monkeypatch):
     ~all-pairs on the small-vocabulary fixture) must produce
     bit-identical (d1, d2, inter, sz1, sz2) rows to the join route
     (capped_jaccard_pairs + the integer threshold), including the
-    df-cap miss characterization and duplicate-text groups, with a
-    BINDING cap."""
+    df-cap miss characterization, duplicate-text groups and token
+    arrays carrying repeated tokens, with a BINDING cap."""
     import random
 
     from datastore_mapper_spark.operators import dedup as dd
@@ -437,8 +437,10 @@ def test_jaccard_threshold_pairs_routes_agree(spark, monkeypatch):
         docs.append((i, toks))
     docs += [(100 + i, docs[3][1]) for i in range(4)]   # exact-dup group
     docs += [(200 + i, docs[7][1]) for i in range(2)]   # second group
+    docs += [(300, docs[5][1] * 2), (301, docs[5][1] + docs[5][1][:1]),
+             (302, docs[9][1] + docs[9][1][-1:])]       # repeated tokens
     df = spark.createDataFrame(docs, "doc_id long, toks array<string>")
-    cap = 30  # binds: several tokens exceed df 30 over 66 docs
+    cap = 30  # binds: several tokens exceed df 30 over 69 docs
 
     monkeypatch.setattr(dd, "JACCARD_KERNEL_MIN_JOIN_ROWS", 0)
     kernel = {tuple(r) for r in dd.jaccard_threshold_pairs(
@@ -2026,6 +2028,35 @@ def test_gif_lzw_empty_stream_roundtrip():
 
     body = _lzw_encode_gif(np.array([], dtype=np.uint8), 2)
     assert _lzw_decode_gif(body, 2, 0).size == 0
+
+
+def test_huff_lut_cache_evicts_one_entry(monkeypatch):
+    """The parsed-Huffman-table cache is bounded by evicting ONE entry
+    at the cap: after 257 distinct tables the 256 most recent are
+    still cached (same object back), only the oldest was rebuilt.
+    Clearing the whole cache at the cap would miss on all of them."""
+    from collections import OrderedDict
+
+    from datastore_mapper_spark.operators import multimodal as mm
+
+    monkeypatch.setattr(mm, "_HUFF_LUT_CACHE", OrderedDict())
+    cap = mm._HUFF_LUT_CACHE_MAX
+    bits = [0] * 17
+    bits[8] = 2  # two 8-bit codes
+
+    def table(i):
+        return bits, [i % 256, i // 256]
+
+    luts = [mm._huff_lut(*table(i)) for i in range(cap + 1)]
+    assert len(mm._HUFF_LUT_CACHE) == cap
+    assert all(mm._huff_lut(*table(i)) is luts[i]
+               for i in range(1, cap + 1))
+    # a hit refreshes recency: re-hit table 1 survives the next
+    # overflow, table 2 (now least recently used) is evicted
+    mm._huff_lut(*table(1))
+    mm._huff_lut(*table(cap + 1))
+    assert mm._huff_lut(*table(1)) is luts[1]
+    assert mm._huff_lut(*table(2)) is not luts[2]
 
 
 def test_jpeg_color_codec_round_trips():
