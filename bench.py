@@ -107,7 +107,8 @@ def _gate_on_load(warnings: list[str]) -> dict:
     BEFORE the SparkSession exists, so our own JVM's bursts are not in
     the average yet.  The observed loads are recorded in the JSON
     (``load``) so the artifact self-documents whether its numbers were
-    taken on a quiet machine."""
+    taken on a quiet machine.  ``scripts/time_registry.py`` gates its
+    sweep with this same function."""
     gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "1.0"))
     gate5 = float(os.environ.get("SPARK_GRAFT_LOAD5_GATE", "1.5"))
     max_wait = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "300"))
@@ -135,53 +136,20 @@ def _gate_on_load(warnings: list[str]) -> dict:
     return info
 
 
-def _executor_millis_by_group(spark) -> dict[str, float]:
-    """Per-job-group executor time (ms) from the status REST API
-    (round-16 VERDICT task 1: wall-clock medians on this box swing
-    1.3-4x with ambient load on IDENTICAL plans; summed executor task
-    time is load-attributable — contention inflates it far less and a
-    plan regression moves it proportionally).  Returns
-    {job_group: sum of executorRunTime over the group's stages}.
-    Empty dict when the UI/REST API is unavailable — the field is an
-    ADDITION to the JSON contract, never load-bearing."""
-    try:
-        from urllib.request import urlopen
+def _executor_ms(spark, group: str) -> float:
+    """Summed executor run time (ms) of the jobs submitted under job
+    ``group`` (round-16 VERDICT task 1: wall-clock medians on this box
+    swing 1.3-4x with ambient load on IDENTICAL plans; summed executor
+    task time is load-attributable — contention inflates it far less
+    and a plan regression moves it proportionally).  Read from the
+    in-process status store, so it needs no UI; each stage attempt
+    that ran counts once and SKIPPED attempts not at all.  The
+    listener bus is drained first: the store is fed asynchronously,
+    and the group's last stage may still be in flight."""
+    from perfbench.records import StatusStore
 
-        ui = spark.sparkContext.uiWebUrl
-        if not ui:
-            return {}
-
-        def _get(path: str):
-            with urlopen(f"{ui}/api/v1/{path}", timeout=10) as r:
-                return json.load(r)
-
-        app_id = _get("applications")[0]["id"]
-        stage_ms: dict[int, float] = {}
-        for st in _get(f"applications/{app_id}/stages"):
-            sid = st["stageId"]
-            stage_ms[sid] = stage_ms.get(sid, 0.0) + st.get(
-                "executorRunTime", 0.0
-            )
-        by_group: dict[str, float] = {}
-        seen_stages: dict[str, set] = {}
-        for job in _get(f"applications/{app_id}/jobs"):
-            grp = job.get("jobGroup")
-            if not grp:
-                continue
-            seen = seen_stages.setdefault(grp, set())
-            for sid in job.get("stageIds", []):
-                # a stage shared (skipped) across the group's jobs is
-                # counted once; executorRunTime lives on the one
-                # attempt that actually ran
-                if sid in seen:
-                    continue
-                seen.add(sid)
-                by_group[grp] = by_group.get(grp, 0.0) + stage_ms.get(
-                    sid, 0.0
-                )
-        return by_group
-    except Exception:
-        return {}
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return StatusStore(spark).group(group)["run_ms"]
 
 
 def main() -> None:
@@ -193,10 +161,6 @@ def main() -> None:
     load_info = _gate_on_load(env_warnings)
     for w in env_warnings:
         print(f"ENV WARNING: {w}", file=sys.stderr)
-
-    # the duration_ms field needs the status REST API; opt in BEFORE
-    # the session is built (additions-only: everything else unchanged)
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
     from datastore_mapper_spark.catalog import load_tables
     from datastore_mapper_spark.registry import all_queries
@@ -215,7 +179,7 @@ def main() -> None:
     per_query: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     per_jobs: dict[str, int] = {}
-    timed_execs: dict[str, int] = {}
+    duration_ms: dict[str, float] = {}
     retried: list[str] = []
     total = 0.0
     for name in HEADLINE:
@@ -242,8 +206,8 @@ def main() -> None:
         )
         def _time_runs():
             # timed runs ride a per-query job group so summed executor
-            # time (duration_ms) can be attributed afterwards; the
-            # group tag is thread-local bookkeeping, not measurement
+            # time (duration_ms) can be attributed to them; the group
+            # tag is thread-local bookkeeping, not measurement
             ts = []
             sc.setJobGroup(f"bench_timed_{name}", "timed run")
             try:
@@ -253,10 +217,10 @@ def main() -> None:
                     ts.append(round(time.perf_counter() - t0, 4))
             finally:
                 sc.setJobGroup(None, None)
-            timed_execs[name] = timed_execs.get(name, 0) + n_runs
             return ts
 
         times = _time_runs()
+        n_timed = len(times)
         med = round(statistics.median(times), 4)
         # Breach-triggered retry (round-11 VERDICT task 2): when the
         # median lands above the drift band, re-time ONCE and keep the
@@ -267,12 +231,17 @@ def main() -> None:
         if thr is not None and med > thr:
             time.sleep(2)
             times2 = _time_runs()
+            n_timed += len(times2)
             med2 = round(statistics.median(times2), 4)
             retried.append(name)
             if med2 < med:
                 med, times = med2, times2
         per_query[name] = med
         spread[name] = [min(times), max(times)]
+        # executor time (ms) of ONE steady-state execution — the
+        # load-attributable companion to the wall-clock median
+        duration_ms[name] = round(
+            _executor_ms(spark, f"bench_timed_{name}") / n_timed, 1)
         total += med
 
     out = {
@@ -287,18 +256,8 @@ def main() -> None:
         # local[N]'s N: timings from another core count are context,
         # not a baseline
         "cpus": spark.sparkContext.defaultParallelism,
+        "duration_ms": duration_ms,
     }
-    # per-query executor time (ms) of ONE steady-state execution —
-    # the load-attributable companion to the wall-clock medians
-    # (round-16 VERDICT task 1; additions-only contract change)
-    group_ms = _executor_millis_by_group(spark)
-    duration_ms = {}
-    for name, n_execs in timed_execs.items():
-        ms = group_ms.get(f"bench_timed_{name}")
-        if ms is not None and n_execs > 0:
-            duration_ms[name] = round(ms / n_execs, 1)
-    if duration_ms:
-        out["duration_ms"] = duration_ms
     if load_info:
         try:
             load_info["load1_at_end"] = round(os.getloadavg()[0], 2)
@@ -309,7 +268,8 @@ def main() -> None:
         out["retried"] = retried
     if env_warnings:
         out["env_warnings"] = env_warnings
-    drift = _drift_vs_previous_round(per_query) + _job_count_drift(per_jobs)
+    drift = (_drift_vs_previous_round(per_query, prev_bench)
+             + _job_count_drift(per_jobs, prev_bench))
     if drift:
         out["drift_warnings"] = drift
         for w in drift:
@@ -318,19 +278,25 @@ def main() -> None:
     spark.stop()
 
 
-def _load_prev_bench() -> dict:
-    """Latest committed BENCH_r{N}.json (the driver wraps this
-    script's JSON line under "parsed"), with its filename under
-    ``::tag``.  Empty dict when none exists/parses.
+def _load_prev_bench(prefix: str = "BENCH", exclude: str = "") -> dict:
+    """Latest committed ``{prefix}_r{N}.json`` — BENCH for this script
+    (the driver wraps its JSON line under "parsed"), SWEEP for
+    ``scripts/time_registry.py`` — with its filename under ``::tag``.
+    Empty dict when none exists/parses.
 
     "Latest" is the highest round NUMBER (r100 after r99, which a
-    sorted glob gets wrong), and only plain ``BENCH_r{N}.json`` files
-    count: a ``BENCH_r{N}_c{C}.json`` control run on another core
-    count sorts after its round's own file but is not its baseline."""
+    sorted glob gets wrong), and only plain ``{prefix}_r{N}.json``
+    files count: a suffixed ``BENCH_r{N}_c{C}.json`` control run on
+    another core count or a ``SWEEP_r{N}_post.json`` re-run sorts
+    after its round's own file but is not its baseline.  ``exclude``
+    is the caller's own output path: a sweep writing SWEEP_rN.json
+    into the repo must not compare the run against itself (how the
+    round-10 stream_stream_join 8.8 s -> 18.9 s drift went unflagged)."""
     rounds = {}
     for name in os.listdir(HERE):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", name)
-        if m:
+        m = re.fullmatch(rf"{prefix}_r(\d+)\.json", name)
+        path = os.path.join(HERE, name)
+        if m and not (exclude and os.path.abspath(exclude) == path):
             rounds[int(m.group(1))] = name
     if not rounds:
         return {}
@@ -359,7 +325,8 @@ def _drift_threshold(prev: dict, name: str) -> float | None:
     return prev_med + band
 
 
-def _drift_vs_previous_round(per_query: dict[str, float]) -> list[str]:
+def _drift_vs_previous_round(per_query: dict[str, float],
+                             prev: dict) -> list[str]:
     """Regression tripwire (round-6 VERDICT task 7; band re-tuned per
     round-8 VERDICT task 3): compare this run's medians against the
     LATEST committed BENCH_r{N}.json MEDIAN-to-MEDIAN, with a
@@ -369,8 +336,8 @@ def _drift_vs_previous_round(per_query: dict[str, float]) -> list[str]:
     at 1.01x overshoot — pure noise; a real plan regression moves the
     median well past both the noise floor and the recorded spread.
     Warnings go to stderr AND into the JSON (``drift_warnings``) so
-    the artifact self-documents the creep."""
-    prev = _load_prev_bench()
+    the artifact self-documents the creep.  ``prev`` is
+    :func:`_load_prev_bench`'s record."""
     if not prev:
         return []
     prev_queries = prev.get("queries") or {}
@@ -393,7 +360,7 @@ def _drift_vs_previous_round(per_query: dict[str, float]) -> list[str]:
     return warnings
 
 
-def _job_count_drift(per_jobs: dict[str, int]) -> list[str]:
+def _job_count_drift(per_jobs: dict[str, int], prev: dict) -> list[str]:
     """Job-count tripwire: a steady-state headline query's Spark job
     count is deterministic (AQE replans settle after the warm-up run),
     so ANY meaningful increase over the last committed round is a plan
@@ -401,7 +368,6 @@ def _job_count_drift(per_jobs: dict[str, int]) -> list[str]:
     r9 pagerank case), and they show up rounds before wall-clock does
     at overhead-dominated scale.  Warn on > max(prev + 2, 1.5x prev):
     tolerant of one extra AQE materialization, loud on loops."""
-    prev = _load_prev_bench()
     if not prev:
         return []
     prev_jobs = prev.get("jobs") or {}

@@ -45,6 +45,29 @@ def _corpus_snapshot_tag(sf_dir: str) -> str:
     return hashlib.sha1(raw.encode()).hexdigest()[:12]
 
 
+#: The derived near-dup snapshot families under ``_scratch``, each
+#: named by :func:`_snapshot_dirname` and reaped by :func:`clean_scratch`.
+_SNAPSHOT_FAMILIES = ("edges", "doccensus", "cclabels", "tricredits",
+                      "kcore2twin")
+
+
+def _snapshot_dirname(family: str, sf_dir: str, *parts: str) -> str:
+    """``near_dup_<family>_<corpus>_df<cap>[_<part>...]_<tag>``.
+
+    The (family, corpus, cap, parts) prefix is readable so
+    :func:`clean_scratch`, which groups generations by everything
+    before the trailing content tag, reaps EXACTLY the snapshots a
+    build supersedes: a twin built for another corpus, or a
+    same-corpus snapshot under a DIFFERENT cap (e.g. a test
+    monkeypatching the cap to 0), must never delete, or be deleted by,
+    the table a live session may be reading (caught as a real
+    mid-suite FILE_NOT_EXIST race, round 8)."""
+    assert family in _SNAPSHOT_FAMILIES, family
+    sf_name = os.path.basename(os.path.abspath(sf_dir))
+    return "_".join(("near_dup", family, sf_name, f"df{NEAR_DUP_DF_CAP}",
+                     *parts, _corpus_snapshot_tag(sf_dir)))
+
+
 def _read_or_build_snapshot(spark, dirname: str, build) -> DataFrame:
     """Read the content-addressed snapshot ``_scratch/<dirname>``,
     building it atomically on a miss.
@@ -142,9 +165,7 @@ def clean_scratch(grace_seconds: int = _SCRATCH_GRACE_SECONDS) -> list[str]:
             shutil.rmtree(full, ignore_errors=True)
             removed.append(d)
             continue
-        if d.startswith(("near_dup_edges_", "near_dup_tricredits_",
-                         "near_dup_doccensus_", "near_dup_cclabels_",
-                         "near_dup_kcore2twin_")):
+        if d.startswith(tuple(f"near_dup_{f}_" for f in _SNAPSHOT_FAMILIES)):
             # group by everything before the trailing content tag; the
             # tag is the last _-separated component
             prefix = d.rsplit("_", 1)[0]
@@ -199,21 +220,12 @@ def near_dup_edges_scored(spark, sf_dir) -> DataFrame:
     writes; every later call — any session, any consumer — is a
     parquet scan.  The jaccard doubles round-trip parquet bit-exactly,
     so the oracle comparison is unchanged."""
-    tag = _corpus_snapshot_tag(sf_dir)
-    sf_name = os.path.basename(os.path.abspath(sf_dir))
-    # the (corpus, cap) pair is readable in the dirname so cleanup can
-    # be scoped to EXACTLY the snapshots this build supersedes — a
-    # same-corpus snapshot under a DIFFERENT cap (e.g. a test
-    # monkeypatching the cap to 0) must never delete, or be deleted
-    # by, the production-cap table a live session may be reading
-    # (caught as a real mid-suite FILE_NOT_EXIST race, round 8)
-    prefix = f"near_dup_edges_{sf_name}_df{NEAR_DUP_DF_CAP}_"
-    dirname = f"{prefix}{tag}"
-    if tag not in _near_dup_edge_cache:
-        _near_dup_edge_cache[tag] = _read_or_build_snapshot(
+    dirname = _snapshot_dirname("edges", sf_dir)
+    if dirname not in _near_dup_edge_cache:
+        _near_dup_edge_cache[dirname] = _read_or_build_snapshot(
             spark, dirname, lambda: _build_near_dup_pairs(spark, sf_dir)
         )
-    return _near_dup_edge_cache[tag]
+    return _near_dup_edge_cache[dirname]
 
 
 def near_dup_doc_census(spark, sf_dir) -> DataFrame:
@@ -229,10 +241,7 @@ def near_dup_doc_census(spark, sf_dir) -> DataFrame:
     minhash row's sweep cost when it was promoted to oracle-checked in
     round 11 (r11 VERDICT task 3).  Now the verify pass is a parquet
     scan; only the sketch itself — the graded object — recomputes."""
-    tag = _corpus_snapshot_tag(sf_dir)
-    sf_name = os.path.basename(os.path.abspath(sf_dir))
-    prefix = f"near_dup_doccensus_{sf_name}_df{NEAR_DUP_DF_CAP}_"
-    dirname = f"{prefix}{tag}"
+    dirname = _snapshot_dirname("doccensus", sf_dir)
     if dirname not in _near_dup_edge_cache:
         _near_dup_edge_cache[dirname] = _read_or_build_snapshot(
             spark, dirname, lambda: _build_doc_census(spark, sf_dir)
@@ -266,10 +275,7 @@ def near_dup_cluster_labels(spark, sf_dir) -> DataFrame:
     / ``dedup_cluster_assign_star`` still run the ALGORITHMS live
     against the recursive-CTE oracle, and every consumer's own oracle
     replays the clustering from raw text."""
-    tag = _corpus_snapshot_tag(sf_dir)
-    sf_name = os.path.basename(os.path.abspath(sf_dir))
-    prefix = f"near_dup_cclabels_{sf_name}_df{NEAR_DUP_DF_CAP}_"
-    dirname = f"{prefix}{tag}"
+    dirname = _snapshot_dirname("cclabels", sf_dir)
     if dirname not in _near_dup_edge_cache:
         _near_dup_edge_cache[dirname] = _read_or_build_snapshot(
             spark, dirname,
@@ -299,10 +305,7 @@ def near_dup_triangle_credits(spark, sf_dir) -> DataFrame:
     then scans + tiny aggregates.  Content-addressed exactly like
     ``near_dup_edges_scored``; the oracles still verify the final
     values end-to-end, so a wrong artifact cannot hide."""
-    tag = _corpus_snapshot_tag(sf_dir)
-    sf_name = os.path.basename(os.path.abspath(sf_dir))
-    prefix = f"near_dup_tricredits_{sf_name}_df{NEAR_DUP_DF_CAP}_"
-    dirname = f"{prefix}lim{TRI_CREDIT_LIM}_{tag}"
+    dirname = _snapshot_dirname("tricredits", sf_dir, f"lim{TRI_CREDIT_LIM}")
     if dirname not in _near_dup_edge_cache:
         _near_dup_edge_cache[dirname] = _read_or_build_snapshot(
             spark, dirname, lambda: _build_triangle_credits(spark, sf_dir)
@@ -1329,15 +1332,16 @@ def graph_kcore_membership(spark, sf_dir):
     task 3, the census/labels pattern): the single-task numpy peel is
     a pure function of the immutable edge snapshot, so its
     (node, degree) set is built once per corpus tag and replayed from
-    ``_scratch/near_dup_kcore2twin_<tag>`` after that — the verify
-    cost stops re-paying the O(graph) single-task pass per run while
-    the DISTRIBUTED peel under test still executes every time."""
+    ``_scratch/near_dup_kcore2twin_<corpus>_df<cap>_<tag>`` after that
+    — the verify cost stops re-paying the O(graph) single-task pass per
+    run while the DISTRIBUTED peel under test still executes every
+    time."""
     from ..operators.graph import kcore, kcore_single_task
 
     edges = near_dup_edges(spark, sf_dir)
     core = kcore(edges, k=2).localCheckpoint()
     twin_df = _read_or_build_snapshot(
-        spark, f"near_dup_kcore2twin_{_corpus_snapshot_tag(sf_dir)}",
+        spark, _snapshot_dirname("kcore2twin", sf_dir),
         lambda: kcore_single_task(edges, k=2))
     twin = {(r.node, r.degree) for r in twin_df.collect()}
     got = {(r.node, r.degree) for r in core.collect()}

@@ -137,11 +137,10 @@ def get_session(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        # UI off by default (pytest/harness churn); bench.py opts in via
-        # $SPARK_GRAFT_UI=true to read per-query executor time from the
-        # status REST API (round-16 VERDICT task 1).  The AppStatusStore
-        # listener runs either way, so enabling the UI only binds a port.
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: the in-process status store (sc.statusStore()) keeps
+        # every job's and stage's metrics without it, and that is where
+        # bench.py reads per-query executor time; the UI only binds a port
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_MAX_ENTRIES))

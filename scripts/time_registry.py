@@ -12,10 +12,11 @@ the triangle wedge-join OOM on the clique-heavy near-dup graph.
 Round-8 (round-7 VERDICT task 7): each query now runs
 ``$SPARK_GRAFT_SWEEP_RUNS`` times (default 2) recording the median
 plus min/max spread, and the sweep carries its own drift tripwire
-against the last committed ``SWEEP_r*.json`` — so contract rows that
+against the last committed ``SWEEP_r{N}.json`` — so contract rows that
 never enter the 13-query headline bench (pivot/unpivot, higher-order
 lambdas, map-type, bitwise aggs, stratified exact-k, ...) still get a
-timing history and a first-drift alarm.
+timing history and a first-drift alarm.  The load gate and the
+baseline pick are bench.py's (``_gate_on_load``, ``_load_prev_bench``).
 
 Output JSON: {"queries": {name: median_sec | "ERR ..."},
 "spread": {name: [min, max]}, "codegen_compiles": {name: [per run]},
@@ -26,15 +27,16 @@ compiled during each run (``session.codegen_compiles``): a query whose
 later runs still compile either put per-call values into generated code
 or no longer fits the codegen cache beside the queries before it.
 
-Usage: python scripts/time_registry.py [sf_dir] [out.json]
-Continues past per-query errors (reported as "ERR ...") and writes the
-partial results file after every query, so a crashed JVM loses nothing.
+Usage: python scripts/time_registry.py [sf_dir] [out.json] [query ...]
+Trailing query names time only those queries (before/after receipts
+without the full sweep), with the same output.  Continues past
+per-query errors (reported as "ERR ...") and writes the partial results
+file after every query, so a crashed JVM loses nothing.
 """
 
 from __future__ import annotations
 
 import contextlib
-import glob
 import io
 import json
 import os
@@ -45,68 +47,18 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _prior_sweep(exclude: str = "") -> tuple[str, dict[str, float]]:
-    """Latest committed SWEEP_r*.json as {name: seconds} (both the flat
-    legacy shape and the structured round-8+ shape), plus its max
-    spread where recorded.
-
-    ``exclude`` is this run's own output path: when the driver writes
-    SWEEP_rN.json directly into the repo, the glob would otherwise pick
-    up the partial file the loop just wrote and the tripwire would
-    compare the run AGAINST ITSELF — which is exactly how the round-10
-    stream_stream_join 8.8 s → 18.9 s drift sailed through without a
-    warning (round-10 VERDICT weak item #1)."""
-    paths = sorted(
-        p
-        for p in glob.glob(os.path.join(REPO, "SWEEP_r*.json"))
-        if not (exclude and os.path.abspath(p) == os.path.abspath(exclude))
-    )
-    if not paths:
-        return "", {}
-    try:
-        with open(paths[-1]) as f:
-            prev = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return "", {}
-    queries = prev.get("queries", prev)
-    spread = prev.get("spread", {})
-    hi: dict[str, float] = {}
-    for name, v in queries.items():
-        if isinstance(v, str):
-            continue
-        s = spread.get(name)
-        hi[name] = max(s) if s else float(v)
-    return os.path.basename(paths[-1]), hi
-
-
-def _gate_on_load() -> dict:
-    """Same load gate as bench.py (round-11 VERDICT task 2): ambient
-    load inflates medians 15-40% on this machine, so wait (up to
-    ``$SPARK_GRAFT_LOAD_WAIT``, default 300 s) for the 1-min average
-    to fall under ``$SPARK_GRAFT_LOAD_GATE`` (default 1.0) before the
-    JVM starts, and record what was observed."""
-    gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "1.0"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "300"))
-    t0 = time.perf_counter()
-    waited = 0.0
-    try:
-        while os.getloadavg()[0] > gate and waited < max_wait:
-            time.sleep(5)
-            waited = time.perf_counter() - t0
-        l1, l5, l15 = os.getloadavg()
-    except OSError:
-        return {}
-    return {"load1_at_start": round(l1, 2), "load5_at_start": round(l5, 2),
-            "load15_at_start": round(l15, 2), "gate": gate,
-            "waited_sec": round(waited, 1)}
+from bench import _gate_on_load, _load_prev_bench  # noqa: E402
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/time_registry.json"
+    only = sys.argv[3:]
     n_runs = int(os.environ.get("SPARK_GRAFT_SWEEP_RUNS", "2"))
-    load_info = _gate_on_load()
+    env_warnings: list[str] = []
+    load_info = _gate_on_load(env_warnings)
+    for w in env_warnings:
+        print(f"ENV WARNING: {w}", file=sys.stderr)
 
     from datastore_mapper_spark.catalog import load_tables
     from datastore_mapper_spark.registry import all_queries
@@ -130,6 +82,7 @@ def main() -> int:
             "multimodal_jpeg_decode_stats", "stream_tumbling_demo",
             "acid_compact_optimize", "udf_pandas_vectorized"]
     all_specs = all_queries()
+    specs = {n: all_specs[n] for n in only} if only else all_specs
     for wname in warm:
         spec = all_specs.get(wname)
         if spec is None:
@@ -166,7 +119,9 @@ def main() -> int:
            "codegen_compiles": compiles, "runs": n_runs, "sf_dir": sf_dir}
     if load_info:
         out["load"] = load_info
-    for name, spec in all_specs.items():
+    if env_warnings:
+        out["env_warnings"] = env_warnings
+    for name, spec in specs.items():
         times: list[float] = []
         compiles[name] = []
         err = None
@@ -192,14 +147,19 @@ def main() -> int:
         with open(out_path, "w") as f:
             json.dump(out, f)
 
-    prev_tag, prev_hi = _prior_sweep(exclude=out_path)
+    # drift rule: median past 1.5x the prior round's max (floor 0.5 s)
+    prev = _load_prev_bench("SWEEP", exclude=out_path)
+    prev_queries = prev.get("queries", prev)  # pre-round-8 files are flat
     warnings = []
     for name, med in queries.items():
-        hi = prev_hi.get(name)
-        if isinstance(med, float) and hi is not None and med > max(hi, 0.5) * 1.5:
+        pv = prev_queries.get(name)
+        if not isinstance(pv, (int, float)) or not isinstance(med, float):
+            continue  # no prior timing, or an ERR on either side
+        hi = max((prev.get("spread") or {}).get(name) or [pv])
+        if med > max(hi, 0.5) * 1.5:
             ratio = f" ({med / hi:.2f}x)" if hi > 0 else ""
             warnings.append(
-                f"{name}: median {med:.3f}s exceeds 1.5x {prev_tag} "
+                f"{name}: median {med:.3f}s exceeds 1.5x {prev['::tag']} "
                 f"max {hi:.3f}s{ratio}"
             )
     if warnings:

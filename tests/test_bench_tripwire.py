@@ -1,13 +1,27 @@
-"""The bench drift tripwire (round-6 VERDICT task 7) must fire when a
-median exceeds the previous round's recorded max spread, stay silent
-inside the spread, and never crash on malformed/missing history."""
+"""bench.py's measurement helpers, shared with scripts/time_registry.py.
+
+The drift tripwire must fire when a median exceeds the previous
+round's median by more than max(15%, that round's own min-max spread),
+stay silent inside the band, and never crash on missing history.  The
+baseline is the highest plain ``{BENCH,SWEEP}_r{N}.json`` round, the
+load gate waits on load1 AND load5, and per-group executor time comes
+from the status store with the UI off."""
 
 from __future__ import annotations
 
+import itertools
 import json
+from types import SimpleNamespace
+
+import pytest
 
 import bench
-from bench import _drift_vs_previous_round, _load_prev_bench
+from bench import (
+    _drift_vs_previous_round,
+    _executor_ms,
+    _gate_on_load,
+    _load_prev_bench,
+)
 
 
 def _latest_bench():
@@ -20,35 +34,43 @@ def test_tripwire_silent_within_prior_spread():
     _, prev = _latest_bench()
     name, med = next(iter(prev["queries"].items()))
     hi = max(prev["spread"][name])
-    assert _drift_vs_previous_round({name: hi}) == []
+    assert _drift_vs_previous_round({name: hi}, prev) == []
 
 
 def test_tripwire_fires_past_prior_spread():
     tag, prev = _latest_bench()
     name = next(iter(prev["queries"]))
     hi = max(prev["spread"][name])
-    warnings = _drift_vs_previous_round({name: hi * 2})
+    warnings = _drift_vs_previous_round({name: hi * 2}, prev)
     assert len(warnings) == 1
     assert name in warnings[0] and tag in warnings[0]
 
 
 def test_tripwire_ignores_unknown_queries():
     # a brand-new headline query has no history — no warning, no crash
-    assert _drift_vs_previous_round({"brand_new_query": 1.0}) == []
+    _, prev = _latest_bench()
+    assert _drift_vs_previous_round({"brand_new_query": 1.0}, prev) == []
 
 
-def test_baseline_is_highest_round_not_control_run(tmp_path, monkeypatch):
-    # sorted-glob order would pick BENCH_r9_c8.json: r9 sorts after
-    # r10 and r12, and the 8-core control run after its round's file
-    for name, value in [("BENCH_r9.json", 9.0), ("BENCH_r9_c8.json", 98.0),
-                        ("BENCH_r10.json", 10.0), ("BENCH_r12.json", 12.0),
-                        ("BENCH_r12_c8.json", 128.0)]:
-        (tmp_path / name).write_text(json.dumps(
+@pytest.mark.parametrize("prefix", ["BENCH", "SWEEP"])
+def test_baseline_is_highest_round_not_control_run(tmp_path, monkeypatch,
+                                                   prefix):
+    # sorted-glob order would pick r9_c8: r9 sorts after r10 and r12,
+    # and a suffixed control/re-run file after its round's own file
+    for name, value in [("r9", 9.0), ("r9_c8", 98.0), ("r10", 10.0),
+                        ("r12", 12.0), ("r12_c8", 128.0),
+                        ("r12_post", 129.0)]:
+        (tmp_path / f"{prefix}_{name}.json").write_text(json.dumps(
             {"parsed": {"value": value, "queries": {}}}))
-    (tmp_path / "BENCH_notes.json").write_text("{}")
+    (tmp_path / f"{prefix}_notes.json").write_text("{}")
+    (tmp_path / "OTHER_r99.json").write_text("{}")
     monkeypatch.setattr(bench, "HERE", str(tmp_path))
-    prev = _load_prev_bench()
-    assert prev["::tag"] == "BENCH_r12.json" and prev["value"] == 12.0
+    prev = _load_prev_bench(prefix)
+    assert prev["::tag"] == f"{prefix}_r12.json" and prev["value"] == 12.0
+    # a sweep writing its own round into the repo skips that file
+    own = str(tmp_path / f"{prefix}_r12.json")
+    prev = _load_prev_bench(prefix, exclude=own)
+    assert prev["::tag"] == f"{prefix}_r10.json" and prev["value"] == 10.0
 
 
 def test_baseline_absent_or_unreadable(tmp_path, monkeypatch):
@@ -56,3 +78,57 @@ def test_baseline_absent_or_unreadable(tmp_path, monkeypatch):
     assert _load_prev_bench() == {}
     (tmp_path / "BENCH_r3.json").write_text("{not json")
     assert _load_prev_bench() == {}
+
+
+def _fake_clock(monkeypatch, loads):
+    """Drive the gate with scripted load averages: each poll takes the
+    next (load1, load5, load15), the last one repeating, and each
+    5 s sleep advances the clock by 5 s."""
+    now = [0.0]
+    polls = itertools.chain(loads, itertools.repeat(loads[-1]))
+
+    def sleep(s):
+        now[0] += s
+
+    for var in ("SPARK_GRAFT_LOAD_GATE", "SPARK_GRAFT_LOAD5_GATE",
+                "SPARK_GRAFT_LOAD_WAIT"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: next(polls))
+    monkeypatch.setattr(bench, "time", SimpleNamespace(
+        sleep=sleep, perf_counter=lambda: now[0]))
+
+
+def test_load_gate_waits_on_load5(monkeypatch):
+    # load1 is under its gate from the start, but load5 is not: the r16
+    # driver run passed a load1-only gate like this and was contended
+    # throughout
+    _fake_clock(monkeypatch, [(0.5, 2.2, 1.0), (0.5, 2.0, 1.0),
+                              (0.4, 1.4, 1.0)])
+    warnings: list[str] = []
+    info = _gate_on_load(warnings)
+    assert info["waited_sec"] == 10.0
+    assert info["load5_at_start"] == 1.4
+    assert warnings == []
+
+
+def test_load_gate_warns_when_wait_times_out(monkeypatch):
+    _fake_clock(monkeypatch, [(0.5, 2.2, 1.0)])
+    warnings: list[str] = []
+    info = _gate_on_load(warnings)
+    assert info["waited_sec"] == 300.0
+    assert len(warnings) == 1 and "load5=2.20" in warnings[0]
+
+
+def test_executor_ms_without_ui(spark, sf_dir):
+    # executor time must be readable with the UI off, as on the shared
+    # session and every session get_session builds
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    from datastore_mapper_spark.registry import all_queries
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bench_test_executor_ms", "executor-time probe")
+    try:
+        all_queries()["topk_global"].fn(spark, sf_dir).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert _executor_ms(spark, "bench_test_executor_ms") > 0

@@ -1562,7 +1562,11 @@ def test_clean_scratch_reaps_only_dead_patterns(tmp_path, monkeypatch):
 
     monkeypatch.setattr(llm_text, "_SCRATCH", str(tmp_path))
     old = time.time() - 7200
-    keep = ["stream_src_abc", "near_dup_edges_sf_df1_tagB"]
+    # two corpora's k-core twins are each their corpus's newest
+    # generation: one must not reap the other
+    twins = [llm_text._snapshot_dirname("kcore2twin", str(tmp_path / c))
+             for c in ("sf0.01", "sf0.1")]
+    keep = ["stream_src_abc", "near_dup_edges_sf_df1_tagB", *twins]
     reap = [
         "ckpt_feb_deadbeef", "stream_partials_cafe",
         "near_dup_edges_sf_df1_tagA",  # superseded generation
@@ -1575,6 +1579,7 @@ def test_clean_scratch_reaps_only_dead_patterns(tmp_path, monkeypatch):
         os.utime(tmp_path / d, (old, old))
     # tagB must stay the NEWEST generation of its prefix
     os.utime(tmp_path / "near_dup_edges_sf_df1_tagB", (old + 60, old + 60))
+    os.utime(tmp_path / twins[1], (old + 60, old + 60))
 
     removed = set(llm_text.clean_scratch(grace_seconds=3600))
     assert removed == set(reap)
