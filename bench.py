@@ -175,7 +175,8 @@ def main() -> None:
     specs["agg_group_pricing_summary"].fn(spark, sf_dir).collect()
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    prev_bench = _load_prev_bench()
+    cpus = spark.sparkContext.defaultParallelism
+    prev_bench = _load_prev_bench(cpus=cpus, sf=sf)
     per_query: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     per_jobs: dict[str, int] = {}
@@ -255,7 +256,8 @@ def main() -> None:
         "sf": sf,
         # local[N]'s N: timings from another core count are context,
         # not a baseline
-        "cpus": spark.sparkContext.defaultParallelism,
+        "cpus": cpus,
+        "baseline": prev_bench.get("::tag", "none comparable"),
         "duration_ms": duration_ms,
     }
     if load_info:
@@ -278,11 +280,12 @@ def main() -> None:
     spark.stop()
 
 
-def _load_prev_bench(prefix: str = "BENCH", exclude: str = "") -> dict:
-    """Latest committed ``{prefix}_r{N}.json`` — BENCH for this script
-    (the driver wraps its JSON line under "parsed"), SWEEP for
-    ``scripts/time_registry.py`` — with its filename under ``::tag``.
-    Empty dict when none exists/parses.
+def _load_prev_bench(prefix: str = "BENCH", exclude: str = "",
+                     **match) -> dict:
+    """Latest comparable committed ``{prefix}_r{N}.json`` — BENCH for
+    this script (the driver wraps its JSON line under "parsed"), SWEEP
+    for ``scripts/time_registry.py`` — with its filename under
+    ``::tag``.  Empty dict when none exists/parses/matches.
 
     "Latest" is the highest round NUMBER (r100 after r99, which a
     sorted glob gets wrong), and only plain ``{prefix}_r{N}.json``
@@ -291,24 +294,31 @@ def _load_prev_bench(prefix: str = "BENCH", exclude: str = "") -> dict:
     after its round's own file but is not its baseline.  ``exclude``
     is the caller's own output path: a sweep writing SWEEP_rN.json
     into the repo must not compare the run against itself (how the
-    round-10 stream_stream_join 8.8 s -> 18.9 s drift went unflagged)."""
+    round-10 stream_stream_join 8.8 s -> 18.9 s drift went unflagged).
+    ``match`` (e.g. ``cpus=4, sf=0.1``) keeps only rounds whose wrapper
+    or parsed record carries those values: a 32-core or other-scale
+    round is context, not a baseline, and comparing against it turns
+    every query into a drift warning and a retry."""
     rounds = {}
     for name in os.listdir(HERE):
         m = re.fullmatch(rf"{prefix}_r(\d+)\.json", name)
         path = os.path.join(HERE, name)
         if m and not (exclude and os.path.abspath(exclude) == path):
             rounds[int(m.group(1))] = name
-    if not rounds:
-        return {}
-    tag = rounds[max(rounds)]
-    try:
-        with open(os.path.join(HERE, tag)) as f:
-            prev = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return {}
-    prev = prev.get("parsed", prev)
-    prev["::tag"] = tag
-    return prev
+    for _, tag in sorted(rounds.items(), reverse=True):
+        try:
+            with open(os.path.join(HERE, tag)) as f:
+                raw = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        prev = raw.get("parsed", raw)
+        if not isinstance(prev, dict):
+            continue  # a failed run (rc != 0) parsed no JSON line
+        fields = {**raw, **prev}
+        if all(fields.get(k) == v for k, v in match.items()):
+            prev["::tag"] = tag
+            return prev
+    return {}
 
 
 def _drift_threshold(prev: dict, name: str) -> float | None:

@@ -242,10 +242,6 @@ def register_job(name: str, config: JobConfig, **job_kwargs) -> Job:
     return job
 
 
-def get_job(name: str) -> Job:
-    return _JOBS[name]
-
-
 def start(name: str, spark: SparkSession, sf_dir: str, **run_kwargs) -> JobResult:
     return _JOBS[name].run(spark, sf_dir, **run_kwargs)
 

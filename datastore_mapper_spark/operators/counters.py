@@ -14,7 +14,6 @@ Spark's native equivalents, in preference order:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def observed_counters(
@@ -31,7 +30,3 @@ def observed_counters(
     named = [expr.alias(name) for name, expr in counter_exprs.items()]
     return df.observe(obs, *named), obs
 
-
-def row_counter(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """The reference's most common counter: processed-entity count."""
-    return observed_counters(df, rows=F.count(F.lit(1)))

@@ -21,7 +21,7 @@ All hashing is Spark's JVM-side xxhash64 — no Python in the hot path.
 
 from __future__ import annotations
 
-from ._alloc import keep_large_allocs_on_heap
+from .route import fits, single_task
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -362,24 +362,6 @@ def simhash_near_docs(
     return in_cross.union(in_within).distinct()
 
 
-#: Edge lists at or under this row count route to the one-task
-#: union-find kernel; bigger graphs take the distributed loops.  Same
-#: task-envelope cost routing as ``similarity.KMEANS_SINGLE_TASK_MAX_BYTES``
-#: and ``graph.SINGLE_TASK_MAX_EDGES``: iterating a distributed dataflow
-#: over a graph that fits one task is pure scheduler overhead — each
-#: min-label round costs ~2 s of jobs for milliseconds of union-find
-#: (tests monkeypatch this to 0 to pin the routes against each other).
-CC_SINGLE_TASK_MAX_EDGES = 20_000_000
-
-#: Above this edge count the kernel route first collapses the graph
-#: with ONE distributed large-star contraction (all heavy lifting in
-#: JVM aggregates/joins) so the one-task kernel sees the quotient
-#: graph, not the raw edge list.  Near-dup graphs are clique-heavy —
-#: the sf0.1 fixture has 3M edges over 3.9k nodes — and a clique
-#: contracts to a single node in one round, so the quotient is tiny.
-CC_CONTRACT_MIN_EDGES = 100_000
-
-
 def _cc_kernel_route(e: DataFrame, n_edges: int) -> DataFrame:
     """Small-graph route shared by both component loops: optional
     one-round star contraction (dense graphs), then the one-task
@@ -393,7 +375,7 @@ def _cc_kernel_route(e: DataFrame, n_edges: int) -> DataFrame:
     m(g) = g, so quotient labels are already min-member ids.  Nodes
     whose whole component collapsed (a pure clique) vanish from the
     quotient and keep cluster_id = m(u)."""
-    if n_edges <= CC_CONTRACT_MIN_EDGES:
+    if fits("cc_uncontracted_edges", n_edges):
         return _cc_single_task(e, "u", "v")
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     hooks = sym.groupBy("u").agg(
@@ -431,18 +413,11 @@ def _cc_single_task(edges: DataFrame, u: str, v: str) -> DataFrame:
     symmetrized or deduplicated — unions are idempotent."""
     out_type = edges.schema[u].dataType.simpleString()
 
-    def kernel(batches):
-        keep_large_allocs_on_heap()
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for b in batches:
-            us.append(b[u].to_numpy())
-            vs.append(b[v].to_numpy())
-        if not us:
-            return
-        uu, vv = np.concatenate(us), np.concatenate(vs)
+        uu, vv = pdf[u].to_numpy(), pdf[v].to_numpy()
         # factorize ids to 0..n-1; np.unique sorts ascending, so code
         # order == id order and the min CODE maps back to the min id
         # (UTF-8 byte order == codepoint order, so string ids compare
@@ -485,10 +460,10 @@ def _cc_single_task(edges: DataFrame, u: str, v: str) -> DataFrame:
             # would have written the smaller one
             if np.array_equal(label, before):
                 break
-        yield pd.DataFrame({"node": nodes, "cluster_id": nodes[label]})
+        return pd.DataFrame({"node": nodes, "cluster_id": nodes[label]})
 
-    return edges.coalesce(1).mapInPandas(
-        kernel, f"node {out_type}, cluster_id {out_type}"
+    return single_task(
+        edges, kernel, f"node {out_type}, cluster_id {out_type}"
     )
 
 
@@ -532,7 +507,7 @@ def connected_components_star(
     # each star round below costs several jobs (two groupBys, a join,
     # two exceptAll probes) for milliseconds of actual work
     n_canon = canon.count()
-    if n_canon <= CC_SINGLE_TASK_MAX_EDGES:
+    if fits("task_edges", n_canon):
         return _cc_kernel_route(
             canon.select(F.col("a").alias("u"), F.col("b").alias("v")),
             n_canon,
@@ -577,8 +552,8 @@ def connected_components_star(
             .localCheckpoint()
         )
         stable = (
-            small.exceptAll(canon).limit(1).count() == 0
-            and canon.exceptAll(small).limit(1).count() == 0
+            small.exceptAll(canon).isEmpty()
+            and canon.exceptAll(small).isEmpty()
         )
         canon = small
         if stable:
@@ -626,7 +601,7 @@ def connected_components(
     # the kernel relaxes both endpoints itself, so it only needs each
     # edge once.
     n_e = e.count()
-    if n_e <= CC_SINGLE_TASK_MAX_EDGES:
+    if fits("task_edges", n_e):
         return _cc_kernel_route(e, n_e)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = (
@@ -645,15 +620,14 @@ def connected_components(
             .agg(F.min("label").alias("label"))
             .localCheckpoint()
         )
-        changed = (
+        stable = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
             .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
+            .isEmpty()
         )
         labels = new_labels
-        if changed == 0:
+        if stable:
             break
     return labels.select("node", F.col("label").alias("cluster_id"))
 
@@ -851,16 +825,6 @@ def capped_jaccard_pairs(doc_toks: DataFrame, df_cap: int) -> DataFrame:
     return cross.unionByName(intra)
 
 
-#: Below this many estimated candidate-join rows (Σ over tokens of the
-#: group-level df squared) the inverted-index join route beats the
-#: blocked kernel's fixed costs (dictionary build, 36 bucket-pair
-#: tasks, Arrow matrices) — at sf0.01 the join route runs ~3 s where
-#: the kernel pays ~7 s of overhead; at sf0.1 the join explodes to
-#: ~470M rows and the kernel wins 84 s -> 14 s.  Tests monkeypatch to
-#: 0 to force the kernel route.
-JACCARD_KERNEL_MIN_JOIN_ROWS = 20_000_000
-
-
 def jaccard_threshold_pairs(
     doc_toks: DataFrame,
     df_cap: int,
@@ -922,7 +886,7 @@ def jaccard_threshold_pairs(
         F.count(F.lit(1)).alias("v")).collect()[0]
     join_rows, v_bits = int(stats.jr or 0), int(stats.v)
     n_docs = doc_toks.count()
-    if (join_rows < JACCARD_KERNEL_MIN_JOIN_ROWS
+    if (fits("jaccard_join_rows", join_rows)
             or not kernel_fits(n_docs, v_bits)):
         # healthy vocabulary (the candidate join stays near-linear) or
         # a corpus outside the kernel envelope: the join route wins

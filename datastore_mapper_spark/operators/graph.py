@@ -11,25 +11,9 @@ threshold read off one tiny aggregate per round.
 
 from __future__ import annotations
 
-from ._alloc import keep_large_allocs_on_heap
+from .route import fits, single_task
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-#: Single-task route envelope: run the whole power iteration inside
-#: ONE executor task when the edge list fits it comfortably (~24 bytes
-#: per edge in Arrow => ~500 MB at the cap).  Same cost-routing idea
-#: as operators/bitset.kernel_fits: iterating a distributed dataflow
-#: over a graph that fits one task pays 2+ scheduler jobs per
-#: iteration for nothing.
-SINGLE_TASK_MAX_EDGES = 20_000_000
-
-#: kcore's per-round keep-set broadcast is gated on its exact row
-#: count (known from the fixpoint check): ~8 bytes/node => ~400 MB of
-#: framed longs at the cap, inside Spark's 8 GB broadcast limit with
-#: headroom for the hash relation.  Above it the peel falls back to a
-#: shuffle semi-join instead of OOMing the driver (r16 ADVICE).
-KCORE_BROADCAST_MAX_NODES = 50_000_000
 
 
 def pagerank(
@@ -39,7 +23,6 @@ def pagerank(
     damping: float = 0.85,
     max_iterations: int = 20,
     tol: float = 1e-6,
-    single_task_max_edges: int | None = None,
     symmetrize: bool = False,
 ) -> DataFrame:
     """(node, rank) PageRank over a directed edge list.
@@ -54,8 +37,8 @@ def pagerank(
     Two execution routes, picked on the edge count (round-9 VERDICT
     task 3 — the sweep cost was control-plane overhead, not dataflow):
 
-    * **single-task** (|E| <= ``single_task_max_edges``): ship the
-      edge list to ONE executor task via ``applyInPandas`` and run the
+    * **single-task** (|E| within ``route.CAPS["task_edges"]``): ship
+      the edge list to ONE executor task via ``mapInPandas`` and run the
       power iteration as numpy ``bincount`` mat-vecs — 15 iterations
       over the sf0.1 fixture's 5.9 M directed edges is ~1 s of vector
       math that the distributed loop spends 30+ scheduler jobs on.
@@ -73,8 +56,6 @@ def pagerank(
       Confs are restored on exit.
     """
     spark = edges.sparkSession
-    cap = (SINGLE_TASK_MAX_EDGES if single_task_max_edges is None
-           else single_task_max_edges)
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # ``symmetrize=True`` treats the input as an UNDIRECTED pair list
     # (each (u, v) also implies (v, u)) — the near-dup graph case.
@@ -85,12 +66,11 @@ def pagerank(
     # through one funneled task (round-12 VERDICT task 6 — this
     # halved doc_pagerank_centrality's kernel wall time).
     n_edges = raw.count() * (2 if symmetrize else 1)
-    if n_edges <= cap:
+    if fits("task_edges", n_edges):
         # no checkpoint on this route: the kernel makes exactly one
         # pass over the (usually snapshot-parquet) edge plan
         return _pagerank_single_task(
-            spark, raw, damping, max_iterations, tol,
-            symmetrize=symmetrize,
+            raw, damping, max_iterations, tol, symmetrize=symmetrize,
         )
     if symmetrize:
         raw = raw.union(raw.select(F.col("dst").alias("src"),
@@ -113,32 +93,21 @@ def pagerank(
 
 
 def _pagerank_single_task(
-    spark, e: DataFrame, damping: float, max_iterations: int, tol: float,
+    e: DataFrame, damping: float, max_iterations: int, tol: float,
     symmetrize: bool = False,
 ) -> DataFrame:
-    """One-task numpy power iteration — the small-graph route.
-
-    ``coalesce(1)`` funnels every edge partition into one task WITHOUT
-    an exchange (narrow dependency — no hash-shuffle of the edge list,
-    unlike groupBy-on-a-constant); ``mapInPandas`` streams the Arrow
-    batches into a single concatenated frame and the damped fixpoint
-    runs as ``bincount`` sparse mat-vecs.  Semantics are identical to
-    the distributed loop: uniform init, per-iteration dangling-mass
+    """One-task numpy power iteration — the small-graph route, funneled
+    through ``route.single_task``: the damped fixpoint runs as
+    ``bincount`` sparse mat-vecs.  Semantics are identical to the
+    distributed loop: uniform init, per-iteration dangling-mass
     redistribution, L1-delta early stop (differential pytest pins the
     two routes together).
     """
 
-    def kernel_iter(batches):
-        keep_large_allocs_on_heap()
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            yield pd.DataFrame({"node": pd.Series(dtype="int64"),
-                                "rank": pd.Series(dtype="float64")})
-            return
-        pdf = pd.concat(parts, ignore_index=True)
         s = pdf["src"].to_numpy()
         d = pdf["dst"].to_numpy()
         # hash-based pd.factorize, not np.unique(return_inverse): the
@@ -177,9 +146,9 @@ def _pagerank_single_task(
             r = new_r
             if delta < tol:
                 break
-        yield pd.DataFrame({"node": nodes, "rank": r})
+        return pd.DataFrame({"node": nodes, "rank": r})
 
-    return e.coalesce(1).mapInPandas(kernel_iter, "node long, rank double")
+    return single_task(e, kernel, "node long, rank double")
 
 
 def _pagerank_loop(
@@ -346,7 +315,7 @@ def kcore(
         # billion-node scale a forced broadcast OOMs the driver where
         # a shuffle semi-join degrades gracefully — above the cap the
         # hint is dropped and the planner falls back to SMJ semi-join.
-        hint = F.broadcast if n_now <= KCORE_BROADCAST_MAX_NODES else (
+        hint = F.broadcast if fits("kcore_broadcast_nodes", n_now) else (
             lambda df: df)
         e = (
             e0.join(hint(keep), "u", "left_semi")
@@ -366,7 +335,6 @@ def label_propagation(
     src: str = "d1",
     dst: str = "d2",
     rounds: int = 4,
-    single_task_max_edges: int | None = None,
 ) -> DataFrame:
     """(node, lab) after ``rounds`` SYNCHRONOUS label-propagation
     rounds (Raghavan et al. 2007) over an undirected pair list:
@@ -383,23 +351,20 @@ def label_propagation(
     aggregate + one window — ~2 s of scheduler jobs at sf0.1 — for
     milliseconds of vectorized argmax when the graph fits one task.
 
-    * **single-task** (2·|E| <= cap): factorize node ids once
-      (``np.unique`` sorts ascending, so code order == id order and
-      the min-CODE tie-break maps back to the min id — the same
-      argument as the CC kernel); each round computes per-(node,
-      neighbor-label) counts via one ``np.unique`` over the packed
-      ``u*n + lab`` key and picks (count desc, lab asc) per node with
-      one ``lexsort``.
+    * **single-task** (2·|E| within ``route.CAPS["task_edges"]``):
+      factorize node ids once (``np.unique`` sorts ascending, so code
+      order == id order and the min-CODE tie-break maps back to the
+      min id — the same argument as the CC kernel); each round
+      computes per-(node, neighbor-label) counts via one ``np.unique``
+      over the packed ``u*n + lab`` key and picks (count desc, lab
+      asc) per node with one ``lexsort``.
     * **distributed**: the join + count + row_number loop, lineage
       cut per round with ``localCheckpoint`` exactly as the CC loop
       documents.  At 100 TB: pre-partition edges and labels on node
       id, reliable ``checkpoint()``.
     """
-    cap = (SINGLE_TASK_MAX_EDGES if single_task_max_edges is None
-           else single_task_max_edges)
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    n_sym = raw.count() * 2
-    if n_sym <= cap:
+    if fits("task_edges", raw.count() * 2):
         return _lpa_single_task(raw, rounds)
     sym = raw.union(
         raw.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -431,18 +396,11 @@ def _lpa_single_task(raw: DataFrame, rounds: int) -> DataFrame:
     (the same halving the pagerank kernel's ``symmetrize`` applies)."""
     out_type = raw.schema["u"].dataType.simpleString()
 
-    def kernel(batches):
-        keep_large_allocs_on_heap()
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for b in batches:
-            us.append(b["u"].to_numpy())
-            vs.append(b["v"].to_numpy())
-        if not us:
-            return
-        uu, vv = np.concatenate(us), np.concatenate(vs)
+        uu, vv = pdf["u"].to_numpy(), pdf["v"].to_numpy()
         nodes, codes = np.unique(np.concatenate([uu, vv]),
                                  return_inverse=True)
         m = len(uu)
@@ -466,11 +424,9 @@ def _lpa_single_task(raw: DataFrame, rounds: int) -> DataFrame:
             new_lab = lab.copy()
             new_lab[tgt_o[first]] = cand_o[first]
             lab = new_lab
-        yield pd.DataFrame({"node": nodes, "lab": nodes[lab]})
+        return pd.DataFrame({"node": nodes, "lab": nodes[lab]})
 
-    return raw.coalesce(1).mapInPandas(
-        kernel, f"node {out_type}, lab {out_type}"
-    )
+    return single_task(raw, kernel, f"node {out_type}, lab {out_type}")
 
 
 def kcore_single_task(
@@ -491,18 +447,10 @@ def kcore_single_task(
     if k < 1:
         raise ValueError(f"kcore: k must be >= 1, got {k}")
 
-    def kernel(batches):
-        keep_large_allocs_on_heap()
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame({"node": pd.Series(dtype="int64"),
-                              "degree": pd.Series(dtype="int64")})
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            yield empty
-            return
-        pdf = pd.concat(parts, ignore_index=True)
         s = pdf["src"].to_numpy()
         d = pdf["dst"].to_numpy()
         idx, nodes = pd.factorize(np.concatenate([s, d]), sort=False)
@@ -526,13 +474,10 @@ def kcore_single_task(
             alive = new_alive
         deg = np.bincount(su[alive], minlength=n)
         members = deg >= k
-        if not members.any():
-            yield empty
-            return
-        yield pd.DataFrame({
+        return pd.DataFrame({
             "node": np.asarray(nodes)[members],
             "degree": deg[members].astype(np.int64),
         })
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    return e.coalesce(1).mapInPandas(kernel, "node long, degree long")
+    return single_task(e, kernel, "node long, degree long")

@@ -1598,17 +1598,6 @@ def encode_jpeg_gray(pixels: np.ndarray) -> bytes:
     out += b"\xFF\xD9"
     return bytes(out)
 
-def _huff_tree(bits, vals):
-    # map (length, code) -> value
-    table, code, k = {}, 0, 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln]):
-            table[(ln, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
 
 class _HuffLut:
     """16-bit-peek Huffman decode table: ``lens[v16]`` / ``vals[v16]``

@@ -23,6 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from ._alloc import keep_large_allocs_on_heap
+from .route import fits, single_task
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -173,60 +174,59 @@ def unit(vec) -> Column:
     )
 
 
-#: Training pools whose float64 matrix fits under this byte cap run the
-#: one-task numpy Lloyd loop; bigger pools take the distributed
-#: join+agg iteration (tests monkeypatch this to 0 to pin the routes
-#: against each other).
-KMEANS_SINGLE_TASK_MAX_BYTES = 512 * 1024 * 1024
+def _lloyd(x: np.ndarray, cents: np.ndarray, max_iterations: int) -> np.ndarray:
+    """Numpy Lloyd loop over the rows of ``x`` from ``cents`` (updated in
+    place and returned).  Semantics mirror the distributed loop of
+    :func:`kmeans_train` exactly: ties go to the smallest centroid_id
+    (numpy argmin = first minimum = ascending-cid order), empty clusters
+    keep their previous centroid, the loop stops when no assignment
+    changes."""
+    if not len(cents):
+        return cents
+    assign = None
+    for _ in range(max_iterations):
+        # pairwise squared L2 via the expanded form
+        d2 = (
+            (x * x).sum(axis=1)[:, None]
+            - 2.0 * (x @ cents.T)
+            + (cents * cents).sum(axis=1)[None, :]
+        )
+        new_assign = d2.argmin(axis=1)
+        if assign is not None and np.array_equal(new_assign, assign):
+            break
+        assign = new_assign
+        for j in range(len(cents)):
+            members = x[assign == j]
+            if len(members):
+                cents[j] = members.mean(axis=0)
+    return cents
 
 
 def _kmeans_single_task(
     vecs: DataFrame,
     init: list[tuple[int, list[float]]],
     max_iterations: int,
-    id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """One-task numpy Lloyd loop — the small-pool route of
-    :func:`kmeans_train`.  ``coalesce(1)`` funnels the pool into a
-    single task with no exchange; semantics mirror the distributed
-    loop exactly: ties go to the smallest centroid_id (numpy argmin =
-    first minimum = ascending-cid order), empty clusters keep their
-    previous centroid, loop stops when no assignment changes."""
+    """One-task :func:`_lloyd` — the small-pool route of
+    :func:`kmeans_train`, funneled through ``route.single_task``."""
 
-    def kernel(batches):
-        keep_large_allocs_on_heap()
-        parts = [b for b in batches if len(b)]
-        out_ids = [cid for cid, _ in init]
-        cents = np.array([v for _, v in init], dtype=np.float64)
-        if parts and len(cents):
-            pdf = pd.concat(parts, ignore_index=True)
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            assign = None
-            for _ in range(max_iterations):
-                # pairwise squared L2 via the expanded form
-                d2 = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ cents.T)
-                    + (cents * cents).sum(axis=1)[None, :]
-                )
-                new_assign = d2.argmin(axis=1)
-                if assign is not None and np.array_equal(new_assign, assign):
-                    break
-                assign = new_assign
-                for j in range(len(cents)):
-                    members = x[assign == j]
-                    if len(members):
-                        cents[j] = members.mean(axis=0)
-        yield pd.DataFrame(
+    def kernel(pdf):
+        cents = _lloyd(
+            np.array(list(pdf[vec_col]), dtype=np.float64),
+            np.array([v for _, v in init], dtype=np.float64),
+            max_iterations,
+        )
+        return pd.DataFrame(
             {
-                "centroid_id": pd.Series(out_ids, dtype="int32"),
+                "centroid_id": pd.Series([cid for cid, _ in init],
+                                         dtype="int32"),
                 "centroid": [list(c) for c in cents],
             }
         )
 
-    return vecs.coalesce(1).mapInPandas(
-        kernel, "centroid_id int, centroid array<double>"
+    return single_task(
+        vecs, kernel, "centroid_id int, centroid array<double>"
     )
 
 
@@ -328,14 +328,12 @@ def kmeans_train(
     # loop is the fallback for deliberately huge pools.
     n_pool = vecs.count()
     dim = (vecs.select(F.size(vec_col)).first() or [0])[0] if n_pool else 0
-    if n_pool and n_pool * max(1, dim) * 8 <= KMEANS_SINGLE_TASK_MAX_BYTES:
+    if n_pool and fits("kmeans_pool_bytes", n_pool * max(1, dim) * 8):
         init = [
             (r[0], list(r[1]))
             for r in centroids.orderBy("centroid_id").collect()
         ]
-        return _kmeans_single_task(
-            vecs, init, max_iterations, id_col, vec_col
-        )
+        return _kmeans_single_task(vecs, init, max_iterations, vec_col)
     assign = None
     for _ in range(max_iterations):
         new_assign = (
@@ -343,17 +341,14 @@ def kmeans_train(
             .select(id_col, vec_col, "cid")
             .localCheckpoint()
         )
-        if assign is not None:
-            changed = (
-                new_assign.alias("n")
-                .join(assign.alias("o"), id_col)
-                .filter(F.col("n.cid") != F.col("o.cid"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                assign = new_assign
-                break
+        if assign is not None and (
+            new_assign.alias("n")
+            .join(assign.alias("o"), id_col)
+            .filter(F.col("n.cid") != F.col("o.cid"))
+            .isEmpty()
+        ):
+            assign = new_assign
+            break
         assign = new_assign
         means = (
             assign.select("cid", F.posexplode(vec_col).alias("pos", "val"))
@@ -431,54 +426,32 @@ def _pq_train_single_task(
     max_iterations: int,
     vec_col: str,
 ) -> DataFrame:
-    """One-task numpy Lloyd loop over ALL ``m`` PQ subspaces at once —
-    the small-pool route of :func:`pq_train`.  Per subspace the math is
-    EXACTLY :func:`_kmeans_single_task` (``ascontiguousarray`` makes
-    each slice the same contiguous n×step float64 matrix the per-sub
-    kernel built from sliced arrays, so BLAS/pairwise-sum op order is
+    """One-task :func:`_lloyd` over ALL ``m`` PQ subspaces at once —
+    the small-pool route of :func:`pq_train`, funneled through
+    ``route.single_task``.  Per subspace the math is EXACTLY
+    :func:`_kmeans_single_task`'s (``ascontiguousarray`` makes each
+    slice the same contiguous n×step float64 matrix the per-sub kernel
+    built from sliced arrays, so BLAS/pairwise-sum op order is
     unchanged and the codebooks are bit-identical); fusing the m loops
-    into one ``mapInPandas`` task replaces m checkpoint/count/collect
-    job chains with one."""
+    into one task replaces m checkpoint/count/collect job chains with
+    one."""
 
-    def kernel(batches):
-        keep_large_allocs_on_heap()
-        parts = [b for b in batches if len(b)]
-        x_full = None
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            x_full = np.array(list(pdf[vec_col]), dtype=np.float64)
+    def kernel(pdf):
+        x_full = np.array(list(pdf[vec_col]), dtype=np.float64)
         subs: list[int] = []
         ids: list[int] = []
         out_cents: list[list[float]] = []
         for s in range(m):
             init = inits[s]
-            out_ids = [cid for cid, _ in init]
-            cents = np.array([v for _, v in init], dtype=np.float64)
-            if x_full is not None and len(x_full) and len(cents):
-                x = np.ascontiguousarray(
-                    x_full[:, s * step:(s + 1) * step]
-                )
-                assign = None
-                for _ in range(max_iterations):
-                    d2 = (
-                        (x * x).sum(axis=1)[:, None]
-                        - 2.0 * (x @ cents.T)
-                        + (cents * cents).sum(axis=1)[None, :]
-                    )
-                    new_assign = d2.argmin(axis=1)
-                    if assign is not None and np.array_equal(
-                        new_assign, assign
-                    ):
-                        break
-                    assign = new_assign
-                    for j in range(len(cents)):
-                        members = x[assign == j]
-                        if len(members):
-                            cents[j] = members.mean(axis=0)
-            subs.extend([s] * len(out_ids))
-            ids.extend(out_ids)
+            cents = _lloyd(
+                np.ascontiguousarray(x_full[:, s * step:(s + 1) * step]),
+                np.array([v for _, v in init], dtype=np.float64),
+                max_iterations,
+            )
+            subs.extend([s] * len(init))
+            ids.extend(cid for cid, _ in init)
             out_cents.extend([list(c) for c in cents])
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "sub": pd.Series(subs, dtype="int32"),
                 "centroid_id": pd.Series(ids, dtype="int32"),
@@ -486,8 +459,8 @@ def _pq_train_single_task(
             }
         )
 
-    return vecs.coalesce(1).mapInPandas(
-        kernel, "sub int, centroid_id int, centroid array<double>"
+    return single_task(
+        vecs, kernel, "sub int, centroid_id int, centroid array<double>"
     )
 
 
@@ -509,8 +482,8 @@ def pq_train(
     per vector after encoding is m log2(k) bits (m=4,k=16 → 2 bytes
     vs 256 float bytes at d=64).
 
-    Small pools (full float64 matrix under
-    ``KMEANS_SINGLE_TASK_MAX_BYTES``) train all m subspaces in ONE
+    Small pools (full float64 matrix within
+    ``route.CAPS["kmeans_pool_bytes"]``) train all m subspaces in ONE
     numpy task with ONE unioned init-plan collect — the per-subspace
     :func:`kmeans_train` chain paid ~8 scheduler jobs per subspace
     (checkpoint, count, init materialize+collect) for milliseconds of
@@ -530,7 +503,7 @@ def pq_train(
         ),
     ).localCheckpoint()
     n_pool = vecs.count()
-    if n_pool and n_pool * max(1, dim) * 8 <= KMEANS_SINGLE_TASK_MAX_BYTES:
+    if n_pool and fits("kmeans_pool_bytes", n_pool * max(1, dim) * 8):
         init_df = None
         for s in range(m):
             sub = vecs.select(

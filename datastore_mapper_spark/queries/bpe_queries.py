@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..operators.route import fits, single_task
 from ..registry import query
 
 
@@ -117,17 +118,6 @@ def _merge_udf(a: str, b: str):
     return apply_merge
 
 
-#: Route BPE training to a ONE-TASK kernel when the word-frequency
-#: table holds at most this many rows — the same discipline as the
-#: connected-components / k-core single-task kernels
-#: (dedup.CC_SINGLE_TASK_MAX_EDGES): iterating a distributed dataflow
-#: 10 rounds over a vocab that fits one task trades milliseconds of
-#: Python for ~20 scheduler round-trips.  2M (word, freq) rows is a
-#: few hundred MB in one task — comfortably inside the envelope; real
-#: 100 TB corpora with larger vocabularies take the distributed loop.
-BPE_SINGLE_TASK_MAX_VOCAB = 2_000_000
-
-
 def _bpe_train_greedy(rows, n_merges: int):
     """The greedy BPE recursion over an in-memory (word, freq) list —
     the single-task kernel body.  Semantics identical to the
@@ -149,14 +139,13 @@ def _bpe_train_greedy(rows, n_merges: int):
     return merges
 
 
-def bpe_train(spark, sf_dir, n_merges: int = 10,
-              single_task_max_vocab: int | None = None) -> DataFrame:
+def bpe_train(spark, sf_dir, n_merges: int = 10) -> DataFrame:
     """Train ``n_merges`` BPE merges; returns (merge_rank, left, right,
     pair_count) — deterministic (count DESC, then lexicographic pair).
 
     ROUTED (r16): when the word-frequency table is single-task-sized
-    (≤ ``BPE_SINGLE_TASK_MAX_VOCAB`` rows) the whole greedy recursion
-    runs inside ONE ``applyInPandas`` task — one Spark job instead of
+    (within ``route.CAPS["bpe_vocab"]`` rows) the whole greedy recursion
+    runs inside ONE ``route.single_task`` task — one Spark job instead of
     ~2 per merge (pair-count argmax + checkpoint materialization),
     which at fixture scale is pure scheduler overhead over a tiny
     vocab.  A pytest twin pins route equality on the real corpus.
@@ -170,13 +159,10 @@ def bpe_train(spark, sf_dir, n_merges: int = 10,
     the connected-components loop.  At 100 TB only step (3)'s input —
     the word-frequency table — is large, and it is the SAME size every
     iteration; the corpus is never re-read after the first aggregate."""
-    cap = (BPE_SINGLE_TASK_MAX_VOCAB if single_task_max_vocab is None
-           else single_task_max_vocab)
     wf0 = word_frequencies(spark, sf_dir).localCheckpoint()
-    n_vocab = wf0.count()
     out_schema = ("merge_rank int, left string, right string, "
                   "pair_count bigint")
-    if n_vocab <= cap:
+    if fits("bpe_vocab", wf0.count()):
         nm = int(n_merges)
 
         def kern(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -186,10 +172,7 @@ def bpe_train(spark, sf_dir, n_merges: int = 10,
                 merges, columns=["merge_rank", "left", "right",
                                  "pair_count"])
 
-        return (
-            wf0.withColumn("_g", F.lit(0)).groupBy("_g")
-            .applyInPandas(kern, out_schema)
-        )
+        return single_task(wf0, kern, out_schema)
 
     wf = wf0.select(F.expr("split(w, '')").alias("syms"), "f") \
         .localCheckpoint()

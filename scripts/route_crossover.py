@@ -5,13 +5,13 @@ operators that gained task-envelope routing in round 10
 scripts/dedup_crossover.py, so the routing thresholds are numbers,
 not vibes.
 
-For synthetic graphs/pools of increasing size, run BOTH routes and
-record wall-clock.  Expected shape: the single-task numpy kernel wins
-by an order of magnitude while the data fits one task, and the
-distributed dataflow takes over once it does not (on this 32-thread
-single host the crossover is where numpy's single core loses to 32
-parallel tasks — on a real cluster it moves further out only if the
-graph outgrows a task's memory).
+For synthetic graphs/pools of increasing size, run BOTH routes (forced
+through ``operators.route.CAPS``) and record wall-clock.  Expected
+shape: the single-task numpy kernel wins by an order of magnitude
+while the data fits one task, and the distributed dataflow takes over
+once it does not (on a 32-thread single host the crossover is where
+numpy's single core loses to 32 parallel tasks — on a real cluster it
+moves further out only if the graph outgrows a task's memory).
 
 Usage: python scripts/route_crossover.py [out_md]
 Appends a markdown table to SCALE.md by default.
@@ -28,9 +28,23 @@ sys.path.insert(0, "/root/repo")
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from datastore_mapper_spark.operators import route
     from datastore_mapper_spark.operators import similarity as S
     from datastore_mapper_spark.operators.graph import pagerank
     from datastore_mapper_spark.session import get_session
+
+    def timed(cap: str, run) -> dict[str, float]:
+        """Wall-clock of ``run()`` with cap ``cap`` forced each way."""
+        saved, times = route.CAPS[cap], {}
+        try:
+            for name, value in [("single", 10**18), ("dist", -1)]:
+                route.CAPS[cap] = value
+                t0 = time.time()
+                run()
+                times[name] = time.time() - t0
+        finally:
+            route.CAPS[cap] = saved
+        return times
 
     spark = get_session("route-crossover")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,18 +61,13 @@ def main() -> int:
             f"explode(transform(sequence(1, {deg}), "
             f"j -> (id * 31 + j * 97) % {n_nodes})) AS dst",
         ).localCheckpoint()
-        times = {}
-        for route, cap in [("single", None), ("dist", 0)]:
-            t0 = time.time()
-            pagerank(edges, max_iterations=10,
-                     single_task_max_edges=cap).count()
-            times[route] = time.time() - t0
+        times = timed("task_edges",
+                      lambda: pagerank(edges, max_iterations=10).count())
         lines.append(
             f"| pagerank | {n_nodes:,} nodes / {n_nodes*deg:,} edges "
             f"| {times['single']:.2f} | {times['dist']:.2f} |"
         )
 
-    import datastore_mapper_spark.operators.similarity as sim_mod
     for n_vecs, d in [(5_000, 64), (50_000, 64), (200_000, 64)]:
         vecs = spark.range(n_vecs).selectExpr(
             "id AS vec_id",
@@ -66,16 +75,9 @@ def main() -> int:
             "j -> cast(pmod(id * 131 + j * 17, 1000) as double) / 500.0 "
             "- 1.0) AS embedding",
         ).localCheckpoint()
-        times = {}
-        saved_cap = sim_mod.KMEANS_SINGLE_TASK_MAX_BYTES
-        try:
-            for route, cap in [("single", saved_cap), ("dist", 0)]:
-                sim_mod.KMEANS_SINGLE_TASK_MAX_BYTES = cap
-                t0 = time.time()
-                S.kmeans_train(vecs, k=16, max_iterations=5).count()
-                times[route] = time.time() - t0
-        finally:
-            sim_mod.KMEANS_SINGLE_TASK_MAX_BYTES = saved_cap
+        times = timed(
+            "kmeans_pool_bytes",
+            lambda: S.kmeans_train(vecs, k=16, max_iterations=5).count())
         lines.append(
             f"| kmeans_train | {n_vecs:,} x {d} | "
             f"{times['single']:.2f} | {times['dist']:.2f} |"

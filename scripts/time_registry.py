@@ -20,7 +20,9 @@ baseline pick are bench.py's (``_gate_on_load``, ``_load_prev_bench``).
 
 Output JSON: {"queries": {name: median_sec | "ERR ..."},
 "spread": {name: [min, max]}, "codegen_compiles": {name: [per run]},
-"runs": N, "sf_dir": ..., "drift_warnings": [...]}.  Older
+"runs": N, "sf_dir": ..., "cpus": N, "baseline": tag | "none
+comparable", "drift_warnings": [...]}.  The baseline is the latest
+SWEEP round with the same ``cpus`` and ``sf_dir``.  Older
 SWEEP_r*.json files are flat {name: sec} — the tripwire reads both
 shapes.  ``codegen_compiles`` counts the generated classes Janino
 compiled during each run (``session.codegen_compiles``): a query whose
@@ -115,8 +117,10 @@ def main() -> int:
     queries: dict[str, float | str] = {}
     spread: dict[str, list[float]] = {}
     compiles: dict[str, list[int]] = {}
+    cpus = spark.sparkContext.defaultParallelism
     out = {"queries": queries, "spread": spread,
-           "codegen_compiles": compiles, "runs": n_runs, "sf_dir": sf_dir}
+           "codegen_compiles": compiles, "runs": n_runs, "sf_dir": sf_dir,
+           "cpus": cpus}
     if load_info:
         out["load"] = load_info
     if env_warnings:
@@ -148,7 +152,9 @@ def main() -> int:
             json.dump(out, f)
 
     # drift rule: median past 1.5x the prior round's max (floor 0.5 s)
-    prev = _load_prev_bench("SWEEP", exclude=out_path)
+    prev = _load_prev_bench("SWEEP", exclude=out_path, cpus=cpus,
+                            sf_dir=sf_dir)
+    out["baseline"] = prev.get("::tag", "none comparable")
     prev_queries = prev.get("queries", prev)  # pre-round-8 files are flat
     warnings = []
     for name, med in queries.items():
@@ -166,8 +172,8 @@ def main() -> int:
         out["drift_warnings"] = warnings
         for w in warnings:
             print(f"DRIFT WARNING: {w}", file=sys.stderr)
-        with open(out_path, "w") as f:
-            json.dump(out, f)
+    with open(out_path, "w") as f:
+        json.dump(out, f)
 
     timed = sorted(
         ((v, k) for k, v in queries.items() if not isinstance(v, str)),

@@ -3,9 +3,10 @@
 The drift tripwire must fire when a median exceeds the previous
 round's median by more than max(15%, that round's own min-max spread),
 stay silent inside the band, and never crash on missing history.  The
-baseline is the highest plain ``{BENCH,SWEEP}_r{N}.json`` round, the
-load gate waits on load1 AND load5, and per-group executor time comes
-from the status store with the UI off."""
+baseline is the highest plain ``{BENCH,SWEEP}_r{N}.json`` round with
+the run's core count and scale factor, the load gate waits on load1
+AND load5, and per-group executor time comes from the status store
+with the UI off."""
 
 from __future__ import annotations
 
@@ -71,6 +72,40 @@ def test_baseline_is_highest_round_not_control_run(tmp_path, monkeypatch,
     own = str(tmp_path / f"{prefix}_r12.json")
     prev = _load_prev_bench(prefix, exclude=own)
     assert prev["::tag"] == f"{prefix}_r10.json" and prev["value"] == 10.0
+
+
+def _write_rounds(tmp_path, prefix, rounds):
+    for n, wrapper, parsed in rounds:
+        (tmp_path / f"{prefix}_r{n}.json").write_text(json.dumps(
+            {**wrapper, "parsed": {"queries": {}, **parsed}}))
+
+
+def test_baseline_skips_other_core_counts(tmp_path, monkeypatch):
+    # a round matches on the wrapper's cpus or on bench.py's own
+    # (local[N]'s N); older rounds carry only the wrapper's
+    _write_rounds(tmp_path, "BENCH", [
+        (15, {}, {"cpus": 4, "sf": 0.1}),
+        (16, {"cpus": 4, "sf": 0.1}, {"sf": 0.1}),
+        (17, {"cpus": 32, "sf": 0.1}, {"sf": 0.1}),
+    ])
+    # a failed run's wrapper matches but parsed no JSON line
+    (tmp_path / "BENCH_r18.json").write_text(json.dumps(
+        {"cpus": 4, "sf": 0.1, "rc": 1, "parsed": None}))
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    assert _load_prev_bench(cpus=4, sf=0.1)["::tag"] == "BENCH_r16.json"
+    assert _load_prev_bench(cpus=32, sf=0.1)["::tag"] == "BENCH_r17.json"
+    assert _load_prev_bench(cpus=8, sf=0.1) == {}
+
+
+def test_baseline_skips_other_scale_factors(tmp_path, monkeypatch):
+    _write_rounds(tmp_path, "SWEEP", [
+        (15, {}, {"cpus": 4, "sf_dir": "/data/sf0.01"}),
+        (16, {}, {"cpus": 4, "sf_dir": "/data/sf0.1"}),
+    ])
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    prev = _load_prev_bench("SWEEP", cpus=4, sf_dir="/data/sf0.01")
+    assert prev["::tag"] == "SWEEP_r15.json"
+    assert _load_prev_bench("SWEEP", cpus=4, sf_dir="/data/sf1") == {}
 
 
 def test_baseline_absent_or_unreadable(tmp_path, monkeypatch):

@@ -8,7 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from datastore_mapper_spark.catalog import table
-from datastore_mapper_spark.operators import counters, dedup as dd, similarity as sim
+from datastore_mapper_spark.operators import (
+    counters,
+    dedup as dd,
+    route,
+    similarity as sim,
+)
 from datastore_mapper_spark.operators.multimodal import (
     as_binary_media,
     decode_image_meta,
@@ -376,16 +381,14 @@ def test_connected_components_known_graph(spark):
     }
 
 
-def test_connected_components_routes_are_twins(spark, monkeypatch):
-    """The one-task union-find route (round-16 optimization: the
-    min-label/star loops pay ~2 s of jobs per round on graphs that fit
-    one task) must produce bit-identical (node, cluster_id) labels to
-    both distributed loops — pinned by forcing the loop route with a
-    zeroed envelope, on a graph mixing a chain (diameter > 1 round), a
-    star, singleton-free isolated pairs and duplicate/reversed edges."""
-    import random
+# --- route twins: every operators/route.CAPS entry, forced both ways ----
 
-    from datastore_mapper_spark.operators import dedup as dd
+
+def _cc_twin(spark, sf_dir):
+    """Chain (diameter > 1 round), star, reversed duplicates and a
+    singleton-free pair soup; both component loops agree on every
+    route."""
+    import random
 
     rng = random.Random(16)
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),     # chain
@@ -395,39 +398,19 @@ def test_connected_components_routes_are_twins(spark, monkeypatch):
         a, b = rng.sample(range(4), 2)                   # no self-loops:
         edges.append((base + a, base + b))               # star drops them
     df = spark.createDataFrame(edges, ["d1", "d2"])
-
-    kernel_cc = {(r.node, r.cluster_id)
-                 for r in dd.connected_components(df).collect()}
-    kernel_star = {(r.node, r.cluster_id)
-                   for r in dd.connected_components_star(df).collect()}
-    monkeypatch.setattr(dd, "CC_CONTRACT_MIN_EDGES", 0)
-    contract_cc = {(r.node, r.cluster_id)
-                   for r in dd.connected_components(df).collect()}
-    contract_star = {(r.node, r.cluster_id)
-                     for r in dd.connected_components_star(df).collect()}
-    monkeypatch.setattr(dd, "CC_SINGLE_TASK_MAX_EDGES", 0)
-    loop_cc = {(r.node, r.cluster_id)
-               for r in dd.connected_components(df).collect()}
-    loop_star = {(r.node, r.cluster_id)
-                 for r in dd.connected_components_star(df).collect()}
-    assert kernel_cc == loop_cc
-    assert kernel_star == loop_star
-    assert contract_cc == loop_cc
-    assert contract_star == loop_star
-    assert kernel_cc == kernel_star
+    cc = {(r.node, r.cluster_id)
+          for r in dd.connected_components(df).collect()}
+    star = {(r.node, r.cluster_id)
+            for r in dd.connected_components_star(df).collect()}
+    assert cc == star
+    return cc
 
 
-def test_jaccard_threshold_pairs_routes_agree(spark, monkeypatch):
-    """The blocked-kernel route of jaccard_threshold_pairs (round-17:
-    the near-dup census build's candidate join degenerates to
-    ~all-pairs on the small-vocabulary fixture) must produce
-    bit-identical (d1, d2, inter, sz1, sz2) rows to the join route
-    (capped_jaccard_pairs + the integer threshold), including the
-    df-cap miss characterization, duplicate-text groups and token
-    arrays carrying repeated tokens, with a BINDING cap."""
+def _jaccard_twin(spark, sf_dir):
+    """Blocked kernel vs join route, with a BINDING df cap (the miss
+    characterization), duplicate-text groups and token arrays carrying
+    repeated tokens."""
     import random
-
-    from datastore_mapper_spark.operators import dedup as dd
 
     rng = random.Random(1717)
     vocab = [f"t{i}" for i in range(12)]
@@ -440,28 +423,80 @@ def test_jaccard_threshold_pairs_routes_agree(spark, monkeypatch):
     docs += [(300, docs[5][1] * 2), (301, docs[5][1] + docs[5][1][:1]),
              (302, docs[9][1] + docs[9][1][-1:])]       # repeated tokens
     df = spark.createDataFrame(docs, "doc_id long, toks array<string>")
-    cap = 30  # binds: several tokens exceed df 30 over 69 docs
-
-    monkeypatch.setattr(dd, "JACCARD_KERNEL_MIN_JOIN_ROWS", 0)
-    kernel = {tuple(r) for r in dd.jaccard_threshold_pairs(
-        df, cap, 3, 5).collect()}  # low theta => many survivors
-    monkeypatch.setattr(dd, "JACCARD_KERNEL_MIN_JOIN_ROWS", 10**18)
-    join = {tuple(r) for r in dd.jaccard_threshold_pairs(
-        df, cap, 3, 5).collect()}
-    assert kernel == join and len(join) > 0
+    # cap 30 binds: several tokens exceed df 30 over 69 docs; the low
+    # theta keeps many survivors
+    got = {tuple(r) for r in dd.jaccard_threshold_pairs(
+        df, 30, 3, 5).collect()}
+    assert got
+    return got
 
 
-def test_label_propagation_routes_agree(spark, monkeypatch):
-    """The one-task LPA kernel (round-17: graph_label_propagation paid
-    ~2 s of scheduler jobs per synchronous round on a graph that fits
-    one task) must produce bit-identical (node, lab) assignments to
-    the distributed join+count+row_number loop — pinned by forcing the
-    loop route with a zeroed envelope, on a graph that exercises the
-    tie-break (equal neighbor-label counts resolved by MINIMUM label),
-    label flips across rounds, and two well-separated communities."""
+def _kcore_twin(spark, sf_dir):
+    """Broadcast vs shuffle semi-join peel on a clique with a pendant
+    path (one node peeled per round), a triangle and a tree."""
+    from datastore_mapper_spark.operators.graph import kcore
+
+    edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    edges += [(4, 5), (5, 6), (6, 7), (7, 8)]            # pendant path
+    edges += [(20, 21), (21, 22), (22, 20)]              # triangle
+    edges += [(30, 31), (30, 32), (32, 33)]              # tree
+    df = spark.createDataFrame(edges, "d1 long, d2 long")
+    got = {(r.node, r.degree) for r in kcore(df, k=2).collect()}
+    assert {n for n, _ in got} == {0, 1, 2, 3, 4, 20, 21, 22}
+    return got
+
+
+def _kmeans_twin(spark, sf_dir):
+    """Well-separated clusters: same init (shared xxhash64 plan), tie
+    rule and stop rule on both routes."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    rows = []
+    for c in range(4):
+        center = np.zeros(8)
+        center[c * 2] = 10.0 * (c + 1)
+        rows += [
+            (i + c * 100, (center + rng.randn(8) * 0.01).tolist())
+            for i in range(50)
+        ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r.centroid_id: np.array(r.centroid)
+           for r in sim.kmeans_train(df, k=4, max_iterations=10).collect()}
+    assert len(got) == 4
+    return got
+
+
+def _pq_twin(spark, sf_dir):
+    """Fused one-task PQ trainer vs the per-subspace kmeans_train
+    chain, each subspace on the distributed Lloyd loop: same init rows,
+    same Lloyd float sequence."""
+    e = table(spark, sf_dir, "embeddings").limit(300)
+    got = {(r.sub, r.centroid_id): list(r.centroid)
+           for r in sim.pq_train(e, m=4, k=8, max_iterations=4).collect()}
+    assert len(got) == 32
+    return got
+
+
+def _bpe_twin(spark, sf_dir):
+    """One-task greedy trainer vs the per-merge loop on the real
+    corpus."""
+    from datastore_mapper_spark.queries.bpe_queries import bpe_train
+
+    got = [(r.merge_rank, r.left, r.right, r.pair_count)
+           for r in bpe_train(spark, sf_dir, n_merges=10)
+           .orderBy("merge_rank").collect()]
+    assert len(got) == 10
+    return got
+
+
+def _lpa_twin(spark, sf_dir):
+    """Tie-breaks (equal neighbor-label counts resolved by MINIMUM
+    label), label flips across rounds, two communities; every node of
+    the pair list is labeled."""
     import random
 
-    from datastore_mapper_spark.operators import graph as G
+    from datastore_mapper_spark.operators.graph import label_propagation
 
     rng = random.Random(17)
     edges = [(1, 2), (2, 3), (3, 1), (3, 4),          # triangle + pendant
@@ -472,16 +507,71 @@ def test_label_propagation_routes_agree(spark, monkeypatch):
         a, b = rng.sample(nodes, 2)
         edges.append((min(a, b), max(a, b)))
     df = spark.createDataFrame(sorted(set(edges)), ["d1", "d2"])
+    got = {(r.node, r.lab) for r in label_propagation(df).collect()}
+    assert {n for n, _ in got} == {n for e in edges for n in e}
+    return got
 
-    kernel = {(r.node, r.lab)
-              for r in G.label_propagation(df).collect()}
-    monkeypatch.setattr(G, "SINGLE_TASK_MAX_EDGES", 0)
-    loop = {(r.node, r.lab)
-            for r in G.label_propagation(df).collect()}
-    assert kernel == loop
-    # every node of the pair list is labeled, on both routes
-    all_nodes = {n for e in edges for n in e}
-    assert {n for n, _ in kernel} == all_nodes
+
+def _pagerank_twin(spark, sf_dir):
+    """Dangling nodes and two components; the single-task route stays
+    a constant-job query (a per-iteration job would push it past 4)."""
+    import time
+
+    from datastore_mapper_spark.operators.graph import pagerank
+
+    edge_list = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (5, 6)]
+    edges = spark.createDataFrame(edge_list, ["src", "dst"])
+    sc = spark.sparkContext
+    group = f"pr_jobcount_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "route twin")
+    try:
+        got = {r.node: r.rank
+               for r in pagerank(edges, max_iterations=40).collect()}
+    finally:
+        sc.setJobGroup(None, None)
+    if route.fits("task_edges", len(edge_list)):
+        jobs = sc.statusTracker().getJobIdsForGroup(group) or []
+        assert len(jobs) <= 4, f"single-task pagerank ran {len(jobs)} jobs"
+    return got
+
+
+#: cap -> {operator: (twin, tol)}; tol 0 means bit-identical, else the
+#: absolute tolerance for loops that sum floats in another order.
+_ROUTE_TWINS = {
+    "bpe_vocab": {"bpe_train": (_bpe_twin, 0)},
+    "cc_uncontracted_edges": {"connected_components": (_cc_twin, 0)},
+    "jaccard_join_rows": {"jaccard_threshold_pairs": (_jaccard_twin, 0)},
+    "kcore_broadcast_nodes": {"kcore": (_kcore_twin, 0)},
+    "kmeans_pool_bytes": {"kmeans_train": (_kmeans_twin, 1e-9),
+                          "pq_train": (_pq_twin, 0)},
+    "task_edges": {"connected_components": (_cc_twin, 0),
+                   "label_propagation": (_lpa_twin, 0),
+                   "pagerank": (_pagerank_twin, 1e-9)},
+}
+
+
+@pytest.mark.parametrize("cap, op", [
+    pytest.param(cap, op, id=f"{cap}-{op}")
+    for cap in sorted(route.CAPS) for op in sorted(_ROUTE_TWINS[cap])
+])
+def test_forced_routes_are_twins(spark, sf_dir, monkeypatch, cap, op):
+    """Each routed operator gives the same result on both sides of
+    each cap it reads, both forced through ``route.CAPS`` (a cap with
+    no twin here fails collection)."""
+    import numpy as np
+
+    twin, tol = _ROUTE_TWINS[cap][op]
+    monkeypatch.setitem(route.CAPS, cap, 10**18)
+    cheap = twin(spark, sf_dir)
+    monkeypatch.setitem(route.CAPS, cap, -1)
+    other = twin(spark, sf_dir)
+    if not tol:
+        assert cheap == other
+        return
+    assert cheap.keys() == other.keys()
+    for k in cheap:
+        assert np.allclose(cheap[k], other[k], rtol=0, atol=tol), (
+            k, cheap[k], other[k])
 
 
 def test_multimodal_resize_exact_sizes(spark, sf_dir):
@@ -815,36 +905,15 @@ def test_pq_reconstruction_beats_coarser_codebook(spark, sf_dir):
     assert total_err(16) <= total_err(4) * 1.001
 
 
-def test_pq_train_fused_route_matches_per_subspace(spark, sf_dir, monkeypatch):
-    """The one-task fused PQ trainer (all m subspaces in one kernel,
-    round 16) must produce the bit-identical (sub, centroid_id,
-    centroid) codebooks as the per-subspace kmeans_train chain it
-    replaced — same init rows, same Lloyd float sequence."""
-    import datastore_mapper_spark.operators.similarity as S
-
-    e = table(spark, sf_dir, "embeddings").limit(300)
-    fused = {
-        (r.sub, r.centroid_id): list(r.centroid)
-        for r in S.pq_train(e, m=4, k=8, max_iterations=4).collect()
-    }
-    # disable the cap: pq_train falls back to per-subspace kmeans_train,
-    # and each of those takes the DISTRIBUTED Lloyd loop — the strongest
-    # reference (fused kernel == per-sub kernel == distributed loop)
-    monkeypatch.setattr(S, "KMEANS_SINGLE_TASK_MAX_BYTES", 0)
-    per_sub = {
-        (r.sub, r.centroid_id): list(r.centroid)
-        for r in S.pq_train(e, m=4, k=8, max_iterations=4).collect()
-    }
-    assert fused.keys() == per_sub.keys() and len(fused) == 32
-    for key in fused:
-        assert fused[key] == per_sub[key], key
-
-
 def test_iterative_operators_handle_empty_inputs(spark):
     """Empty edge lists / corpora / vector sets must yield empty
     results, not crashes — the 3 a.m. pipeline edge case (a micro-batch
     with zero near-dup pairs, a filter that removed everything)."""
-    from datastore_mapper_spark.operators.graph import pagerank
+    from datastore_mapper_spark.operators.graph import (
+        kcore_single_task,
+        label_propagation,
+        pagerank,
+    )
 
     empty_edges = spark.createDataFrame([], "d1 long, d2 long")
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
@@ -852,6 +921,8 @@ def test_iterative_operators_handle_empty_inputs(spark):
     assert dd.connected_components(empty_edges).count() == 0
     assert dd.connected_components_star(empty_edges).count() == 0
     assert pagerank(empty_edges, src="d1", dst="d2").count() == 0
+    assert label_propagation(empty_edges).count() == 0
+    assert kcore_single_task(empty_edges).count() == 0
     assert dd.minhash_signatures(empty_docs).count() == 0
     assert dd.lsh_candidate_pairs(dd.minhash_signatures(empty_docs)).count() == 0
     assert dd.verify_jaccard(empty_edges, empty_docs).count() == 0
@@ -1079,26 +1150,6 @@ def test_bpe_train_matches_pure_python_reference(spark, sf_dir):
         .orderBy("merge_rank").collect()
     ]
     assert got == expected
-
-
-def test_bpe_train_kernel_route_equals_distributed(spark, sf_dir):
-    """Route twin for the r16 single-task BPE kernel: the one-task
-    applyInPandas route (default at fixture scale) and the distributed
-    per-iteration loop (forced via single_task_max_vocab=0) must
-    produce the identical merge list on the real corpus."""
-    from datastore_mapper_spark.queries.bpe_queries import bpe_train
-
-    def run(cap):
-        return [
-            (r.merge_rank, r.left, r.right, r.pair_count)
-            for r in bpe_train(spark, sf_dir, n_merges=10,
-                               single_task_max_vocab=cap)
-            .orderBy("merge_rank").collect()
-        ]
-
-    kernel = run(None)          # fixture vocab <= default cap
-    distributed = run(0)        # forces the per-iteration loop
-    assert kernel == distributed and len(kernel) == 10
 
 
 def test_approx_quantile_audit_within_contract(spark, sf_dir):
@@ -1642,43 +1693,6 @@ def test_dedup_router_routes_are_twins(spark, monkeypatch):
     assert kernel_rows  # fixture has near-dup pairs; empty would be vacuous
 
 
-def test_pagerank_routes_are_twins_and_job_count(spark):
-    """Round-9 VERDICT task 3: (a) the single-task numpy route and the
-    distributed join+agg loop must agree to float tolerance on a graph
-    with dangling nodes and multiple components; (b) the single-task
-    route (the one every fixture-sized graph takes) must stay a
-    constant-job query — the r9 sweep regression was the distributed
-    loop's per-iteration scheduler overhead silently multiplying."""
-    from datastore_mapper_spark.operators.graph import pagerank
-
-    edge_list = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (5, 6)]
-    edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    single = {
-        r.node: r.rank
-        for r in pagerank(edges, max_iterations=40).collect()
-    }
-    dist = {
-        r.node: r.rank
-        for r in pagerank(
-            edges, max_iterations=40, single_task_max_edges=0
-        ).collect()
-    }
-    assert single.keys() == dist.keys()
-    for k in single:
-        assert abs(single[k] - dist[k]) < 1e-9, (k, single[k], dist[k])
-
-    sc = spark.sparkContext
-    sc.setJobGroup("pr_jobcount", "tripwire")
-    try:
-        pagerank(edges, max_iterations=40).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("pr_jobcount") or []
-    # routing count + kernel collect; anything per-iteration would
-    # push this past the bound
-    assert len(jobs) <= 4, f"single-task pagerank ran {len(jobs)} jobs"
-
-
 def test_snapshot_build_race_keeps_winner(spark):
     """Round-9 ADVICE (medium): if a concurrent builder installs a
     COMPLETED (_SUCCESS-bearing) snapshot while our build is running,
@@ -1788,39 +1802,6 @@ def test_gif_decode_rejects_unsupported():
     interlaced = bytes(blob[:ipacked_off]) + b"\x40" + bytes(blob[ipacked_off + 1:])
     with _pytest.raises(NotImplementedError):
         decode_gif87a(interlaced)
-
-
-def test_kmeans_routes_are_twins(spark, monkeypatch):
-    """kmeans_train's one-task numpy route and the distributed Lloyd
-    loop must produce the same clustering on well-separated data —
-    same init (shared xxhash64 plan), same tie rule, same stop rule;
-    centroids agree to float-accumulation tolerance."""
-    import numpy as np
-
-    import datastore_mapper_spark.operators.similarity as S
-
-    rng = np.random.RandomState(3)
-    rows = []
-    for c in range(4):
-        center = np.zeros(8)
-        center[c * 2] = 10.0 * (c + 1)
-        rows += [
-            (i + c * 100, (center + rng.randn(8) * 0.01).tolist())
-            for i in range(50)
-        ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    single = {
-        r.centroid_id: np.array(r.centroid)
-        for r in S.kmeans_train(df, k=4, max_iterations=10).collect()
-    }
-    monkeypatch.setattr(S, "KMEANS_SINGLE_TASK_MAX_BYTES", 0)
-    dist = {
-        r.centroid_id: np.array(r.centroid)
-        for r in S.kmeans_train(df, k=4, max_iterations=10).collect()
-    }
-    assert single.keys() == dist.keys() and len(single) == 4
-    for cid in single:
-        assert np.allclose(single[cid], dist[cid], atol=1e-9), cid
 
 
 def test_png_codec_round_trip_and_filters():
