@@ -20,6 +20,11 @@ Layout:
   operators/   — reusable LLM-pipeline operators (dedup, knn, text, media)
   sources/     — readers/writers (rolled output ≙ reference output.go)
   streaming/   — Structured Streaming demos (watermark, stateful dedup)
+  _zipguard.py — stops Python workers re-reading pyspark.zip per task
 """
+
+from datastore_mapper_spark import _zipguard
+
+_zipguard.install()
 
 __version__ = "0.1.0"

@@ -807,7 +807,7 @@ def acid_partitioned_scan(spark, sf_dir):
         (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
         "o_orderstatus",
     )
-    if corrected.limit(1).count():
+    if not corrected.isEmpty():
         acid_lite.replace_partitions(spark, dest, corrected)
     selected, total = acid_lite.prune_files(
         dest, "o_orderstatus", "O", "O")
@@ -1436,7 +1436,7 @@ def acid_check_constraints(spark, sf_dir):
         "o_totalprice",
         F.when(k % 6 == 1, -F.col("o_totalprice"))
         .otherwise(F.col("o_totalprice")))
-    has_poison = poison.filter(F.col("o_totalprice") <= 0).limit(1).count()
+    has_poison = not poison.filter(F.col("o_totalprice") <= 0).isEmpty()
     rejected = not has_poison  # empty input: nothing to reject = pass
     if has_poison:
         try:
@@ -1820,7 +1820,7 @@ def acid_generated_columns(spark, sf_dir):
     k = F.col("o_orderkey")
     gen = {"price_bucket": "CAST(floor(o_totalprice / 500) AS BIGINT)"}
     seed = o.filter(k % 3 == 0)
-    if seed.limit(1).count():
+    if not seed.isEmpty():
         seed = seed.repartitionByRange(4, "o_totalprice")
     acid_lite.create_table(spark, dest, seed, generated=gen)
     acid_lite.append(spark, dest, o.filter(k % 3 == 1).coalesce(2))
@@ -1829,7 +1829,7 @@ def acid_generated_columns(spark, sf_dir):
         o.filter(k % 3 == 1).limit(1)
         .withColumn("price_bucket", F.lit(-999).cast("bigint"))
     )
-    if poison.limit(1).count():
+    if not poison.isEmpty():
         v0 = acid_lite.latest_version(dest)
         reject_ok = False
         try:
@@ -2392,7 +2392,7 @@ def acid_liquid_recluster(spark, sf_dir):
     m_post = acid_lite._read_manifest(dest, v)
     survivors = set(m_pre["files"]) & set(m_post["files"])
     incremental = (0 < n_rw < n_tot and len(survivors) >= 1) \
-        if churn.limit(1).count() else True
+        if not churn.isEmpty() else True
     # post-state: pairwise-disjoint ranges by manifest stats
     stats = m_post.get("stats") or {}
     spans = sorted(
@@ -3739,7 +3739,7 @@ def acid_identity_columns(spark, sf_dir):
     unique_ok = lin.select("sid").distinct().count() == total
     aligned_ok = lin.filter(
         ((F.col("sid") - 1000) % 2 != 0) | (F.col("sid") < 1000)
-    ).limit(1).count() == 0
+    ).isEmpty()
     spans = {r.cv: (r.lo, r.hi) for r in
              lin.groupBy(F.col("_commit_version").alias("cv"))
              .agg(F.min("sid").alias("lo"), F.max("sid").alias("hi"))

@@ -1358,14 +1358,13 @@ def graph_kcore_membership(spark, sf_dir):
         .groupBy(F.col("u").alias("node"))
         .agg(F.count("*").alias("ideg"))
     )
-    bad = (
+    mindeg_ok = (
         core.join(ind, "node", "full_outer")
         .filter(F.col("degree").isNull() | F.col("ideg").isNull()
                 | (F.col("degree") != F.col("ideg"))
                 | (F.col("ideg") < 2))
-        .limit(1).count()
+        .isEmpty()
     )
-    mindeg_ok = bad == 0
     nodes = sym.select(F.col("u").alias("node")).distinct()
     return (
         nodes.agg(F.count("*").alias("n_graph_nodes"))

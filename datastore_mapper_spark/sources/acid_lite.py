@@ -932,6 +932,18 @@ def _rel_path_expr(path: str):
     ).alias("__rel"), prefix
 
 
+#: The deletion-vector sidecar layout :func:`_write_dv_sidecar` writes.
+DV_SCHEMA = "rel string, row_index bigint"
+
+
+def _read_dvs(spark: SparkSession, path: str, dvs: list[str]) -> DataFrame:
+    """The DV sidecars ``dvs`` (table-relative) as one (rel, row_index)
+    frame.  The declared schema spares the parquet schema-inference job
+    an unschema'd read runs on every call."""
+    return spark.read.schema(DV_SCHEMA).parquet(
+        *[os.path.join(path, d) for d in dvs])
+
+
 def _load_files_dv(spark: SparkSession, path: str, m: dict,
                    files: list[str]) -> DataFrame:
     """DV-aware load of an arbitrary file SUBSET of snapshot ``m``:
@@ -949,7 +961,7 @@ def _load_files_dv(spark: SparkSession, path: str, m: dict,
     base = _load_files(
         spark, path, m, files,
         extra=[rel, F.col("_metadata.row_index").alias("__ri")])
-    dv = spark.read.parquet(*[os.path.join(path, d) for d in dvs]).select(
+    dv = _read_dvs(spark, path, dvs).select(
         F.col("rel").alias("__rel"), F.col("row_index").alias("__ri"))
     return base.join(dv, ["__rel", "__ri"], "left_anti").drop("__rel", "__ri")
 
@@ -1879,8 +1891,7 @@ def change_data_feed(
         base = _load_files(
             spark, path, man, files,
             extra=[rel, F.col("_metadata.row_index").alias("__ri")])
-        pos = spark.read.parquet(
-            *[os.path.join(path, d) for d in dvs]).select(
+        pos = _read_dvs(spark, path, dvs).select(
             F.col("rel").alias("__rel"), F.col("row_index").alias("__ri"))
         return base.join(pos, ["__rel", "__ri"], "left_anti").drop(
             "__rel", "__ri")
@@ -1951,8 +1962,7 @@ def change_data_feed(
             base = _load_files(
                 spark, path, mt, carried,
                 extra=[rel, F.col("_metadata.row_index").alias("__ri")])
-            pos = spark.read.parquet(
-                *[os.path.join(path, d) for d in dv_new]).select(
+            pos = _read_dvs(spark, path, dv_new).select(
                 F.col("rel").alias("__rel"),
                 F.col("row_index").alias("__ri"))
             dv_deleted = (
@@ -2163,9 +2173,7 @@ def delete_where_dv(
         .alias("row_index"))
     old_dvs = m.get("dvs") or []
     if old_dvs:
-        prior = spark.read.parquet(
-            *[os.path.join(path, d) for d in old_dvs]).select(
-            "rel", "row_index")
+        prior = _read_dvs(spark, path, old_dvs)
         positions = positions.join(prior, ["rel", "row_index"],
                                    "left_anti")
     obs = Observation()
@@ -2267,8 +2275,7 @@ def update_where_mor(
             "— deletion-vector keying would be unsound")))
     old_dvs = m.get("dvs") or []
     if old_dvs:
-        prior = spark.read.parquet(
-            *[os.path.join(path, d) for d in old_dvs]).select(
+        prior = _read_dvs(spark, path, old_dvs).select(
             F.col("rel").alias("__rel"), F.col("row_index").alias("__ri"))
         hits = hits.join(prior, ["__rel", "__ri"], "left_anti")
     # one materialization feeds BOTH the position sidecar and the new
@@ -3275,11 +3282,10 @@ def add_check_constraint(spark: SparkSession, path: str, name: str,
     m0 = _read_manifest(path, v0)
     if name in (m0.get("constraints") or {}):
         raise ValueError(f"constraint '{name}' already exists at {path}")
-    bad = read(spark, path).filter(
+    if not read(spark, path).filter(
         F.coalesce(F.expr(predicate).cast("boolean"), F.lit(True))
         == F.lit(False)
-    ).limit(1).count()
-    if bad:
+    ).isEmpty():
         raise ConstraintViolation(
             f"existing rows violate CHECK ({predicate}) — constraint "
             f"'{name}' not added"
@@ -4382,8 +4388,7 @@ def read_with_lineage(spark: SparkSession, path: str,
     out = base.join(F.broadcast(lineage), "__rel")
     dvs = m.get("dvs") or []
     if dvs:
-        dv = spark.read.parquet(
-            *[os.path.join(path, d) for d in dvs]).select(
+        dv = _read_dvs(spark, path, dvs).select(
             F.col("rel").alias("__rel"), F.col("row_index").alias("__ri"))
         out = out.join(dv, ["__rel", "__ri"], "left_anti")
     return (

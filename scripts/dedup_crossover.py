@@ -39,11 +39,12 @@ Usage: python scripts/dedup_crossover.py [sizes...]   (default 1000 3000 10000)
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 VOCAB_COMMON = [f"the{i}" for i in range(30)]      # stopword pool (huge df)
 VOCAB_RARE_N = 50_000                               # long-tail vocabulary

@@ -6,7 +6,9 @@ scripts/dedup_crossover.py, so the routing thresholds are numbers,
 not vibes.
 
 For synthetic graphs/pools of increasing size, run BOTH routes (forced
-through ``operators.route.CAPS``) and record wall-clock.  Expected
+through ``operators.route.CAPS``) and record wall-clock.  Each route
+runs once untimed first, so no row pays the Python worker start or
+other first-call costs.  Expected
 shape: the single-task numpy kernel wins by an order of magnitude
 while the data fits one task, and the distributed dataflow takes over
 once it does not (on a 32-thread single host the crossover is where
@@ -14,15 +16,16 @@ numpy's single core loses to 32 parallel tasks — on a real cluster it
 moves further out only if the graph outgrows a task's memory).
 
 Usage: python scripts/route_crossover.py [out_md]
-Appends a markdown table to SCALE.md by default.
+Prints a markdown table; appends it to ``out_md`` when given.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -34,11 +37,13 @@ def main() -> int:
     from datastore_mapper_spark.session import get_session
 
     def timed(cap: str, run) -> dict[str, float]:
-        """Wall-clock of ``run()`` with cap ``cap`` forced each way."""
+        """Wall-clock of ``run()`` with cap ``cap`` forced each way,
+        after one untimed warm-up run of that route."""
         saved, times = route.CAPS[cap], {}
         try:
             for name, value in [("single", 10**18), ("dist", -1)]:
                 route.CAPS[cap] = value
+                run()
                 t0 = time.time()
                 run()
                 times[name] = time.time() - t0
@@ -50,7 +55,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     lines = ["", "### Measured single-task vs distributed crossover "
-             "(round 10, this host: local[32])", "",
+             f"({spark.sparkContext.master}, {os.cpu_count()} cpus)", "",
              "| operator | size | single-task (s) | distributed (s) |",
              "| --- | --- | --- | --- |"]
 
@@ -85,12 +90,10 @@ def main() -> int:
 
     out = "\n".join(lines) + "\n"
     print(out)
-    if len(sys.argv) > 1 and sys.argv[1] == "-":
-        return 0
-    path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/SCALE.md"
-    with open(path, "a") as f:
-        f.write(out)
-    print(f"appended to {path}")
+    if len(sys.argv) > 1:
+        with open(sys.argv[1], "a") as f:
+            f.write(out)
+        print(f"appended to {sys.argv[1]}")
     return 0
 
 

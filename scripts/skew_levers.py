@@ -24,11 +24,12 @@ Usage: python scripts/skew_levers.py [n_rows] [hot_pct] [runs]
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -552,6 +552,30 @@ def test_deletion_vectors_merge_on_read(spark, tdir):
         == {(1, "X"), (5, "r5"), (6, "r6"), (9, "z")}
 
 
+def test_dv_read_builds_without_jobs(spark, tdir):
+    """Building :func:`read` on a DV table runs no job before an action:
+    the sidecars are read with their declared layout, not
+    schema-inferred, and that layout is the one parquet infers."""
+    acid_lite.create_table(
+        spark, tdir, _df(spark, [(i, f"r{i}") for i in range(1, 7)])
+        .coalesce(2))
+    v = acid_lite.delete_where_dv(spark, tdir, "k", lo=2, hi=3)
+    dvs = acid_lite._read_manifest(tdir, v)["dvs"]
+    sc = spark.sparkContext
+    group = "acid_dv_read_build"
+    sc.setJobGroup(group, "DV read build")
+    try:
+        df = acid_lite.read(spark, tdir)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group) or []) == []
+    assert {r.k for r in df.collect()} == {1, 4, 5, 6}
+    inferred = spark.read.parquet(
+        *[os.path.join(tdir, d) for d in dvs]).schema
+    assert acid_lite._read_dvs(spark, tdir, dvs).schema == inferred
+
+
 def test_deletion_vectors_in_change_data_feed(spark, tdir):
     """CDF across a DV commit: the file set is unchanged, so the
     deletes come from the DV DELTA, resolved back to row content;

@@ -26,3 +26,47 @@ def test_steady_state_headline_compiles_nothing(spark, sf_dir):
         if n:
             recompiled[name] = n
     assert recompiled == {}, f"steady-state recompiles: {recompiled}"
+
+
+def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """``importlib.invalidate_caches()`` (which every Spark Python worker
+    invocation runs) must not re-read an unchanged zip archive's
+    directory, and must still re-read one that changed, so a module
+    added to it imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import datastore_mapper_spark  # noqa: F401  (installs the guard)
+
+    archive = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zg_probe/__init__.py", "")
+        z.writestr("zg_probe/a.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or real(p))
+    try:
+        assert importlib.import_module("zg_probe.a").X == 1
+        importlib.invalidate_caches()  # first sight: read and record it
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads.count(archive) == 0
+
+        with zipfile.ZipFile(archive, "a") as z:
+            z.writestr("zg_probe/b.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        assert importlib.import_module("zg_probe.b").Y == 2
+    finally:
+        for name in ("zg_probe.b", "zg_probe.a", "zg_probe"):
+            sys.modules.pop(name, None)
+    from datastore_mapper_spark import _zipguard
+
+    _zipguard.install()  # idempotent: wraps the original only once
+    assert not hasattr(
+        zipimport.zipimporter.invalidate_caches.__wrapped__, "__wrapped__")
