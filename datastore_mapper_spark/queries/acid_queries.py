@@ -8,7 +8,8 @@ Both queries build their table from a DETERMINISTIC slice of the
 ``orders`` fixture, so a DuckDB oracle can state the expected
 post-merge / pre-merge contents directly from the source table —
 the filesystem round-trip (immutable data files + versioned
-manifests + O_EXCL commit) is what's actually under test.
+manifests + one-winner temp-and-link commit) is what's actually
+under test.
 """
 
 from __future__ import annotations

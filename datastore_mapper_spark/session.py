@@ -141,6 +141,8 @@ def get_session(
         # every job's and stage's metrics without it, and that is where
         # bench.py reads per-query executor time; the UI only binds a port
         .config("spark.ui.enabled", "false")
+        # no [Stage N:>...] console redraws: they flood non-terminal logs
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_MAX_ENTRIES))

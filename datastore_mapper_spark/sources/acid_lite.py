@@ -13,11 +13,15 @@ This module implements them the way the real formats do:
   vN keeps a consistent snapshot no matter how many commits land
   after it (files are immutable and never deleted by commits).
 * **Atomic exclusive commits.**  A commit writes its data files
-  first, then creates ``v{N}.json`` with ``O_CREAT|O_EXCL`` — the
-  POSIX primitive that makes exactly ONE winner when two writers race
-  to the same version (the loser gets ``FileExistsError`` →
-  :class:`CommitConflict`, re-reads the new latest, and retries or
-  surrenders — optimistic concurrency, same protocol as Delta).
+  first, then writes its manifest to a temp name and hard-links it to
+  ``v{N}.json`` (:func:`_create_json`).  ``link`` refuses an existing
+  name, so exactly ONE writer wins a race to the same version (the
+  loser gets ``FileExistsError`` → :class:`CommitConflict`, re-reads
+  the new latest, and retries or surrenders — optimistic concurrency,
+  same protocol as Delta), and a version name only ever holds a
+  complete manifest.  Every commit goes through :func:`_commit`, which
+  keeps the table's metadata from the parent unless the op changes
+  it.
 * **Copy-on-write MERGE with file-level pruning.**  ``merge_upsert``
   joins the source keys against ``input_file_name()`` to find the set
   of data files that CONTAIN matched keys; only those files are
@@ -186,9 +190,10 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
         dvs = add_dvs if add_dvs else ([] if purge_dvs else None)
         try:
             _commit(path, cur + 1, sorted(kept) + sorted(new_files),
-                    cur, op, dvs=dvs, dv_rows=add_dv_rows,
-                    partitions=new_partitions, schema=schema,
-                    mapping=mapping, dropped_physical=dropped_physical)
+                    cur, op, partitions=new_partitions, base=cm, dvs=dvs,
+                    dv_rows=add_dv_rows if dvs is not None else None,
+                    schema=schema, mapping=mapping,
+                    dropped_physical=dropped_physical)
             return cur + 1
         except CommitConflict:
             continue  # version race only: rebase again
@@ -203,16 +208,46 @@ def _manifest_path(path: str, version: int) -> str:
     return os.path.join(_manifest_dir(path), f"v{version}.json")
 
 
-def latest_version(path: str) -> int:
-    """Highest committed version, 0 if the table does not exist."""
+def _versions(path: str) -> list[int]:
+    """Every retained version, ascending: the ``v{N}.json`` names under
+    ``manifests/``.  Publish temp names (:func:`_create_json`) start
+    with a dot, so they never parse as a version."""
     mdir = _manifest_dir(path)
     if not os.path.isdir(mdir):
-        return 0
-    versions = [
-        int(f[1:-5]) for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    ]
-    return max(versions, default=0)
+        return []
+    return sorted(int(f[1:-5]) for f in os.listdir(mdir)
+                  if f.startswith("v") and f.endswith(".json"))
+
+
+def latest_version(path: str) -> int:
+    """Highest committed version, 0 if the table does not exist."""
+    return max(_versions(path), default=0)
+
+
+#: Suffix of the temp names :func:`_create_json` writes before linking.
+_TMP_SUFFIX = ".tmp"
+
+
+def _create_json(final: str, doc: dict) -> None:
+    """Create ``final`` holding ``doc`` — the one function that creates
+    a manifest or tag file.  The JSON is written to a temp name in the
+    same directory, then ``os.link`` publishes it under ``final``: the
+    link raises ``FileExistsError`` if ``final`` exists (one winner per
+    name, the O_EXCL guarantee) and a final name only ever holds a
+    complete file.  A failure before the link leaves only the temp
+    file, which :func:`remove_orphan_files` reaps after its grace
+    period."""
+    d, name = os.path.split(final)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:12]}{_TMP_SUFFIX}")
+    with open(tmp, "w") as f:
+        json.dump(doc, f, indent=1)
+    try:
+        os.link(tmp, final)
+    except FileExistsError:
+        os.unlink(tmp)
+        raise
+    os.unlink(tmp)
 
 
 def _read_manifest(path: str, version: int) -> dict:
@@ -666,158 +701,69 @@ def _assemble_stats_partitions(
     return stats, out_parts
 
 
-def _commit(path: str, version: int, files: list[str],
-            parent: int, op: str, schema: str | None = None,
-            dvs: list[str] | None = None, dv_rows: int = 0,
-            partition_by: list[str] | None = None,
-            partitions: dict | None = None,
-            specs: dict | None = None,
-            default_spec: str | None = None,
-            mapping: dict | None = None,
-            dropped_physical: list[str] | None = None,
-            constraints: dict | None = None,
-            generated: dict | None = None,
-            bloom_index: dict | None = None,
-            sort_order: list | None = None,
-            ndv_sketch: dict | None = None,
-            defaults: dict | None = None,
-            identity: dict | None = None) -> None:
-    """Atomically publish manifest ``version`` (O_EXCL = one winner).
-    ``schema`` (a DDL string) makes zero-file versions readable — an
-    empty table is a legal snapshot, not an error.
+#: Manifest keys that describe one commit rather than the table: a new
+#: manifest never inherits them from its base.
+_PER_COMMIT_KEYS = frozenset(
+    {"version", "parent", "op", "ts", "txn", "restore_of", "clone_of"})
 
-    Each manifest also carries per-file column min/max stats
-    (``stats``): carried-over files inherit the parent's entry
-    (files are immutable, so stats never go stale); newly written
-    files get theirs read from the parquet footer once, at commit
-    time.  Driver-side cost is file-count-sized, same as the file
-    list itself — the Iceberg manifest-entry shape.  Partitioned
-    tables additionally carry ``partition_by`` (the layout, fixed at
-    create) and per-file ``partitions`` values (``partitions`` arg =
-    the NEWLY written files' values; carried files inherit)."""
-    parent_stats: dict = {}
-    parent_txns: dict = {}
-    parent_partitions: dict = {}
-    parent_fspec: dict = {}
-    if parent:
-        pm = _read_manifest(path, parent)
-        if schema is None:
-            schema = pm.get("schema")
-        if partition_by is None:
-            partition_by = pm.get("partition_by")
-        if specs is None:
-            specs = pm.get("specs")
-            default_spec = pm.get("default_spec")
-        if mapping is None:
-            mapping = pm.get("mapping")
-        if dropped_physical is None:
-            dropped_physical = pm.get("dropped_physical")
-        if constraints is None:
-            # CHECK constraints carry through every commit kind; an
-            # explicit {} (drop_constraint) clears them
-            constraints = pm.get("constraints")
-        if generated is None:
-            generated = pm.get("generated")
-        if defaults is None:
-            # initial-defaults carry through every commit kind (the
-            # pre-evolution file population only shrinks)
-            defaults = pm.get("defaults")
-        if identity is None:
-            # identity high-waters carry through non-stamping commits
-            identity = pm.get("identity")
-        if sort_order is None:
-            sort_order = pm.get("sort_order")
-        if ndv_sketch is None:
-            ni = pm.get("ndv_sketch") or {}
-            fset2 = set(files)
-            ndv_sketch = {
-                c: {f: sc for f, sc in fm.items() if f in fset2}
-                for c, fm in ni.items()
-            } or None
-        if bloom_index is None:
-            # carry sidecar maps, DROPPING entries for removed files
-            bi = pm.get("bloom_index") or {}
-            fset = set(files)
-            bloom_index = {
-                c: {f: sc for f, sc in fm.items() if f in fset}
-                for c, fm in bi.items()
-            } or None
-        parent_stats = pm.get("stats") or {}
-        parent_txns = pm.get("txns") or {}
-        parent_partitions = pm.get("partitions") or {}
-        parent_fspec = pm.get("file_spec") or {}
-    file_spec = None
-    if specs is not None:
+
+def _commit(path: str, version: int, files: list[str], parent: int,
+            op: str, partitions: dict | None = None,
+            base: dict | None = None, **changes) -> None:
+    """Atomically publish manifest ``version`` — every commit lands
+    here.  Keep is the default: the manifest starts from ``base`` (the
+    parent's manifest; restore passes its target, clone its source),
+    drops the per-commit keys, and overrides only ``changes`` — a
+    ``None`` change keeps the base value, an empty one clears it
+    (``constraints={}`` on DROP CONSTRAINT).  Empty values are left
+    out of the payload.
+
+    Per-file maps are re-filtered to ``files``: carried files keep
+    their entries (files are immutable, so nothing goes stale), new
+    files get min/max ``stats`` read once from their parquet footers,
+    their writer's ``partitions`` values, and the default spec's
+    ``file_spec`` tag; ``bloom_index`` / ``ndv_sketch`` entries of
+    removed files drop.  Driver cost is file-count-sized — the
+    Iceberg manifest-entry shape.  Losing the version to another
+    writer raises :class:`CommitConflict`."""
+    if base is None:
+        base = _read_manifest(path, parent) if parent else {}
+    m = {k: v for k, v in base.items() if k not in _PER_COMMIT_KEYS}
+    m.update((k, v) for k, v in changes.items() if v is not None)
+    fset = set(files)
+    for key in ("bloom_index", "ndv_sketch"):
+        m[key] = {c: {f: sc for f, sc in fm.items() if f in fset}
+                  for c, fm in (m.get(key) or {}).items()}
+    if m.get("specs") is not None:
         # spec-evolved table: every file is tagged with the spec that
         # wrote it — carried files keep their tag, new files take the
         # current default spec (Iceberg spec-id semantics).  On the
-        # FIRST evolution the parent has no tags: its whole history is
+        # FIRST evolution the base has no tags: its whole history is
         # the implicit spec the evolution materialized as "1".
-        parent_files = set(pm["files"]) if parent else set()
-        fallback_old = (pm.get("default_spec") or "1") if parent else "1"
-        file_spec = {
-            f: parent_fspec.get(
-                f, fallback_old if f in parent_files else default_spec)
+        old = base.get("file_spec") or {}
+        base_files = set(base.get("files") or ())
+        fallback = base.get("default_spec") or "1"
+        m["file_spec"] = {
+            f: old.get(f, fallback if f in base_files
+                       else m.get("default_spec"))
             for f in files
         }
-    stats, out_parts = _assemble_stats_partitions(
-        path, files, schema, parent_stats, parent_partitions,
-        partition_by, partitions, specs=specs, file_spec=file_spec)
-    payload = {"version": version, "parent": parent, "op": op,
-               "files": files, "schema": schema, "stats": stats,
-               "ts": _commit_ts()}
-    if partition_by:
-        payload["partition_by"] = partition_by
-    if out_parts or partition_by:
-        payload["partitions"] = out_parts
-    if specs is not None:
-        payload["specs"] = specs
-        payload["default_spec"] = default_spec
-        payload["file_spec"] = file_spec
-    if mapping:
-        payload["mapping"] = mapping
-    if dropped_physical:
-        payload["dropped_physical"] = dropped_physical
-    if constraints:
-        payload["constraints"] = constraints
-    if generated:
-        payload["generated"] = generated
-    if defaults:
-        payload["defaults"] = defaults
-    if identity:
-        payload["identity"] = identity
-    if sort_order:
-        payload["sort_order"] = sort_order
-    if ndv_sketch:
-        payload["ndv_sketch"] = ndv_sketch
-    if bloom_index:
-        payload["bloom_index"] = bloom_index
-    if parent_txns:
-        # carry the txn-dedup map through NON-txn commits too, so the
-        # latest manifest stays authoritative across interleaved
-        # appends/merges and across snapshot expiry
-        payload["txns"] = parent_txns
-    if dvs is None and parent:
-        # deletion vectors carry through commits that do not purge or
-        # extend them (appends) — pm was read above when parent > 0
-        dvs = pm.get("dvs") or []
-        dv_rows = pm.get("dv_rows") or 0
-    if dvs:
-        payload["dvs"] = dvs
-        payload["dv_rows"] = dv_rows or 0
-    payload = json.dumps(payload, indent=1)
-    os.makedirs(_manifest_dir(path), exist_ok=True)
+    m["stats"], m["partitions"] = _assemble_stats_partitions(
+        path, files, m.get("schema"), base.get("stats") or {},
+        base.get("partitions") or {}, m.get("partition_by"), partitions,
+        specs=m.get("specs"), file_spec=m.get("file_spec"))
+    if not m.get("dvs"):
+        m.pop("dv_rows", None)
+    m.update(version=version, parent=parent, op=op, files=files,
+             ts=_commit_ts())
+    payload = {k: v for k, v in m.items()
+               if k in ("files", "schema", "stats")
+               or v not in (None, {}, [])}
     try:
-        fd = os.open(
-            _manifest_path(path, version),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-        )
+        _create_json(_manifest_path(path, version), payload)
     except FileExistsError as exc:
         raise CommitConflict(
-            f"version {version} already committed at {path}"
-        ) from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(payload)
+            f"version {version} already committed at {path}") from exc
 
 
 def _stamp_identity(df: DataFrame, identity: dict):
@@ -982,13 +928,29 @@ def append(spark: SparkSession, path: str, df: DataFrame,
            retries: int = 3) -> int:
     """Append-only commit: parent files carry over by reference.  On a
     nonexistent table (parent 0) the append CREATES it — the v1 commit
-    still goes through the same O_EXCL gate, so an append racing a
-    create has exactly one winner and the loser retries as a normal
+    still goes through the same one-winner publish, so an append racing
+    a create has exactly one winner and the loser retries as a normal
     append against the winner's manifest.  On a partitioned table the
     new rows split through the same hive-layout writer as create."""
+    return _append(path, df, retries)
+
+
+def _append(path: str, df: DataFrame, retries: int,
+            txn_id: str | None = None) -> int:
+    """The one append body behind :func:`append` and
+    :func:`append_idempotent`: identity stamping, the write-side gate
+    (:func:`_prepare_batch` — generated columns, CHECK constraints),
+    one data write, then the commit retry loop.  With ``txn_id`` the
+    commit also records the txn tag, and a txn found already committed
+    (before the write, or as the winner of a lost race) returns its
+    version instead."""
     os.makedirs(path, exist_ok=True)
     parent0 = latest_version(path)
     pm0 = _read_manifest(path, parent0) if parent0 else {}
+    if txn_id is not None:
+        seen = _known_txns(path, pm0)
+        if txn_id in seen:
+            return seen[txn_id]  # re-delivery: nothing written
     ident = pm0.get("identity")
     ident_state = None
     if ident:
@@ -1002,7 +964,24 @@ def append(spark: SparkSession, path: str, df: DataFrame,
     for _ in range(retries + 1):
         parent = latest_version(path)
         pm = _read_manifest(path, parent) if parent else {}
-        parent_files = pm.get("files") or []
+        txn_keys = {}
+        if txn_id is not None:
+            seen = _known_txns(path, pm)
+            if txn_id in seen:
+                # the race winner was OUR txn (another worker
+                # delivering the same batch): reclaim the files we
+                # wrote now — expire_snapshots only deletes files that
+                # expired manifests reference, so nothing else ever
+                # would (round-11 ADVICE: orphan-file leak)
+                for f in files:
+                    try:
+                        os.unlink(os.path.join(path, f))
+                    except FileNotFoundError:
+                        pass
+                _cleanup_empty_dir(path, files)
+                return seen[txn_id]
+            txn_keys = {"txn": txn_id,
+                        "txns": {**seen, txn_id: parent + 1}}
         if ident:
             # identity is the one append state file-set comparison
             # cannot see: a racer that stamped from the same
@@ -1019,9 +998,10 @@ def append(spark: SparkSession, path: str, df: DataFrame,
                     df, path, pm0.get("partition_by"),
                     mapping=pm0.get("mapping"))
         try:
-            _commit(path, parent + 1, parent_files + files, parent,
-                    "append", schema=schema if not parent else None,
-                    partitions=parts, identity=ident_state)
+            _commit(path, parent + 1, (pm.get("files") or []) + files,
+                    parent, "append", partitions=parts, base=pm,
+                    schema=schema if not parent else None,
+                    identity=ident_state, **txn_keys)
             return parent + 1
         except CommitConflict:
             continue  # blind append composes with anything: retry
@@ -1121,6 +1101,12 @@ def merge_upsert(
             "them before a copy-on-write MERGE (the CoW rewrite reads "
             "touched files directly and would resurrect deleted rows)"
         )
+    if manifest.get("identity"):
+        # the rewrite would write inserted rows without engine-assigned
+        # values (NULL identities) or fail at analysis on the union
+        raise ValueError(
+            "merges do not assign IDENTITY values — use append for new "
+            "rows on a table with identity columns")
     src = _checked_merge_source(source, key)
     if manifest.get("generated"):
         src = _apply_generated_cols(
@@ -1172,7 +1158,7 @@ def optimize(
     table format's atomic commit instead of a bare directory swap).
 
     Concurrency: OPTIMIZE races writers like any commit — if another
-    commit lands first, the O_EXCL gate rejects ours and
+    commit lands first, the one-winner publish rejects ours and
     :class:`CommitConflict` propagates.  Re-running against the new
     latest is always safe (compaction is idempotent on content).
     Returns the committed version (the parent itself when the table
@@ -1595,11 +1581,7 @@ def expire_snapshots(path: str, keep_from: int) -> dict:
     if keep_from > latest:
         raise ValueError(f"keep_from {keep_from} > latest {latest}")
     retained_files: set[str] = set()
-    all_versions = []
-    mdir = _manifest_dir(path)
-    for fname in os.listdir(mdir):
-        if fname.startswith("v") and fname.endswith(".json"):
-            all_versions.append(int(fname[1:-5]))
+    all_versions = _versions(path)
     # TAGGED snapshots are retention-pinned until their tag drops
     # (Iceberg per-ref retention): their manifests stay readable and
     # their files stay out of the delete set
@@ -1615,7 +1597,7 @@ def expire_snapshots(path: str, keep_from: int) -> dict:
     # read of the branch breaks (round-14 ADVICE)
     retained_files.update(_branch_retained_rel(path))
     n_manifests = n_files = 0
-    for v in sorted(all_versions):
+    for v in all_versions:
         if v >= keep_from or v in tagged:
             continue
         em = _read_manifest(path, v)
@@ -1656,72 +1638,29 @@ def append_idempotent(spark: SparkSession, path: str, df: DataFrame,
     """Exactly-once append: a commit tagged ``txn_id`` lands at most
     once per table — re-delivery of the same transaction (a retried
     streaming micro-batch, a replayed job) finds the tag in the
-    manifest chain and returns the already-committed version without
-    writing.  This is the Delta ``txnAppId``/``txnVersion`` dedup
-    protocol: the sink's idempotence lives in the TABLE's commit
-    metadata, not in fragile sink-side state, so it survives driver
-    restarts and checkpoint loss.
-
-    The chain walk is manifest-count-sized (driver-side JSON reads);
-    at production version counts the real formats index txn tags in
-    the latest snapshot — same semantics, amortized lookup."""
-    os.makedirs(path, exist_ok=True)
-    files: list[str] | None = None
-    parts: dict | None = None
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        seen = _known_txns(path, parent)
-        if txn_id in seen:
-            # already committed: no-op re-delivery.  If WE wrote data
-            # before losing the race to our own txn (another worker
-            # delivering the same batch), reclaim the never-referenced
-            # files now — expire_snapshots only deletes files that
-            # expired manifests reference, so nothing else ever would
-            # (round-11 ADVICE: orphan-file leak).
-            if files is not None:
-                for f in files:
-                    try:
-                        os.unlink(os.path.join(path, f))
-                    except FileNotFoundError:
-                        pass
-                _cleanup_empty_dir(path, files)
-            return seen[txn_id]
-        if files is None:  # write the data at most once across retries
-            pmi = _read_manifest(path, parent) if parent else {}
-            files, parts = _write_files_any(
-                df, path, pmi.get("partition_by"),
-                mapping=pmi.get("mapping"))
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        )
-        parent_files = _read_manifest(path, parent)["files"] if parent else []
-        payload_schema = schema if not parent else None
-        try:
-            _commit_txn(path, parent + 1, parent_files + files, parent,
-                        "append", txn_id, schema=payload_schema,
-                        txns={**seen, txn_id: parent + 1},
-                        partitions=parts)
-            return parent + 1
-        except CommitConflict:
-            continue  # re-check: the race winner may be OUR txn
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+    latest manifest's txn map and returns the already-committed
+    version without writing.  This is the Delta
+    ``txnAppId``/``txnVersion`` dedup protocol: the sink's idempotence
+    lives in the TABLE's commit metadata, not in fragile sink-side
+    state, so it survives driver restarts and checkpoint loss.
+    Otherwise it is exactly :func:`append` — same identity stamping,
+    constraint and generated-column gate, and commit."""
+    return _append(path, df, retries, txn_id=txn_id)
 
 
-def _known_txns(path: str, version: int) -> dict[str, int]:
-    """All transaction tags visible at ``version``: the manifest's
-    carried-forward ``txns`` map (every txn commit copies its
-    parent's map and adds itself, so the LATEST manifest alone is
-    authoritative — O(1) per lookup and immune to snapshot expiry,
-    the same reason Delta keeps txn state in the snapshot).  Legacy
-    manifests without the map fall back to a chain walk that stops
-    cleanly at an expired (missing) ancestor."""
-    if version == 0:
-        return {}
-    m = _read_manifest(path, version)
-    if "txns" in m:
-        return dict(m["txns"])
+def _known_txns(path: str, m: dict) -> dict[str, int]:
+    """All transaction tags visible at manifest ``m`` (``{}`` for no
+    table): its carried-forward ``txns`` map (every txn commit copies
+    its parent's map and adds itself, and every other commit keeps
+    it, so the LATEST manifest alone is authoritative — O(1) per
+    lookup and immune to snapshot expiry, the same reason Delta keeps
+    txn state in the snapshot).  Manifests without the map fall back
+    to a chain walk that stops cleanly at an expired (missing)
+    ancestor."""
+    if not m or "txns" in m:
+        return dict(m.get("txns") or {})
     out: dict[str, int] = {}
-    v = version
+    v = m["version"]
     while v > 0:
         try:
             m = _read_manifest(path, v)
@@ -1731,49 +1670,6 @@ def _known_txns(path: str, version: int) -> dict[str, int]:
             out[m["txn"]] = v
         v = m.get("parent", 0)
     return out
-
-
-def _commit_txn(path: str, version: int, files: list[str], parent: int,
-                op: str, txn_id: str, schema: str | None = None,
-                txns: dict[str, int] | None = None,
-                partitions: dict | None = None) -> None:
-    """`_commit` plus a transaction tag AND the carried-forward txn
-    map in the manifest payload."""
-    parent_stats: dict = {}
-    parent_partitions: dict = {}
-    partition_by: list[str] | None = None
-    if parent:
-        pm = _read_manifest(path, parent)
-        if schema is None:
-            schema = pm.get("schema")
-        partition_by = pm.get("partition_by")
-        parent_stats = pm.get("stats") or {}
-        parent_partitions = pm.get("partitions") or {}
-    stats, out_parts = _assemble_stats_partitions(
-        path, files, schema, parent_stats, parent_partitions,
-        partition_by, partitions)
-    payload = {"version": version, "parent": parent, "op": op,
-               "files": files, "schema": schema, "stats": stats,
-               "ts": _commit_ts(), "txn": txn_id,
-               "txns": txns if txns is not None else {txn_id: version}}
-    if partition_by:
-        payload["partition_by"] = partition_by
-        payload["partitions"] = out_parts
-    if parent:
-        pm2 = _read_manifest(path, parent)
-        if pm2.get("dvs"):
-            payload["dvs"] = pm2["dvs"]
-            payload["dv_rows"] = pm2.get("dv_rows") or 0
-    payload = json.dumps(payload, indent=1)
-    os.makedirs(_manifest_dir(path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(path, version),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version {version} already committed at {path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(payload)
 
 
 def optimize_zorder(
@@ -2681,7 +2577,7 @@ def merge_three_way(
        their stale rows (write cost ∝ stale rows) instead of a whole-
        file rewrite — the Iceberg-v2 merge-on-read MERGE shape.
 
-    The commit is still one O_EXCL manifest; a concurrent commit that
+    The commit is still one manifest publish; a concurrent commit that
     removed a touched/dropped file or changed the DV set raises
     :class:`ConcurrentModification`.
 
@@ -2708,6 +2604,12 @@ def merge_three_way(
             "them before a copy-on-write MERGE (the CoW rewrite reads "
             "touched files directly and would resurrect deleted rows)"
         )
+    if manifest.get("identity"):
+        # the rewrite would write inserted rows without engine-assigned
+        # values (NULL identities) or fail at analysis on the union
+        raise ValueError(
+            "merges do not assign IDENTITY values — use append for new "
+            "rows on a table with identity columns")
     src = _checked_merge_source(source, key)
     if manifest.get("generated"):
         src = _apply_generated_cols(
@@ -2848,7 +2750,7 @@ def merge_three_way(
 def _commit_ts() -> float:
     """Wall-clock commit timestamp (epoch seconds).  Strictly
     informational for AS OF resolution — ordering authority is always
-    the version number (clocks skew; versions are the O_EXCL truth)."""
+    the version number (clocks skew; versions are the one-winner truth)."""
     import time
 
     return time.time()
@@ -2859,23 +2761,19 @@ def version_as_of(path: str, ts: float) -> int:
     at or before it — Delta's ``TIMESTAMP AS OF`` / Iceberg's
     snapshot-at-timestamp lookup.  Versions are scanned in order and
     the commit ``ts`` is taken as monotone per table (commits are
-    serialized by the O_EXCL gate; a skewed clock can only mis-place a
-    version against WALL time, never against other versions, because
-    the max-version-with-ts<=t rule breaks ties toward the newest
-    eligible version).  Raises when ``ts`` predates the first retained
-    commit (same contract as time travel to an expired version)."""
+    serialized by the one-winner publish; a skewed clock can only
+    mis-place a version against WALL time, never against other
+    versions, because the max-version-with-ts<=t rule breaks ties
+    toward the newest eligible version).  Raises when ``ts`` predates
+    the first retained commit (same contract as time travel to an
+    expired version)."""
     latest = latest_version(path)
     if latest == 0:
         raise ValueError(f"table does not exist: {path}")
     best = None
-    mdir = _manifest_dir(path)
-    for fname in os.listdir(mdir):
-        if not (fname.startswith("v") and fname.endswith(".json")):
-            continue
-        v = int(fname[1:-5])
-        m = _read_manifest(path, v)
-        mts = m.get("ts")
-        if mts is not None and mts <= ts and (best is None or v > best):
+    for v in _versions(path):
+        mts = _read_manifest(path, v).get("ts")
+        if mts is not None and mts <= ts:
             best = v
     if best is None:
         raise ValueError(
@@ -2889,45 +2787,6 @@ def read_as_of(spark: SparkSession, path: str, ts: float) -> DataFrame:
     """``SELECT ... TIMESTAMP AS OF ts``: snapshot read of the latest
     version committed at or before the wall-clock timestamp."""
     return read(spark, path, version=version_as_of(path, ts))
-
-
-def tag_version(path: str, name: str, version: int | None = None) -> int:
-    """Tag a committed version with a stable name (Iceberg tags /
-    Delta named snapshots): ``tags/<name>.json`` records the version;
-    readers resolve the tag instead of remembering a number, and
-    VACUUM policy can key retention off tags.  Tags are immutable —
-    re-tagging an existing name raises (create a new name); the tag
-    file is written with the same O_EXCL primitive as manifests."""
-    v = latest_version(path) if version is None else version
-    if not os.path.exists(_manifest_path(path, v)):
-        raise ValueError(f"version {v} not committed at {path}")
-    tdir = os.path.join(path, "tags")
-    os.makedirs(tdir, exist_ok=True)
-    safe = name.replace("/", "_")
-    try:
-        fd = os.open(os.path.join(tdir, f"{safe}.json"),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ValueError(f"tag '{name}' already exists at {path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps({"name": name, "version": v}))
-    return v
-
-
-def resolve_tag(path: str, name: str) -> int:
-    """Tag name -> version number; raises on an unknown tag."""
-    safe = name.replace("/", "_")
-    tpath = os.path.join(path, "tags", f"{safe}.json")
-    try:
-        with open(tpath) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError as exc:
-        raise ValueError(f"unknown tag '{name}' at {path}") from exc
-
-
-def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Snapshot read of a tagged version (``VERSION AS OF <tag>``)."""
-    return read(spark, path, version=resolve_tag(path, name))
 
 
 def prune_files_source(
@@ -3029,46 +2888,15 @@ def shallow_clone(src_path: str, dst_path: str,
         return f if os.path.isabs(f) else os.path.join(src_root, f)
 
     files = [_abs(f) for f in m["files"]]
-    remap = dict(zip(m["files"], files))
+    # the source manifest is the base, its per-file maps re-keyed to
+    # the absolute refs; index sidecars (bloom / NDV) stay keyed by
+    # source-relative paths, so the commit's re-filter drops them
+    base = {**m, "files": files}
+    for key in ("stats", "partitions", "file_spec"):
+        base[key] = {_abs(f): e for f, e in (m.get(key) or {}).items()}
     os.makedirs(dst_path, exist_ok=True)
-    payload = {
-        "version": 1, "parent": 0, "op": "clone",
-        "files": files, "schema": m["schema"],
-        "stats": {remap[f]: s for f, s in (m.get("stats") or {}).items()
-                  if f in remap},
-        "ts": _commit_ts(),
-        "clone_of": {"path": src_root, "version": v},
-    }
-    if m.get("partition_by"):
-        payload["partition_by"] = m["partition_by"]
-    if m.get("partitions"):
-        payload["partitions"] = {
-            remap[f]: p for f, p in m["partitions"].items() if f in remap
-        }
-    if m.get("specs") is not None:
-        payload["specs"] = m["specs"]
-        payload["default_spec"] = m.get("default_spec")
-        payload["file_spec"] = {
-            remap[f]: s for f, s in (m.get("file_spec") or {}).items()
-            if f in remap
-        }
-    if m.get("mapping"):
-        payload["mapping"] = m["mapping"]
-    if m.get("dropped_physical"):
-        payload["dropped_physical"] = m["dropped_physical"]
-    if m.get("constraints"):
-        payload["constraints"] = m["constraints"]  # guards clone too
-    if m.get("generated"):
-        payload["generated"] = m["generated"]
-    os.makedirs(_manifest_dir(dst_path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(dst_path, 1),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version 1 already committed at {dst_path}") from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps(payload, indent=1))
+    _commit(dst_path, 1, files, 0, "clone", base=base,
+            clone_of={"path": src_root, "version": v})
     return 1
 
 
@@ -3086,7 +2914,9 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     is the safety contract: a writer that has written but not yet
     committed holds files that look orphaned — a freshly-written file
     must never be swept, so anything younger than the grace window is
-    kept (the same mtime rule the real procedure uses).  Returns
+    kept (the same mtime rule the real procedure uses).  Publish temp
+    files a crashed commit left in ``manifests/`` or ``tags/`` sweep by
+    the same rule; nothing else there is touched.  Returns
     {"files_removed": n, "bytes_removed": n}."""
     import time
 
@@ -3094,17 +2924,15 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     if latest == 0:
         raise ValueError(f"table does not exist: {path}")
     referenced: set[str] = set()
-    mdir = _manifest_dir(path)
-    for fname in os.listdir(mdir):
-        if fname.startswith("v") and fname.endswith(".json"):
-            m = _read_manifest(path, int(fname[1:-5]))
-            referenced.update(m["files"])
-            referenced.update(m.get("dvs") or [])
-            # index sidecars referenced by any retained version stay
-            for fm in (m.get("bloom_index") or {}).values():
-                referenced.update(sc for sc in fm.values() if sc)
-            for fm in (m.get("ndv_sketch") or {}).values():
-                referenced.update(sc for sc in fm.values() if sc)
+    for v in _versions(path):
+        m = _read_manifest(path, v)
+        referenced.update(m["files"])
+        referenced.update(m.get("dvs") or [])
+        # index sidecars referenced by any retained version stay
+        for fm in (m.get("bloom_index") or {}).values():
+            referenced.update(sc for sc in fm.values() if sc)
+        for fm in (m.get("ndv_sketch") or {}).values():
+            referenced.update(sc for sc in fm.values() if sc)
     # live branches reference fork-point files in THIS table's tree —
     # they are not orphans while any branch version can read them
     # (round-14 ADVICE; same translation as expire_snapshots)
@@ -3118,7 +2946,8 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     wap_dirs = [d for d in os.listdir(path)
                 if d.startswith("wap-")
                 and os.path.isdir(os.path.join(path, d))]
-    for sub in ("data", "dv", "blooms", "ndv", *wap_dirs):
+    ref_dirs = ("manifests", "tags")
+    for sub in ("data", "dv", "blooms", "ndv", *wap_dirs, *ref_dirs):
         root = os.path.join(path, sub)
         if not os.path.isdir(root):
             continue
@@ -3126,7 +2955,8 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
             for fn in fnames:
                 full = os.path.join(dirpath, fn)
                 rel = os.path.relpath(full, path)
-                if rel in referenced:
+                if rel in referenced or (
+                        sub in ref_dirs and not fn.endswith(_TMP_SUFFIX)):
                     continue
                 try:
                     st = os.stat(full)
@@ -3156,13 +2986,7 @@ def describe_history(path: str) -> list[dict]:
     if latest == 0:
         raise ValueError(f"table does not exist: {path}")
     out = []
-    mdir = _manifest_dir(path)
-    versions = sorted(
-        (int(f[1:-5]) for f in os.listdir(mdir)
-         if f.startswith("v") and f.endswith(".json")),
-        reverse=True,
-    )
-    for v in versions:
+    for v in reversed(_versions(path)):
         m = _read_manifest(path, v)
         stats = m.get("stats") or {}
         rows = 0
@@ -3334,23 +3158,6 @@ def drop_constraint(path: str, name: str, retries: int = 3) -> int:
 # RESTORE (Delta RESTORE TABLE ... TO VERSION/TIMESTAMP AS OF)
 # --------------------------------------------------------------------
 
-def _write_manifest_payload(path: str, payload: dict) -> None:
-    """O_EXCL manifest publish of a pre-assembled payload — the same
-    one-winner gate as :func:`_commit`, for commits (restore, clone)
-    whose metadata is copied from another snapshot rather than
-    derived from the parent."""
-    os.makedirs(_manifest_dir(path), exist_ok=True)
-    try:
-        fd = os.open(_manifest_path(path, payload["version"]),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise CommitConflict(
-            f"version {payload['version']} already committed at {path}"
-        ) from exc
-    with os.fdopen(fd, "w") as f:
-        f.write(json.dumps(payload, indent=1))
-
-
 def _validate_restore_constraints(spark: SparkSession, path: str,
                                   tm: dict, cons: dict) -> None:
     """Revalidate a restore TARGET snapshot against the constraints
@@ -3407,7 +3214,9 @@ def restore_table(path: str, version: int | None = None,
     resurrect an already-applied streaming epoch."""
     if (version is None) == (tag is None):
         raise ValueError("pass exactly one of version= / tag=")
-    v = resolve_tag(path, tag) if tag is not None else int(version)
+    v = list_tags(path).get(tag) if tag is not None else int(version)
+    if v is None:
+        raise ValueError(f"unknown tag '{tag}' at {path}")
     if latest_version(path) == 0:
         raise ValueError(f"table does not exist: {path}")
     if not os.path.exists(_manifest_path(path, v)):
@@ -3423,8 +3232,6 @@ def restore_table(path: str, version: int | None = None,
         raise ValueError(
             f"cannot restore {path} to v{v}: {len(missing)} data "
             f"file(s) were vacuumed (e.g. {sorted(missing)[:2]})")
-    drop = {"version", "parent", "op", "ts", "txns", "constraints",
-            "restore_of"}
     validated: dict | None = None
     for _ in range(retries + 1):
         parent = latest_version(path)
@@ -3437,15 +3244,10 @@ def restore_table(path: str, version: int | None = None,
                     "spark= to revalidate the restored snapshot")
             _validate_restore_constraints(spark, path, tm, kept_cons)
             validated = dict(kept_cons)
-        payload = {k: val for k, val in tm.items() if k not in drop}
-        payload.update(version=parent + 1, parent=parent, op="restore",
-                       ts=_commit_ts(), restore_of=v)
-        if pm.get("txns"):
-            payload["txns"] = pm["txns"]
-        if pm.get("constraints"):
-            payload["constraints"] = pm["constraints"]
         try:
-            _write_manifest_payload(path, payload)
+            _commit(path, parent + 1, tm["files"], parent, "restore",
+                    base=tm, restore_of=v, txns=pm.get("txns") or {},
+                    constraints=kept_cons)
             return parent + 1
         except CommitConflict:
             continue
@@ -3728,11 +3530,8 @@ def _live_branch_refs_abs(path: str) -> set[str]:
     refs: set[str] = set()
     for name in list_branches(path):
         bp = branch_path(path, name)
-        mdir = _manifest_dir(bp)
-        for fname in os.listdir(mdir):
-            if not (fname.startswith("v") and fname.endswith(".json")):
-                continue
-            m = _read_manifest(bp, int(fname[1:-5]))
+        for v in _versions(bp):
+            m = _read_manifest(bp, v)
             raw = list(m["files"]) + list(m.get("dvs") or [])
             for key in ("bloom_index", "ndv_sketch"):
                 for fm in (m.get(key) or {}).values():
@@ -3815,20 +3614,20 @@ def create_tag(path: str, name: str, version: int | None = None) -> int:
     """CREATE TAG — an IMMUTABLE named ref to one snapshot (Iceberg's
     ``tags``, the read-only sibling of :func:`create_branch`): a
     release/audit label like ``v2024-q3`` that keeps reading the same
-    rows forever.  One JSON ref file, O_EXCL so racing creators have
-    exactly one winner; re-pointing requires drop + re-create, the
-    immutability contract.  A tagged snapshot is RETAINED by
-    :func:`expire_snapshots` until the tag drops (per-ref retention,
-    the Iceberg rule), so tagging is how a compliance snapshot
-    survives routine VACUUM.  Returns the tagged version."""
+    rows forever.  One JSON ref file, created by the same exclusive
+    publish as manifests so racing creators have exactly one winner;
+    re-pointing requires drop + re-create, the immutability contract.
+    A tagged snapshot is RETAINED by :func:`expire_snapshots` until the
+    tag drops (per-ref retention, the Iceberg rule), so tagging is how
+    a compliance snapshot survives routine VACUUM.  Returns the tagged
+    version."""
     if not _BRANCH_NAME_RE.match(name):
         raise ValueError(f"invalid tag name: {name!r}")
     v = latest_version(path) if version is None else version
     _read_manifest(path, v)  # must exist (raises otherwise)
-    os.makedirs(_tag_dir(path), exist_ok=True)
-    ref = os.path.join(_tag_dir(path), f"{name}.json")
-    with open(ref, "x") as f:   # O_EXCL: one winner, tags are immutable
-        json.dump({"version": v}, f)
+    # one winner, tags are immutable: FileExistsError on a re-create
+    _create_json(os.path.join(_tag_dir(path), f"{name}.json"),
+                 {"version": v})
     return v
 
 

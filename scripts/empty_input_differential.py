@@ -29,7 +29,9 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SCHEMA_SRC = "/root/testdata/sf0.001"
+# same source and default as the pytest fixtures (tests/conftest.py)
+SCHEMA_SRC = os.environ.get(
+    "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def make_empty_fixtures() -> str:

@@ -669,19 +669,19 @@ def test_append_idempotent_reclaims_orphans(spark, tdir, monkeypatch):
     committed by a concurrent deliverer, must reclaim the
     never-referenced files (round-11 ADVICE: nothing else ever would)."""
     acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
-    orig_commit = acid_lite._commit_txn
+    orig_commit = acid_lite._commit
     state = {"raced": False}
 
-    def racing_commit(path, version, files, parent, op, txn_id, **kw):
+    def racing_commit(path, version, files, parent, op, **kw):
         if not state["raced"]:
             state["raced"] = True
             # the concurrent deliverer lands the SAME txn first
             acid_lite.append_idempotent(
                 spark, tdir, _df(spark, [(2, "b")]), txn_id="batch-7")
             raise acid_lite.CommitConflict("simulated version race")
-        return orig_commit(path, version, files, parent, op, txn_id, **kw)
+        return orig_commit(path, version, files, parent, op, **kw)
 
-    monkeypatch.setattr(acid_lite, "_commit_txn", racing_commit)
+    monkeypatch.setattr(acid_lite, "_commit", racing_commit)
     v = acid_lite.append_idempotent(
         spark, tdir, _df(spark, [(2, "b")]), txn_id="batch-7")
     m = acid_lite._read_manifest(tdir, acid_lite.latest_version(tdir))
@@ -927,17 +927,17 @@ def test_timestamp_as_of_and_tags(spark, tdir):
     with pytest.raises(ValueError, match="no retained version"):
         acid_lite.version_as_of(tdir, t1 - 3600)
     # tags: name a version, read through it, immutability enforced
-    acid_lite.tag_version(tdir, "audit-2024Q1", version=2)
-    assert acid_lite.resolve_tag(tdir, "audit-2024Q1") == 2
+    assert acid_lite.create_tag(tdir, "audit-2024Q1", version=2) == 2
+    assert acid_lite.list_tags(tdir) == {"audit-2024Q1": 2}
     assert {r.k for r in
             acid_lite.read_tag(spark, tdir, "audit-2024Q1").collect()} \
         == {1, 2}
-    with pytest.raises(ValueError, match="already exists"):
-        acid_lite.tag_version(tdir, "audit-2024Q1", version=3)
+    with pytest.raises(FileExistsError):
+        acid_lite.create_tag(tdir, "audit-2024Q1", version=3)
     with pytest.raises(ValueError, match="unknown tag"):
-        acid_lite.resolve_tag(tdir, "nope")
-    with pytest.raises(ValueError, match="not committed"):
-        acid_lite.tag_version(tdir, "future", version=99)
+        acid_lite.read_tag(spark, tdir, "nope")
+    with pytest.raises(FileNotFoundError):
+        acid_lite.create_tag(tdir, "future", version=99)
 
 
 def test_partition_transforms_hidden_bucket_truncate_month(spark, tdir):
@@ -1543,7 +1543,7 @@ def test_restore_metadata_only_history_preserving(spark, tdir):
     ops = [h["op"] for h in acid_lite.describe_history(tdir)]
     assert ops[0] == "restore" and "merge" in ops
     # restore-to-tag resolves the same way
-    acid_lite.tag_version(tdir, "good", 1)
+    acid_lite.create_tag(tdir, "good", 1)
     rv2 = acid_lite.restore_table(tdir, tag="good", spark=spark)
     assert acid_lite._read_manifest(tdir, rv2)["restore_of"] == 1
     with pytest.raises(ValueError):
@@ -2824,3 +2824,182 @@ def test_identity_restamps_when_losing_append_race(spark, tdir,
     rows = {r.k: r.sid for r in acid_lite.read(spark, tdir).collect()}
     assert len(set(rows.values())) == 3, rows       # no collision
     assert rows[3] > rows[2] > rows[1]
+
+
+# --------------------------------------------------------------------
+# One publish path: every commit keeps the table's metadata, and a
+# manifest name only ever holds a complete manifest
+# --------------------------------------------------------------------
+
+_FEATURES = ("mapping", "constraints", "generated", "identity", "sort_order")
+_WRITE_OPS = ("append", "append_idempotent", "merge_upsert",
+              "delete_where_dv", "optimize", "restore_table")
+#: Keys of one commit or one file set, never table metadata.
+_NOT_TABLE_KEYS = {"version", "parent", "op", "ts", "txn", "restore_of",
+                   "clone_of", "files", "stats", "partitions", "file_spec",
+                   "bloom_index", "ndv_sketch"}
+#: Table keys each op is meant to change.
+_OP_CHANGES = {"append": {"identity"},
+               "append_idempotent": {"identity", "txns"},
+               "merge_upsert": set(), "delete_where_dv": {"dvs", "dv_rows"},
+               "optimize": set(), "restore_table": set()}
+#: (id, v) rows each op leaves on the feature table, whose rows are
+#: {1: 10, 2: 20, 4: 40} before it; append_idempotent's equivalent
+#: plain op is append, and restore_table goes back past an append of 3.
+_BASE_ROWS = {1: 10, 2: 20, 4: 40}
+_OP_ROWS = {"append": {**_BASE_ROWS, 3: 30},
+            "append_idempotent": {**_BASE_ROWS, 3: 30},
+            "merge_upsert": {**_BASE_ROWS, 2: 25, 3: 30},
+            "delete_where_dv": {1: 10, 4: 40},
+            "optimize": _BASE_ROWS, "restore_table": _BASE_ROWS}
+
+
+def _vcol(feature: str) -> str:
+    return "val" if feature == "mapping" else "v"
+
+
+@pytest.fixture(scope="module")
+def feature_tables(spark, tmp_path_factory):
+    """One two-file table per metadata feature, built once; each case
+    copies it and runs one write op on the copy."""
+    root = tmp_path_factory.mktemp("features")
+    out = {}
+    for feat in _FEATURES:
+        t = str(root / feat)
+        mk = lambda rows: spark.createDataFrame(
+            rows, "id bigint, v bigint").coalesce(1)
+        acid_lite.create_table(
+            spark, t, mk([(1, 10), (2, 20)]),
+            generated={"g": "v * 2"} if feat == "generated" else None,
+            identity=({"rid": {"start": 1, "step": 1}}
+                      if feat == "identity" else None))
+        acid_lite.append(spark, t, mk([(4, 40)]))
+        if feat == "mapping":
+            acid_lite.rename_column(t, "v", "val")
+        elif feat == "constraints":
+            acid_lite.add_check_constraint(spark, t, "v_pos", "v > 0")
+        elif feat == "sort_order":
+            acid_lite.set_sort_order(t, ["v"])
+        out[feat] = t
+    return out
+
+
+@pytest.mark.parametrize("feature", _FEATURES)
+@pytest.mark.parametrize("op", _WRITE_OPS)
+def test_every_write_op_keeps_table_metadata(spark, tmp_path,
+                                             feature_tables, op, feature):
+    """Each write op commits through the one keep-by-default publish:
+    the new manifest keeps every table key the op does not mean to
+    change, and the table reads the rows the equivalent plain op gives.
+    append_idempotent used to commit through a second writer that
+    dropped mapping (rows read NULL), constraints and identity, and
+    skipped the CHECK / generated-column / identity gate."""
+    import shutil
+
+    t = str(tmp_path / "t")
+    shutil.copytree(feature_tables[feature], t)
+    vcol = _vcol(feature)
+    batch = lambda rows: spark.createDataFrame(
+        rows, f"id bigint, {vcol} bigint").coalesce(1)
+    if op == "restore_table":
+        target = acid_lite.latest_version(t)
+        acid_lite.append(spark, t, batch([(3, 30)]))
+    parent = acid_lite.latest_version(t)
+    if op == "merge_upsert" and feature == "identity":
+        with pytest.raises(ValueError, match="IDENTITY"):
+            acid_lite.merge_upsert(spark, t, batch([(3, 30)]), key="id")
+        assert acid_lite.latest_version(t) == parent
+        return
+    if op == "append":
+        v = acid_lite.append(spark, t, batch([(3, 30)]))
+    elif op == "append_idempotent":
+        v = acid_lite.append_idempotent(spark, t, batch([(3, 30)]), "tx1")
+        assert acid_lite.append_idempotent(
+            spark, t, batch([(3, 30)]), "tx1") == v  # re-delivery
+    elif op == "merge_upsert":
+        v = acid_lite.merge_upsert(
+            spark, t, batch([(2, 25), (3, 30)]), key="id")
+    elif op == "delete_where_dv":
+        v = acid_lite.delete_where_dv(spark, t, "id", lo=2, hi=2)
+    elif op == "optimize":
+        v = acid_lite.optimize(spark, t)
+    else:
+        v = acid_lite.restore_table(t, version=target, spark=spark)
+    assert v == parent + 1
+    base = acid_lite._read_manifest(
+        t, target if op == "restore_table" else parent)
+    new = acid_lite._read_manifest(t, v)
+    skip = _NOT_TABLE_KEYS | _OP_CHANGES[op]
+    assert {k: x for k, x in new.items() if k not in skip} == \
+        {k: x for k, x in base.items() if k not in skip}
+    if feature == "identity":
+        assert {c: {**s, "hw": 0} for c, s in new["identity"].items()} == \
+            {c: {**s, "hw": 0} for c, s in base["identity"].items()}
+    rows = acid_lite.read(spark, t).collect()
+    assert {r.id: r[vcol] for r in rows} == _OP_ROWS[op]
+    if feature == "generated":
+        assert all(r.g == 2 * r.v for r in rows)
+    if feature == "identity":
+        rids = [r.rid for r in rows]
+        assert None not in rids and len(set(rids)) == len(rids)
+    if feature == "constraints" and op in ("append", "append_idempotent",
+                                           "merge_upsert"):
+        bad = batch([(9, -5)])
+        with pytest.raises(acid_lite.ConstraintViolation):
+            if op == "append":
+                acid_lite.append(spark, t, bad)
+            elif op == "append_idempotent":
+                acid_lite.append_idempotent(spark, t, bad, "tx-bad")
+            else:
+                acid_lite.merge_upsert(spark, t, bad, key="id")
+        assert acid_lite.latest_version(t) == v
+
+
+def test_publish_crash_before_link_keeps_parent(spark, tdir, monkeypatch):
+    """A commit that dies after writing its manifest temp file and
+    before linking it leaves no ``v{N}.json`` at all: the table still
+    reads the parent, a retry commits the same version, and the orphan
+    sweep reaps the temp.  The old create-then-write publish could
+    leave an empty ``v2.json`` that every later read and append failed
+    to parse."""
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
+    mdir = os.path.join(tdir, "manifests")
+
+    def crash(src, dst):
+        raise OSError("simulated crash before link")
+
+    monkeypatch.setattr(os, "link", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        acid_lite.append(spark, tdir, _df(spark, [(2, "b")]))
+    monkeypatch.undo()
+    assert acid_lite.latest_version(tdir) == 1
+    assert [f for f in os.listdir(mdir) if f.endswith(".tmp")]
+    assert {(r.k, r.v) for r in acid_lite.read(spark, tdir).collect()} \
+        == {(1, "a")}
+    assert acid_lite.append(spark, tdir, _df(spark, [(2, "b")])) == 2
+    acid_lite.remove_orphan_files(tdir, grace_seconds=-1)
+    assert sorted(os.listdir(mdir)) == ["v1.json", "v2.json"]
+    assert {(r.k, r.v) for r in acid_lite.read(spark, tdir).collect()} \
+        == {(1, "a"), (2, "b")}
+
+
+def test_one_tag_writer_every_tag_resolves(spark, tdir):
+    """create_tag is the only tag writer, so every tag that resolves is
+    one list_tags sees and expire_snapshots retains.  The removed
+    tag_version accepted names list_tags skips ("release 1"): its tag
+    then pinned nothing, expiry removed the version, and restoring or
+    reading the tag failed."""
+    assert not hasattr(acid_lite, "tag_version")
+    assert not hasattr(acid_lite, "resolve_tag")
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
+    acid_lite.append(spark, tdir, _df(spark, [(2, "b")]))
+    acid_lite.append(spark, tdir, _df(spark, [(3, "c")]))
+    with pytest.raises(ValueError, match="invalid tag name"):
+        acid_lite.create_tag(tdir, "release 1", 1)
+    acid_lite.create_tag(tdir, "release-1", 1)
+    acid_lite.expire_snapshots(tdir, keep_from=3)
+    assert {r.k for r in
+            acid_lite.read_tag(spark, tdir, "release-1").collect()} == {1}
+    v = acid_lite.restore_table(tdir, tag="release-1")
+    assert {r.k for r in acid_lite.read(spark, tdir, v).collect()} == {1}
+    assert os.listdir(os.path.join(tdir, "tags")) == ["release-1.json"]
