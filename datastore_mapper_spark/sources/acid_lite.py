@@ -706,6 +706,14 @@ def _assemble_stats_partitions(
 _PER_COMMIT_KEYS = frozenset(
     {"version", "parent", "op", "ts", "txn", "restore_of", "clone_of"})
 
+#: Table keys a commit may change (``files``, ``stats``, ``partitions``
+#: and ``file_spec`` follow from the file set).
+_TABLE_KEYS = frozenset(
+    {"schema", "partition_by", "specs", "default_spec", "mapping",
+     "dropped_physical", "constraints", "generated", "defaults",
+     "identity", "sort_order", "dvs", "dv_rows", "txns", "bloom_index",
+     "ndv_sketch"})
+
 
 def _commit(path: str, version: int, files: list[str], parent: int,
             op: str, partitions: dict | None = None,
@@ -726,6 +734,11 @@ def _commit(path: str, version: int, files: list[str], parent: int,
     removed files drop.  Driver cost is file-count-sized — the
     Iceberg manifest-entry shape.  Losing the version to another
     writer raises :class:`CommitConflict`."""
+    unknown = set(changes) - _TABLE_KEYS - _PER_COMMIT_KEYS
+    if unknown:
+        # keep-by-default would carry a misspelt key into every later
+        # version, so it fails here like a bad keyword argument
+        raise TypeError(f"unknown manifest key(s) {sorted(unknown)}")
     if base is None:
         base = _read_manifest(path, parent) if parent else {}
     m = {k: v for k, v in base.items() if k not in _PER_COMMIT_KEYS}
@@ -2890,8 +2903,15 @@ def shallow_clone(src_path: str, dst_path: str,
     files = [_abs(f) for f in m["files"]]
     # the source manifest is the base, its per-file maps re-keyed to
     # the absolute refs; index sidecars (bloom / NDV) stay keyed by
-    # source-relative paths, so the commit's re-filter drops them
-    base = {**m, "files": files}
+    # source-relative paths, so the commit's re-filter drops them.
+    # State tied to the source's own history does not carry: initial
+    # defaults key files by source version numbers, the identity
+    # high-water would let clone and source stamp the same values
+    # (publish never merges it back), and txns record the source's
+    # writers.
+    base = {k: x for k, x in m.items()
+            if k not in ("defaults", "identity", "txns")}
+    base["files"] = files
     for key in ("stats", "partitions", "file_spec"):
         base[key] = {_abs(f): e for f, e in (m.get(key) or {}).items()}
     os.makedirs(dst_path, exist_ok=True)

@@ -31,6 +31,11 @@ def test_commit_conflict_one_winner(spark, tdir):
         acid_lite._commit(tdir, 2, ["data/y.parquet"], parent=1, op="test")
     m = acid_lite._read_manifest(tdir, 2)
     assert m["files"] == ["data/x.parquet"]
+    # a misspelt table key fails instead of carrying into every version
+    with pytest.raises(TypeError, match="sort_ordr"):
+        acid_lite._commit(tdir, 3, m["files"], parent=2, op="test",
+                          sort_ordr=["k"])
+    assert acid_lite.latest_version(tdir) == 2
 
 
 def test_append_retries_past_conflict(spark, tdir):
@@ -2656,6 +2661,8 @@ def test_tags_immutable_refs_and_retention(spark, tdir):
     assert acid_lite.create_tag(tdir, "audit", version=1) == 1
     with pytest.raises(FileExistsError):
         acid_lite.create_tag(tdir, "audit", version=2)  # immutable
+    with pytest.raises(ValueError, match="invalid tag name"):
+        acid_lite.create_tag(tdir, "release 1", version=1)
     assert acid_lite.list_tags(tdir) == {"audit": 1}
     # main rewrites row 1 away, then expires everything before v4
     acid_lite.delete_where(spark, tdir, "k", hi=1)                # v4
@@ -2983,23 +2990,39 @@ def test_publish_crash_before_link_keeps_parent(spark, tdir, monkeypatch):
         == {(1, "a"), (2, "b")}
 
 
-def test_one_tag_writer_every_tag_resolves(spark, tdir):
-    """create_tag is the only tag writer, so every tag that resolves is
-    one list_tags sees and expire_snapshots retains.  The removed
-    tag_version accepted names list_tags skips ("release 1"): its tag
-    then pinned nothing, expiry removed the version, and restoring or
-    reading the tag failed."""
-    assert not hasattr(acid_lite, "tag_version")
-    assert not hasattr(acid_lite, "resolve_tag")
+def test_clone_and_branch_read_their_own_appends_under_a_default(
+        spark, tdir, tmp_path):
+    """A source's initial default keys its files by SOURCE version
+    numbers, so it must not carry into a clone or branch: there a file
+    appended at the clone's v2 would count as older than a default
+    added at the source's v3 and read the default in place of its
+    stored value (explicit values and NULLs alike)."""
     acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
     acid_lite.append(spark, tdir, _df(spark, [(2, "b")]))
-    acid_lite.append(spark, tdir, _df(spark, [(3, "c")]))
-    with pytest.raises(ValueError, match="invalid tag name"):
-        acid_lite.create_tag(tdir, "release 1", 1)
-    acid_lite.create_tag(tdir, "release-1", 1)
-    acid_lite.expire_snapshots(tdir, keep_from=3)
-    assert {r.k for r in
-            acid_lite.read_tag(spark, tdir, "release-1").collect()} == {1}
-    v = acid_lite.restore_table(tdir, tag="release-1")
-    assert {r.k for r in acid_lite.read(spark, tdir, v).collect()} == {1}
-    assert os.listdir(os.path.join(tdir, "tags")) == ["release-1.json"]
+    assert acid_lite.add_column_default(tdir, "c", "bigint", 7) == 3
+    rows = spark.createDataFrame(
+        [(8, "x", 5), (9, "y", None)], "k bigint, v string, c bigint")
+    clone = str(tmp_path / "clone")
+    acid_lite.shallow_clone(tdir, clone)
+    bp = acid_lite.create_branch(tdir, "dev")
+    for t in (clone, bp):
+        assert acid_lite.append(spark, t, rows) == 2
+        got = {r.k: r.c for r in acid_lite.read(spark, t).collect()
+               if r.k >= 8}
+        assert got == {8: 5, 9: None}
+
+
+def test_branch_publish_never_repeats_identity_values(spark, tdir):
+    """The identity high-water stays with its table: a branch does not
+    stamp from main's clone-point high-water, so values main assigns
+    after a publish never repeat ones already in the table."""
+    acid_lite.create_table(
+        spark, tdir, _df(spark, [(1, "a"), (2, "b")]).coalesce(1),
+        identity={"sid": {"start": 1, "step": 1}})
+    bp = acid_lite.create_branch(tdir, "dev")
+    acid_lite.append(spark, bp, _df(spark, [(3, "c")]))
+    acid_lite.publish_branch(spark, tdir, "dev")
+    acid_lite.append(spark, tdir, _df(spark, [(4, "d"), (5, "e")]))
+    sids = [r.sid for r in acid_lite.read(spark, tdir).collect()
+            if r.sid is not None]
+    assert len(sids) == len(set(sids)) == 4
