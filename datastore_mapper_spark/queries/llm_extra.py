@@ -7,14 +7,16 @@ the rows-only MinHash-LSH / SimHash scale paths.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators import dedup as dd
+from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators import text as tx
-from ..operators.multimodal import as_binary_media, extract_media_meta
 from ..registry import query
 
 
@@ -266,7 +268,8 @@ def multimodal_meta_extract(spark, sf_dir):
     Arrow-batched mapInPandas metadata extraction (deterministic fake
     codec; the REAL-codec twin is multimodal_bmp_decode_stats)."""
     d = table(spark, sf_dir, "documents")
-    return extract_media_meta(as_binary_media(d), fake=True)
+    return mm.media_rows(mm.as_binary_media(d), mm.extract_media_meta,
+                         mm.MEDIA_META_SCHEMA)
 
 
 @query(
@@ -292,17 +295,18 @@ def multimodal_bmp_decode_stats(spark, sf_dir):
     width/height/per-channel means, all inside Arrow-batched
     mapInPandas.  No ``fake=`` stand-in anywhere on this path.
 
-    The pixel law is a closed form of ``doc_id`` (render_bmp_media), so
+    The pixel law is a closed form of ``doc_id`` (bmp_law), so
     the DuckDB oracle predicts the decoded stats EXACTLY: any
     mis-parse of the 54-byte header, the bottom-up row order, the BGR
     swap, or the row padding shifts a mean and hash-fails.  Channel
     sums are int64 with one exact division, so the doubles are
     correctly-rounded true rationals on both engines (§7.3-H2-safe,
     no libm anywhere)."""
-    from ..operators.multimodal import extract_image_stats, render_bmp_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_image_stats(render_bmp_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.bmp_law),
+        mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA)
 
 
 @query(
@@ -333,16 +337,17 @@ def multimodal_wav_decode_stats(spark, sf_dir):
     mapInPandas.  The audio twin of multimodal_bmp_decode_stats.
 
     The sample law is a linear ramp in closed form of ``doc_id``
-    (render_wav_media), so the oracle predicts the decoded stats
+    (wav_law), so the oracle predicts the decoded stats
     EXACTLY (mean of a ramp = base + slope*(n-1)/2; peak = the larger
     endpoint magnitude).  Any mis-parse of chunk sizes, the fmt
     layout, or int16 endianness shifts a value and hash-fails.
     Amplitude sums are int64 with one exact division — no libm
     (§7.3-H2)."""
-    from ..operators.multimodal import extract_audio_stats, render_wav_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_audio_stats(render_wav_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.wav_law),
+        mm.extract_audio_stats, mm.AUDIO_STATS_SCHEMA)
 
 
 @query(
@@ -372,10 +377,11 @@ def multimodal_y4m_frame_stats(spark, sf_dir):
     of FRAME markers, plane order, or frame stride shifts it and
     hash-fails.  Luma sums are int64 with one exact division
     (§7.3-H2)."""
-    from ..operators.multimodal import extract_video_stats, render_y4m_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_video_stats(render_y4m_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.y4m_law),
+        mm.extract_video_stats, mm.VIDEO_STATS_SCHEMA)
 
 
 @query(
@@ -396,10 +402,10 @@ def multimodal_frame_sample_y4m(spark, sf_dir):
     explode shuffle); the oracle reproduces it with a correlated
     range unnest.  Frame f's constant luma (doc_id % 200) + f makes
     every sampled frame's mean exact on both engines."""
-    from ..operators.multimodal import render_y4m_media, sample_y4m_frames
 
     d = table(spark, sf_dir, "documents")
-    return sample_y4m_frames(render_y4m_media(d), every_n=2)
+    return mm.media_rows(mm.render_media(d, mm.y4m_law),
+                         mm.sample_y4m_frames, mm.FRAME_SAMPLE_SCHEMA)
 
 
 @query(
@@ -445,36 +451,31 @@ def multimodal_pipeline_canonical(spark, sf_dir):
     anywhere in any codec shifts a fingerprint, moves a document to
     the wrong duplicate group, and hash-fails.  The oracle replays
     the whole pipeline from the closed-form render laws (ASSUMES
-    doc_id >= 0, see render_bmp_media).  Scale shape: decode is
+    doc_id >= 0, see bmp_law).  Scale shape: decode is
     partition-preserving (no shuffle until the final fingerprint
     groupBy on already-tiny per-doc rows); the three modality branches
     prune at the parquet scan on ``doc_id % 3``."""
-    from ..operators.multimodal import (
-        extract_audio_stats,
-        extract_image_stats,
-        extract_video_stats,
-        render_bmp_media,
-        render_wav_media,
-        render_y4m_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    imgs = extract_image_stats(
-        render_bmp_media(d.filter(F.col("doc_id") % 3 == 0))
+    imgs = mm.media_rows(
+        mm.render_media(d.filter(F.col("doc_id") % 3 == 0), mm.bmp_law),
+        mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA,
     ).select(
         "doc_id",
         F.lit("image").alias("modality"),
         F.col("mean_b").cast("bigint").alias("fingerprint"),
     )
-    auds = extract_audio_stats(
-        render_wav_media(d.filter(F.col("doc_id") % 3 == 1))
+    auds = mm.media_rows(
+        mm.render_media(d.filter(F.col("doc_id") % 3 == 1), mm.wav_law),
+        mm.extract_audio_stats, mm.AUDIO_STATS_SCHEMA,
     ).select(
         "doc_id",
         F.lit("audio").alias("modality"),
         (F.col("mean_amp") * 2).cast("bigint").alias("fingerprint"),
     )
-    vids = extract_video_stats(
-        render_y4m_media(d.filter(F.col("doc_id") % 3 == 2))
+    vids = mm.media_rows(
+        mm.render_media(d.filter(F.col("doc_id") % 3 == 2), mm.y4m_law),
+        mm.extract_video_stats, mm.VIDEO_STATS_SCHEMA,
     ).select(
         "doc_id",
         F.lit("video").alias("modality"),
@@ -1023,13 +1024,13 @@ def multimodal_feature_neardup(spark, sf_dir):
     [0.995, 1.0], and no self-pairs.  The deterministic ``doc_id <
     200`` subset replaces the old unordered ``limit(200)`` (same
     cost, reproducible census)."""
-    from ..operators.multimodal import as_binary_media, extract_features
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    media = as_binary_media(d)
+    media = mm.as_binary_media(d)
     planted = media.filter(F.col("doc_id") == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "payload")
-    feats = extract_features(media.unionByName(planted), dim=16).select(
+    feats = mm.media_rows(media.unionByName(planted), mm.extract_features,
+                          mm.FEATURE_SCHEMA).select(
         F.col("doc_id").alias("vec_id"), F.col("feature").alias("embedding")
     )
     bucketed = feats.withColumn("bucket", sim.sign_bucket(F.col("embedding")))
@@ -1476,15 +1477,13 @@ def multimodal_wav_downsample_stats(spark, sf_dir):
     integer; peak = the larger endpoint magnitude), so the oracle
     predicts the POST-transform stats exactly — a mis-slice, a wrong
     header rate, or an off-by-one in the RIFF rewrite shifts a value
-    and hash-fails.  ASSUMES doc_id >= 0 (render_bmp_media note)."""
-    from ..operators.multimodal import (
-        downsample_wav,
-        extract_audio_stats,
-        render_wav_media,
-    )
+    and hash-fails.  ASSUMES doc_id >= 0 (bmp_law note)."""
 
     d = table(spark, sf_dir, "documents")
-    return extract_audio_stats(downsample_wav(render_wav_media(d), factor=2))
+    halved = mm.media_rows(mm.render_media(d, mm.wav_law),
+                           mm.downsample_wav, mm.MEDIA_SCHEMA)
+    return mm.media_rows(halved, mm.extract_audio_stats,
+                         mm.AUDIO_STATS_SCHEMA)
 
 
 @query(
@@ -1519,15 +1518,15 @@ def multimodal_bmp_resize_stats(spark, sf_dir):
     Channel sums accumulate in int64 and divide once by the exact
     12-pixel count on both sides.  Same Arrow mapInPandas shape as
     the decode queries: no shuffle, blobs never leave the executor."""
-    from ..operators.multimodal import (
-        extract_image_stats,
-        render_bmp_media,
-        resize_image_real,
-    )
 
     d = table(spark, sf_dir, "documents")
-    resized = resize_image_real(render_bmp_media(d), 4, 3)
-    stats = extract_image_stats(resized.select("doc_id", "payload"))
+    resized = mm.media_rows(
+        mm.render_media(d, mm.bmp_law),
+        functools.partial(mm.resize_image_real, width=4, height=3),
+        mm.RESIZED_SCHEMA,
+    )
+    stats = mm.media_rows(resized.select("doc_id", "payload"),
+                          mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA)
     return stats.select(
         "doc_id",
         F.col("width").cast("long").alias("width"),
@@ -1569,11 +1568,12 @@ def multimodal_temporal_scene_cuts(spark, sf_dir):
     rows — JVM-side, exactly how a real pipeline would window over
     extracted features.  Frame means are integers by construction, so
     the only division is the final exact mean (§7.3-H2)."""
-    from ..operators.multimodal import render_y4m_media, sample_y4m_frames
 
     d = table(spark, sf_dir, "documents")
-    frames = sample_y4m_frames(
-        render_y4m_media(d, luma="quadratic"), every_n=1
+    frames = mm.media_rows(
+        mm.render_media(d, functools.partial(mm.y4m_law, luma="quadratic")),
+        functools.partial(mm.sample_y4m_frames, every_n=1),
+        mm.FRAME_SAMPLE_SCHEMA,
     )
     w = Window.partitionBy("doc_id").orderBy("frame_no")
     deltas = (
@@ -1743,15 +1743,16 @@ def multimodal_gif_decode_stats(spark, sf_dir):
     BYTES back with the pure-numpy LZW decoder (decode_gif87a) and
     emit decoded width/height/per-channel means inside Arrow-batched
     mapInPandas.  The palette/index law is a closed form of ``doc_id``
-    (render_gif_media), so the DuckDB oracle predicts the DECODED
+    (gif_law), so the DuckDB oracle predicts the DECODED
     pixel stats exactly: any mis-read of the code-width schedule, the
     KwKwK case, sub-block boundaries, or the palette mapping shifts a
     mean and hash-fails.  Channel sums are int64 with one exact
     division (§7.3-H2-safe)."""
-    from ..operators.multimodal import extract_image_stats, render_gif_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_image_stats(render_gif_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.gif_law),
+        mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA)
 
 
 @query(
@@ -1802,19 +1803,17 @@ def multimodal_gif_anim_stats(spark, sf_dir):
     (decode_gif_frames), and emit per-doc frame count, dimensions,
     TOTAL animation delay, and mean RGB across every frame's pixels
     inside Arrow-batched mapInPandas.  The frame/palette/delay law is
-    a closed form of ``doc_id`` (render_gif_anim_media), so the
+    a closed form of ``doc_id`` (gif_anim_law), so the
     oracle predicts every decoded quantity exactly: a mis-parsed GCE,
     a dropped frame, a delay mis-attributed across frames, or any
     LZW slip shifts a value and hash-fails.  The oracle mirrors the
     engine's exact integer-sum-then-one-division arithmetic
     (§7.3-H2)."""
-    from ..operators.multimodal import (
-        extract_gif_anim_stats,
-        render_gif_anim_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_gif_anim_stats(render_gif_anim_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.gif_anim_law),
+        mm.extract_gif_anim_stats, mm.GIF_ANIM_STATS_SCHEMA)
 
 
 @query(
@@ -1915,15 +1914,15 @@ def multimodal_gif_resize_stats(spark, sf_dir):
     byte, through BOTH codecs and the resample.  Chains the whole
     multimodal path the north-star asks for (decode, transform,
     re-encode) in one partition-preserving mapInPandas pipeline."""
-    from ..operators.multimodal import (
-        extract_image_stats,
-        render_gif_media,
-        resize_image_real,
-    )
 
     d = table(spark, sf_dir, "documents")
-    resized = resize_image_real(render_gif_media(d), 4, 3)
-    stats = extract_image_stats(resized.select("doc_id", "payload"))
+    resized = mm.media_rows(
+        mm.render_media(d, mm.gif_law),
+        functools.partial(mm.resize_image_real, width=4, height=3),
+        mm.RESIZED_SCHEMA,
+    )
+    stats = mm.media_rows(resized.select("doc_id", "payload"),
+                          mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA)
     return stats.select(
         "doc_id",
         F.col("width").cast("long").alias("width"),
@@ -1971,10 +1970,11 @@ def multimodal_png_decode_stats(spark, sf_dir):
     stride off-by-one, or a skipped CRC shifts a mean and hash-fails.
     With GIF/LZW this makes TWO real compressed formats in-container;
     JPEG stays gated (needs DCT+Huffman libraries)."""
-    from ..operators.multimodal import extract_image_stats, render_png_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_image_stats(render_png_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.png_law),
+        mm.extract_image_stats, mm.IMAGE_STATS_SCHEMA)
 
 
 @query(
@@ -2085,10 +2085,11 @@ def multimodal_jpeg_decode_stats(spark, sf_dir):
     prediction slip, zigzag transposition, or IDCT scale error shifts
     the mean and hash-fails.  Round 11: color (YCbCr 4:2:0) landed as
     ``multimodal_jpeg_color_stats``; progressive stays gated."""
-    from ..operators.multimodal import extract_jpeg_stats, render_jpeg_media
 
     d = table(spark, sf_dir, "documents")
-    return extract_jpeg_stats(render_jpeg_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.jpeg_law),
+        mm.extract_jpeg_stats, mm.JPEG_STATS_SCHEMA)
 
 
 @query(
@@ -2142,13 +2143,11 @@ def multimodal_jpeg_color_stats(spark, sf_dir):
     chroma table, a mis-predicted per-component DC, or a broken
     upsample shifts a channel mean and hash-fails; general images
     round-trip within a pytest-pinned bound."""
-    from ..operators.multimodal import (
-        extract_jpeg_color_stats,
-        render_jpeg_color_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_jpeg_color_stats(render_jpeg_color_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.jpeg_color_law),
+        mm.extract_jpeg_color_stats, mm.JPEG_COLOR_STATS_SCHEMA)
 
 
 @query(
@@ -2186,13 +2185,11 @@ def multimodal_adpcm_decode_stats(spark, sf_dir):
     arbitrary signals are pinned by the encoder-state == decoder-state
     fuzz invariant in pytest.  Fourth real compressed codec
     in-container (LZW GIF, DEFLATE PNG, Huffman+DCT JPEG, ADPCM)."""
-    from ..operators.multimodal import (
-        extract_adpcm_stats,
-        render_adpcm_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_adpcm_stats(render_adpcm_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.adpcm_law),
+        mm.extract_adpcm_stats, mm.ADPCM_STATS_SCHEMA)
 
 
 @query(
@@ -2231,13 +2228,11 @@ def multimodal_jpeg_progressive_stats(spark, sf_dir):
     pinned BIT-IDENTICAL to the baseline decoder's (same spectra,
     different transport).  A mis-ordered scan, a dropped refinement
     bit, or a mis-counted EOB run shifts a mean and hash-fails."""
-    from ..operators.multimodal import (
-        extract_jpeg_progressive_stats,
-        render_jpeg_progressive_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_jpeg_progressive_stats(render_jpeg_progressive_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.jpeg_progressive_law),
+        mm.extract_jpeg_progressive_stats, mm.JPEG_STATS_SCHEMA)
 
 
 @query(
@@ -2273,13 +2268,11 @@ def multimodal_mulaw_decode_stats(spark, sf_dir):
     moves every decoded value and hash-fails.  Off-lattice signals
     are pinned by the companding-error fuzz bound in pytest.  Sixth
     real audio/image codec family in-container."""
-    from ..operators.multimodal import (
-        extract_mulaw_stats,
-        render_mulaw_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_mulaw_stats(render_mulaw_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.mulaw_law),
+        mm.extract_mulaw_stats, mm.MULAW_STATS_SCHEMA)
 
 
 @query(
@@ -2325,13 +2318,11 @@ def multimodal_tga_decode_stats(spark, sf_dir):
     BGR order flip, or forgotten vertical flip shifts a mean and
     hash-fails.  Arbitrary images are pinned by the round-trip fuzz
     in pytest."""
-    from ..operators.multimodal import (
-        extract_tga_stats,
-        render_tga_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_tga_stats(render_tga_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.tga_law),
+        mm.extract_tga_stats, mm.TGA_STATS_SCHEMA)
 
 
 @query(
@@ -2457,13 +2448,11 @@ def multimodal_qoi_decode_stats(spark, sf_dir):
     receipt and hash-fails.  Arbitrary images are pinned by the
     round-trip fuzz in pytest (RGB-heavy, run-heavy, delta-heavy,
     palette-heavy corpora + the >62-pixel run flush)."""
-    from ..operators.multimodal import (
-        extract_qoi_stats,
-        render_qoi_media,
-    )
 
     d = table(spark, sf_dir, "documents")
-    return extract_qoi_stats(render_qoi_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.qoi_law),
+        mm.extract_qoi_stats, mm.QOI_STATS_SCHEMA)
 
 
 @query(
@@ -2748,16 +2737,14 @@ def multimodal_flac_decode_stats(spark, sf_dir):
     decode or shifts the mean and hash-fails.  Arbitrary signals
     (noise, sines, constants, empty, 1-sample) are pinned by the
     round-trip fuzz in pytest."""
-    from ..operators.multimodal import (
-        extract_flac_stats,
-        render_flac_media,
-    )
 
     # every 3rd document: the codec is pure-Python bit I/O (~2.5 ms
     # per blob), and the row grades CORRECTNESS, not throughput — the
     # subset keeps its sweep cost proportionate to the other codec rows
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    return extract_flac_stats(render_flac_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.flac_law),
+        mm.extract_flac_stats, mm.FLAC_STATS_SCHEMA)
 
 
 @query(
@@ -2804,11 +2791,11 @@ def multimodal_png_interlaced_stats(spark, sf_dir):
     milestones).  At 100 TB the shape is the standard codec posture:
     blobs decode executor-side, one Arrow batch at a time, and never
     shuffle."""
-    from ..operators.multimodal import (
-        extract_png_interlaced_stats, render_png_adam7_media)
 
     d = table(spark, sf_dir, "documents")
-    return extract_png_interlaced_stats(render_png_adam7_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.png_adam7_law),
+        mm.extract_png_interlaced_stats, mm.INTERLACED_STATS_SCHEMA)
 
 
 @query(
@@ -2860,8 +2847,8 @@ def multimodal_tiff_packbits_stats(spark, sf_dir):
     compression actually paid (strip bytes < raw 3wh — a run-length
     law that didn't compress would mean the encoder never emitted a
     run packet)."""
-    from ..operators.multimodal import (
-        extract_tiff_stats, render_tiff_media)
 
     d = table(spark, sf_dir, "documents")
-    return extract_tiff_stats(render_tiff_media(d))
+    return mm.media_rows(
+        mm.render_media(d, mm.tiff_law),
+        mm.extract_tiff_stats, mm.TIFF_STATS_SCHEMA)

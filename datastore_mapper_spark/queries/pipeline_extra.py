@@ -7,6 +7,8 @@ DuckDB 1.0.0) before declaration.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from ..catalog import table
@@ -241,12 +243,14 @@ def multimodal_frame_counts(spark, sf_dir):
     kept (operators.multimodal.sample_frames does the real fan-out in
     mapInPandas; this query checks its row-count arithmetic against
     pure SQL on byte lengths)."""
-    from ..operators.multimodal import as_binary_media, sample_frames
+    from ..operators import multimodal as mm
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    media = as_binary_media(d)
+    media = mm.as_binary_media(d)
     sampled = (
-        sample_frames(media, every_n=2, frame_bytes=64)
+        mm.media_rows(media,
+                      functools.partial(mm.sample_frames, frame_bytes=64),
+                      mm.FRAME_SCHEMA)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_sampled"))
     )

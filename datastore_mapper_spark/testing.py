@@ -11,6 +11,8 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
+import tempfile
 from dataclasses import dataclass
 
 ORACLE_TABLES = (
@@ -42,6 +44,22 @@ def canon(v) -> str:
 def canon_rows(cols: list[str], rows) -> list[str]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
+
+
+def make_empty_fixtures(schema_src: str) -> str:
+    """Zero-row parquet twins of every fixture table in ``schema_src``,
+    schema-identical (including the timestamp[ns] events.ts column),
+    written once under the temp directory; returns their directory."""
+    import pyarrow.parquet as pq
+
+    d = os.path.join(tempfile.gettempdir(), "spark_graft_empty_sf")
+    os.makedirs(d, exist_ok=True)
+    for t in ORACLE_TABLES:
+        dest = os.path.join(d, f"{t}.parquet")
+        if not os.path.exists(dest):
+            src = pq.read_table(os.path.join(schema_src, f"{t}.parquet"))
+            pq.write_table(src.slice(0, 0), dest)
+    return d
 
 
 def duckdb_oracle_connection(sf_dir: str):

@@ -25,30 +25,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # same source and default as the pytest fixtures (tests/conftest.py)
 SCHEMA_SRC = os.environ.get(
     "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def make_empty_fixtures() -> str:
-    """Zero-row parquet twins of every fixture table, schema-identical
-    (including the timestamp[ns] events.ts column)."""
-    import pyarrow.parquet as pq
-
-    from datastore_mapper_spark.testing import ORACLE_TABLES
-
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_empty_sf")
-    os.makedirs(d, exist_ok=True)
-    for t in ORACLE_TABLES:
-        dest = os.path.join(d, f"{t}.parquet")
-        if not os.path.exists(dest):
-            src = pq.read_table(os.path.join(SCHEMA_SRC, f"{t}.parquet"))
-            pq.write_table(src.slice(0, 0), dest)
-    return d
 
 
 # Documented engine-semantics differences on EMPTY input only (no fix
@@ -69,14 +51,16 @@ EMPTY_INPUT_KNOWN = {
 
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "EMPTY_INPUT.json"
-    sf_dir = make_empty_fixtures()
 
     from datastore_mapper_spark.registry import all_queries
     from datastore_mapper_spark.session import get_session
     from datastore_mapper_spark.testing import (
         compare_query,
         duckdb_oracle_connection,
+        make_empty_fixtures,
     )
+
+    sf_dir = make_empty_fixtures(SCHEMA_SRC)
 
     spark = get_session("empty-input-check")
     spark.sparkContext.setLogLevel("ERROR")

@@ -2844,7 +2844,7 @@ _WRITE_OPS = ("append", "append_idempotent", "merge_upsert",
 #: Keys of one commit or one file set, never table metadata.
 _NOT_TABLE_KEYS = {"version", "parent", "op", "ts", "txn", "restore_of",
                    "clone_of", "files", "stats", "partitions", "file_spec",
-                   "bloom_index", "ndv_sketch"}
+                   "added", "bloom_index", "ndv_sketch"}
 #: Table keys each op is meant to change.
 _OP_CHANGES = {"append": {"identity"},
                "append_idempotent": {"identity", "txns"},
@@ -3010,6 +3010,23 @@ def test_clone_and_branch_read_their_own_appends_under_a_default(
         got = {r.k: r.c for r in acid_lite.read(spark, t).collect()
                if r.k >= 8}
         assert got == {8: 5, 9: None}
+
+
+def test_default_and_lineage_read_after_expire_snapshots(spark, tdir):
+    """Each file's adding version is kept in the manifest, so a table
+    with an initial default, and its row lineage, still read the same
+    once the versions that added its files are expired."""
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
+    acid_lite.append(spark, tdir, _df(spark, [(2, "b")]))
+    assert acid_lite.add_column_default(tdir, "c", "bigint", 7) == 3
+    lineage = sorted(map(tuple, acid_lite.read_with_lineage(
+        spark, tdir).collect()))
+    acid_lite.expire_snapshots(tdir, keep_from=3)
+    assert sorted((r.k, r.c) for r in acid_lite.read(spark, tdir).collect()) \
+        == [(1, 7), (2, 7)]
+    after = acid_lite.read_with_lineage(spark, tdir).collect()
+    assert sorted(map(tuple, after)) == lineage
+    assert {r.k: r._commit_version for r in after} == {1: 1, 2: 2}
 
 
 def test_branch_publish_never_repeats_identity_values(spark, tdir):

@@ -104,3 +104,28 @@ def test_attribution_lcm_denominator_covers_touch_types(oracle):
         "attribution_linear_multi_touch (Spark AND oracle) before "
         "trusting its credit_units"
     )
+
+
+@pytest.fixture(scope="module")
+def empty_oracle(sf_dir):
+    from datastore_mapper_spark.testing import (
+        duckdb_oracle_connection,
+        make_empty_fixtures,
+    )
+
+    empty_dir = make_empty_fixtures(sf_dir)
+    con = duckdb_oracle_connection(empty_dir)
+    yield empty_dir, con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in SPECS if n.startswith("multimodal_")))
+def test_multimodal_query_matches_oracle_on_zero_rows(
+        name, spark, empty_oracle):
+    """On zero-row fixtures every media query still matches the oracle:
+    the media funnel types batches that hold no rows (the tier-1 twin
+    of scripts/empty_input_differential.py for these queries)."""
+    empty_dir, con = empty_oracle
+    res = compare_query(spark, con, SPECS[name], empty_dir)
+    assert res.ok, f"{name}: {'; '.join(res.problems)}"

@@ -15,9 +15,15 @@ from datastore_mapper_spark.operators import (
     similarity as sim,
 )
 from datastore_mapper_spark.operators.multimodal import (
+    FEATURE_SCHEMA,
+    FRAME_SCHEMA,
+    MEDIA_META_SCHEMA,
     as_binary_media,
-    decode_image_meta,
+    decode_image,
+    extract_features,
     extract_media_meta,
+    media_rows,
+    sample_frames,
 )
 
 
@@ -141,14 +147,27 @@ def test_observed_counters(spark, sf_dir):
 
 def test_multimodal_stub_and_fake_path(spark, sf_dir):
     with pytest.raises(NotImplementedError):
-        decode_image_meta(b"\x89PNG")
+        decode_image(b"\x89PNG")
     media = as_binary_media(_docs(spark, sf_dir))
-    meta = extract_media_meta(media, fake=True).collect()
+    meta = media_rows(media, extract_media_meta, MEDIA_META_SCHEMA).collect()
     assert all(0 <= r.width < 640 and 0 <= r.height < 480 for r in meta)
     by_id = {r.doc_id: r for r in meta}
     src = _docs(spark, sf_dir).select("doc_id", "text").collect()
     for r in src[:20]:
         assert by_id[r.doc_id].n_bytes == len(r.text.encode("utf-8"))
+
+
+def test_media_rows_fans_out_under_the_declared_schema(spark):
+    """The funnel emits zero, one or many rows per input row under the
+    declared schema, also when no input row emits anything."""
+    src = spark.createDataFrame([(0,), (1,), (2,)], "k long")
+    out = media_rows(src, lambda k: [(k, j, j / 2) for j in range(k)],
+                     "k long, j int, half double")
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 0, 0.0), (2, 0, 0.0), (2, 1, 0.5)]
+    none = media_rows(src, lambda k: [], "k long, j int, half double")
+    assert none.collect() == []
+    assert none.schema == out.schema
 
 
 def test_bmp_codec_roundtrip_padding_and_order():
@@ -221,7 +240,7 @@ def test_ppm_codec_roundtrip_and_comments():
     assert (w, h) == (4, 3) and (back == px).all()
 
 
-def test_extract_image_stats_real_decode(spark):
+def test_extract_image_stats_real_decode():
     """extract_image_stats over REAL BMP and PPM blobs: decoded
     dimensions and exact channel means, no fake path anywhere."""
     import numpy as np
@@ -236,15 +255,10 @@ def test_extract_image_stats_real_decode(spark):
     px1[:, :, 0] = 10  # R constant
     px1[:, :, 1] = [[0, 1, 2], [3, 4, 5]]  # G mean 2.5
     px2 = np.full((1, 2, 3), 7, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_bmp24(px1))), (2, bytearray(encode_ppm(px2)))],
-        "doc_id long, payload binary",
-    )
-    got = {r.doc_id: r for r in extract_image_stats(media).collect()}
-    assert (got[1].width, got[1].height) == (3, 2)
-    assert got[1].mean_r == 10.0 and got[1].mean_g == 2.5
-    assert (got[2].width, got[2].height) == (2, 1)
-    assert got[2].mean_r == got[2].mean_b == 7.0
+    assert extract_image_stats(1, encode_bmp24(px1)) == [
+        (1, 3, 2, 10.0, 2.5, 0.0)]
+    assert extract_image_stats(2, encode_ppm(px2)) == [
+        (2, 2, 1, 7.0, 7.0, 7.0)]
 
 
 def test_wav_codec_roundtrip_and_chunk_walk():
@@ -274,7 +288,7 @@ def test_wav_codec_roundtrip_and_chunk_walk():
         decode_wav_pcm16(b"OggS" + bytes(40))
 
 
-def test_extract_audio_stats_real_decode(spark):
+def test_extract_audio_stats_real_decode():
     import numpy as np
 
     from datastore_mapper_spark.operators.multimodal import (
@@ -284,15 +298,11 @@ def test_extract_audio_stats_real_decode(spark):
 
     s1 = np.array([10, 20, 30, 40], dtype=np.int16)     # mean 25, peak 40
     s2 = np.array([-5, 5], dtype=np.int16)              # mean 0, peak 5
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_wav_pcm16(s1))),
-         (2, bytearray(encode_wav_pcm16(s2, sample_rate=8000)))],
-        "doc_id long, payload binary",
-    )
-    got = {r.doc_id: r for r in extract_audio_stats(media).collect()}
-    assert got[1].n_samples == 4 and got[1].mean_amp == 25.0
-    assert got[1].peak_amp == 40 and got[1].duration_s == 4 / 16000
-    assert got[2].sample_rate == 8000 and got[2].mean_amp == 0.0
+    assert extract_audio_stats(1, encode_wav_pcm16(s1)) == [
+        (1, 4, 16000, 4 / 16000, 25.0, 40)]
+    assert extract_audio_stats(
+        2, encode_wav_pcm16(s2, sample_rate=8000)) == [
+        (2, 2, 8000, 2 / 8000, 0.0, 5)]
 
 
 def test_y4m_codec_roundtrip_and_frame_walk():
@@ -320,7 +330,7 @@ def test_y4m_codec_roundtrip_and_frame_walk():
         decode_y4m(b"RIFF....\n")
 
 
-def test_extract_video_stats_real_decode(spark):
+def test_extract_video_stats_real_decode():
     import numpy as np
 
     from datastore_mapper_spark.operators.multimodal import (
@@ -332,15 +342,10 @@ def test_extract_video_stats_real_decode(spark):
     clip[0, :, :, 0] = 10
     clip[1, :, :, 0] = 20
     clip[2, :, :, 0] = 30  # mean luma 20
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_y4m(clip)))], "doc_id long, payload binary"
-    )
-    r = extract_video_stats(media).collect()[0]
-    assert (r.n_frames, r.width, r.height) == (3, 2, 2)
-    assert r.mean_luma == 20.0
+    assert extract_video_stats(1, encode_y4m(clip)) == [(1, 3, 2, 2, 20.0)]
 
 
-def test_resize_image_real_nearest_neighbor(spark):
+def test_resize_image_real_nearest_neighbor():
     """Real resize picks exactly the nearest-neighbor source pixels and
     re-encodes a decodable BMP."""
     import numpy as np
@@ -352,12 +357,10 @@ def test_resize_image_real_nearest_neighbor(spark):
     )
 
     src = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_bmp24(src)))], "doc_id long, payload binary"
-    )
-    r = resize_image_real(media, 2, 2).collect()[0]
-    assert (r.width, r.height) == (2, 2)
-    w, h, back = decode_bmp24(bytes(r.payload))
+    [(doc_id, blob, width, height)] = resize_image_real(
+        1, encode_bmp24(src), 2, 2)
+    assert (doc_id, width, height) == (1, 2, 2)
+    w, h, back = decode_bmp24(blob)
     # nearest-neighbor map: dst (x,y) -> src (x*4//2, y*4//2) = rows/cols 0,2
     assert (back == src[np.ix_([0, 2], [0, 2])]).all()
 
@@ -574,30 +577,13 @@ def test_forced_routes_are_twins(spark, sf_dir, monkeypatch, cap, op):
             k, cheap[k], other[k])
 
 
-def test_multimodal_resize_exact_sizes(spark, sf_dir):
-    from datastore_mapper_spark.operators.multimodal import (
-        as_binary_media,
-        resize_media,
-    )
-
-    d = table(spark, sf_dir, "documents").limit(50)
-    media = as_binary_media(d)
-    out = resize_media(media, 16, 8)
-    rows = out.collect()
-    assert len(rows) == 50
-    assert all(len(r.payload) == 16 * 8 for r in rows)
-    assert all((r.width, r.height) == (16, 8) for r in rows)
-
-
 def test_multimodal_frame_sampling_counts_and_content(spark, sf_dir):
-    from datastore_mapper_spark.operators.multimodal import (
-        as_binary_media,
-        sample_frames,
-    )
+    import functools
 
     d = table(spark, sf_dir, "documents").limit(20)
     media = as_binary_media(d)
-    frames = sample_frames(media, every_n=2, frame_bytes=32)
+    frames = media_rows(
+        media, functools.partial(sample_frames, frame_bytes=32), FRAME_SCHEMA)
     got = frames.groupBy("doc_id").count().collect()
     expected = {
         r.doc_id: (((len(r.payload) + 31) // 32) + 1) // 2
@@ -612,13 +598,8 @@ def test_multimodal_frame_sampling_counts_and_content(spark, sf_dir):
 def test_multimodal_features_feed_similarity_ops(spark, sf_dir):
     import math
 
-    from datastore_mapper_spark.operators.multimodal import (
-        as_binary_media,
-        extract_features,
-    )
-
     d = table(spark, sf_dir, "documents").limit(30)
-    feats = extract_features(as_binary_media(d), dim=16)
+    feats = media_rows(as_binary_media(d), extract_features, FEATURE_SCHEMA)
     rows = feats.collect()
     assert all(len(r.feature) == 16 for r in rows)
     assert all(math.isclose(sum(r.feature), 1.0, rel_tol=1e-5) for r in rows)
@@ -976,16 +957,12 @@ def test_multimodal_feature_neardup_finds_planted_twin(spark, sf_dir):
     """A document duplicated under a new id must surface as a
     feature-space near-dup pair (cosine ~1.0 in the same sign cell) —
     the multimodal dedup path end-to-end over the stubbed codec."""
-    from datastore_mapper_spark.operators.multimodal import (
-        as_binary_media,
-        extract_features,
-    )
-
     d = table(spark, sf_dir, "documents").limit(50).select("doc_id", "text")
     twin = d.filter(F.col("doc_id") == 0).select(
         (F.col("doc_id") + 77_000).alias("doc_id"), "text"
     )
-    feats = extract_features(as_binary_media(d.union(twin)), dim=16).select(
+    feats = media_rows(as_binary_media(d.union(twin)), extract_features,
+                       FEATURE_SCHEMA).select(
         F.col("doc_id").alias("vec_id"), F.col("feature").alias("embedding")
     )
     bucketed = feats.withColumn("bucket", sim.sign_bucket(F.col("embedding")))
@@ -1352,7 +1329,7 @@ def test_snapshot_content_addressing_rebuilds_on_fixture_change(
             )
 
 
-def test_downsample_wav_decimates_and_reencodes(spark):
+def test_downsample_wav_decimates_and_reencodes():
     """downsample_wav must decode, keep every factor-th sample, and
     re-encode at the reduced rate — verified sample-by-sample against
     numpy slicing on a hand-built WAV."""
@@ -1366,18 +1343,12 @@ def test_downsample_wav_decimates_and_reencodes(spark):
 
     samples = np.arange(-5, 18, dtype=np.int16)  # 23 samples
     blob = encode_wav_pcm16(samples, sample_rate=16_000)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob))], "doc_id long, payload binary"
-    )
-    out = downsample_wav(df, factor=2).collect()
-    sr, got = decode_wav_pcm16(bytes(out[0].payload))
-    assert sr == 8_000
+    [(doc_id, out)] = downsample_wav(1, blob, factor=2)
+    sr, got = decode_wav_pcm16(out)
+    assert doc_id == 1 and sr == 8_000
     assert list(got) == list(samples[::2])
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        downsample_wav(df, factor=0)
+    with pytest.raises(ValueError):
+        downsample_wav(1, blob, factor=0)
 
 
 # --- ledger: clamped running balance (operators/ledger.py) ---------------
@@ -2170,51 +2141,6 @@ def test_adpcm_codec_state_tracking_fuzz():
     with _pytest.raises(NotImplementedError):
         decode_wav_ima_adpcm(
             encode_wav_pcm16(np.zeros(4, dtype=np.int16)))
-
-
-def test_adpcm_batch_kernels_match_scalar():
-    """The vectorized batch ADPCM kernels (r16 optimization: the
-    per-sample state machine runs vectorized across signals/blocks)
-    must be BYTE-identical to the scalar encoder and SAMPLE-identical
-    to the scalar decoder on arbitrary signals — constant fixture-law
-    blocks, random noise, partial final blocks, and 1-sample runts."""
-    import numpy as np
-
-    from datastore_mapper_spark.operators.multimodal import (
-        decode_wav_ima_adpcm,
-        decode_wav_ima_adpcm_batch,
-        encode_wav_ima_adpcm,
-        encode_wav_ima_adpcm_batch,
-    )
-
-    rng = np.random.RandomState(20260817)
-    spb = (256 - 4) * 2 + 1
-    sigs, rates = [], []
-    for i in range(40):
-        kind = i % 4
-        if kind == 0:  # fixture law: constant within each block
-            nb = i % 3 + 1
-            base = (i % 100) * 250 - 12500
-            sig = np.repeat(base + 311 * np.arange(nb), spb).astype(np.int16)
-        elif kind == 1:  # white noise, arbitrary length (partial blocks)
-            sig = rng.randint(-32768, 32768, rng.randint(1, 1400)) \
-                .astype(np.int16)
-        elif kind == 2:  # ramp with wraparound
-            n = rng.randint(1, 3 * spb + 17)
-            sig = (np.arange(n) * 37 % 65536 - 32768).astype(np.int16)
-        else:  # runt signals exercise the all-pad path
-            sig = rng.randint(-32768, 32768, i % 3 + 1).astype(np.int16)
-        sigs.append(sig)
-        rates.append(8000 + (i % 3) * 4000)
-
-    enc_scalar = [encode_wav_ima_adpcm(s, r) for s, r in zip(sigs, rates)]
-    enc_batch = encode_wav_ima_adpcm_batch(sigs, rates)
-    assert enc_scalar == enc_batch
-
-    dec_scalar = [decode_wav_ima_adpcm(b) for b in enc_scalar]
-    dec_batch = decode_wav_ima_adpcm_batch(enc_scalar)
-    for (r1, s1), (r2, s2) in zip(dec_scalar, dec_batch):
-        assert r1 == r2 and np.array_equal(s1, s2)
 
 
 def test_gif_animated_round_trip_fuzz():

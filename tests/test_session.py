@@ -70,3 +70,21 @@ def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     _zipguard.install()  # idempotent: wraps the original only once
     assert not hasattr(
         zipimport.zipimporter.invalidate_caches.__wrapped__, "__wrapped__")
+
+
+def test_column_calls_skip_call_site_capture(spark, monkeypatch):
+    """``get_session`` turns off PySpark's per-call origin capture: one
+    ``F.col`` then costs 3 py4j round trips instead of 13 (an
+    active-session lookup, a conf read, an origin set and clear)."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+    monkeypatch.setattr(client, "send_command",
+                        lambda *a, **k: sent.append(a) or real(*a, **k))
+    F.col("x")
+    monkeypatch.undo()
+    assert len(sent) < 5, f"{len(sent)} round trips for one F.col"
