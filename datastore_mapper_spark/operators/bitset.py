@@ -43,29 +43,30 @@ O((n/B)·V/64) memory, so B scales with the cluster.
 from __future__ import annotations
 
 from ._alloc import keep_large_allocs_on_heap
+from .route import fits
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def kernel_fits(
-    n_docs: int,
-    n_bits: int,
-    n_buckets: int = 8,
-    max_group_bytes: int = 1 << 28,
-    max_total_flops: float = 1e11,
-) -> bool:
+#: id buckets of :func:`blocked_pair_survivors`: each doc meets the
+#: rest of the corpus in ``_BUCKETS`` bucket-pair groups
+_BUCKETS = 8
+
+
+def kernel_fits(n_docs: int, n_bits: int) -> bool:
     """Cost-based router for :func:`blocked_pair_survivors`: the kernel
     is the right plan only while (a) one bucket-pair's unpacked 0/1
-    matrices fit in a task's memory — (2n/B)·V·4 bytes per side — and
-    (b) the total matmul work n²·V stays under a budget.  Outside
-    that envelope the inverted-index / MinHash-LSH candidate paths
+    matrices fit in a task's memory — (2n/B)·V·4 bytes per side, cap
+    ``bitset_group_bytes`` — and (b) the total matmul work n²·V stays
+    under cap ``bitset_flops`` (both in ``route.CAPS``).  Outside that
+    envelope the inverted-index / MinHash-LSH candidate paths
     (operators/dedup.py) win; the two cheap statistics every corpus
     has (doc count, vocabulary size) decide the route, measured in
     scripts/dedup_crossover.py."""
-    group_rows = max(1, (2 * n_docs) // n_buckets)
-    group_bytes = group_rows * max(64, n_bits) * 4
-    flops = float(n_docs) * n_docs * max(64, n_bits)
-    return group_bytes <= max_group_bytes and flops <= max_total_flops
+    width = max(64, n_bits)
+    group_rows = max(1, (2 * n_docs) // _BUCKETS)
+    return (fits("bitset_group_bytes", group_rows * width * 4)
+            and fits("bitset_flops", n_docs * n_docs * width))
 
 
 def dictionary_ids(values: DataFrame, col: str) -> DataFrame:
@@ -141,7 +142,6 @@ def blocked_pair_survivors(
     id_col: str,
     mask_cols: list[str],
     predicate,
-    n_buckets: int = 8,
 ) -> DataFrame:
     """All unordered doc pairs, intersection-counted per mask column,
     filtered by ``predicate`` inside the kernel.
@@ -149,14 +149,15 @@ def blocked_pair_survivors(
     ``docs``: one row per doc with ``id_col``, and for each name m in
     ``mask_cols`` an ``array<int>`` gid-set column m plus a ``m_sz``
     long.
-    ``predicate(inter, sz1, sz2)``: dicts of numpy arrays keyed by
-    mask name -> boolean keep-mask over the pair axis.  Returns
+    ``predicate(inter, sz1, sz2, least, greatest)``: dicts of numpy
+    arrays keyed by mask name, and ``np.minimum`` / ``np.maximum`` ->
+    boolean keep-mask over the pair axis.  Returns
     (d1, d2, <m>_inter..., <m>_sz1..., <m>_sz2...) with d1 < d2 —
     integer columns only; compute ratios downstream in SQL."""
     import numpy as np
     import pandas as pd
 
-    B = n_buckets
+    B = _BUCKETS
     mask_names = list(mask_cols)
 
     bucketed = docs.withColumn(
@@ -237,7 +238,7 @@ def blocked_pair_survivors(
             sb = b[f"{m}_sz"].to_numpy()
             sz1[m] = np.broadcast_to(sa[:, None], inter[m].shape)
             sz2[m] = np.broadcast_to(sb[None, :], inter[m].shape)
-        keep = predicate(inter, sz1, sz2)
+        keep = predicate(inter, sz1, sz2, np.minimum, np.maximum)
         if b1 == b2:  # upper triangle only: each unordered pair once
             keep = keep & (ids_a[:, None] < ids_b[None, :])
         ii, jj = np.nonzero(keep)
@@ -279,8 +280,8 @@ def indexed_pair_intersections(
     routing precondition), merged onto the candidates with missing
     counts as 0.  Output schema matches the kernel exactly —
     (d1, d2, <m>_inter, <m>_sz1, <m>_sz2, d1 < d2) — EXCEPT that no
-    predicate has been applied: callers re-state their kernel
-    ``keep()`` as a SQL filter so both routes stay exact twins.
+    predicate has been applied: :func:`pair_survivors` applies the
+    same ``keep`` to these columns.
     """
     masks = dict(long_by_mask)
 
@@ -320,3 +321,43 @@ def indexed_pair_intersections(
     for m in masks:
         ordered += [f"{m}_inter", f"{m}_sz1", f"{m}_sz2"]
     return cand.select(ordered)
+
+
+def pair_survivors(
+    longs: dict[str, DataFrame],
+    id_col: str,
+    cand: str,
+    keep,
+    n_docs: int,
+    n_bits: int,
+) -> DataFrame:
+    """Id pairs sharing >= 1 element of mask ``cand`` that pass
+    ``keep``, on the route :func:`kernel_fits` picks for ``n_docs``
+    ids over ``n_bits`` dictionary ids (the caller's cheap counts: a
+    parquet-metadata row count and the checkpointed dictionaries').
+
+    ``longs``: mask name -> DISTINCT (id_col, gid) membership, gids
+    from :func:`dictionary_ids`.  ``keep(inter, sz1, sz2, least,
+    greatest)`` is written once for both routes: dicts keyed by mask
+    name of numpy arrays with ``np.minimum`` / ``np.maximum`` inside
+    the blocked kernel, of ``Column``s with ``F.least`` /
+    ``F.greatest`` after the index join — so it may use only the
+    operators both share: comparisons, ``&``, ``+``, ``-``, ``*`` (not
+    ``/``, ``and``, ``or``).
+    Output: (d1, d2, <m>_inter, <m>_sz1, <m>_sz2 ...), d1 < d2."""
+    masks = list(longs)
+    if kernel_fits(n_docs, n_bits):
+        docs = gid_sets(longs[masks[0]], id_col, "gid", masks[0])
+        for m in masks[1:]:
+            docs = docs.join(gid_sets(longs[m], id_col, "gid", m), id_col)
+
+        def predicate(inter, sz1, sz2, least, greatest):
+            return ((inter[cand] >= 1)
+                    & keep(inter, sz1, sz2, least, greatest))
+
+        return blocked_pair_survivors(
+            docs.sparkSession, docs, id_col, masks, predicate)
+    cols = {k: {m: F.col(f"{m}_{k}") for m in masks}
+            for k in ("inter", "sz1", "sz2")}
+    return indexed_pair_intersections(longs, id_col, cand).filter(
+        keep(cols["inter"], cols["sz1"], cols["sz2"], F.least, F.greatest))

@@ -851,7 +851,7 @@ def jaccard_threshold_pairs(
       also share >= 1 sub-cap token.  Only survivors expand back to
       doc pairs.
     * **join route** otherwise: :func:`capped_jaccard_pairs` + the
-      same integer threshold as a SQL filter.
+      same integer threshold (one ``over_theta``) as a SQL filter.
 
     Output: (d1, d2, inter, sz1, sz2), d1 < d2 — integer columns;
     callers compute the jaccard double downstream so oracle float
@@ -869,8 +869,11 @@ def jaccard_threshold_pairs(
 
     spark = doc_toks.sparkSession
     doc_toks = doc_toks.withColumn("toks", F.array_distinct("toks"))
-    thr = (F.col("inter") * theta_den
-           >= (F.col("sz1") + F.col("sz2") - F.col("inter")) * theta_num)
+
+    def over_theta(inter, sz1, sz2):
+        # numpy arrays in the kernel, Columns on the join route
+        return inter * theta_den >= (sz1 + sz2 - inter) * theta_num
+
     # route on DOC-level statistics (one explode + one vocabulary-sized
     # aggregate — no group-building cost charged to the join route):
     # Σ df² is the candidate join's row count and df is doc-counted,
@@ -890,7 +893,8 @@ def jaccard_threshold_pairs(
             or not kernel_fits(n_docs, v_bits)):
         # healthy vocabulary (the candidate join stays near-linear) or
         # a corpus outside the kernel envelope: the join route wins
-        return capped_jaccard_pairs(doc_toks, df_cap).filter(thr)
+        return capped_jaccard_pairs(doc_toks, df_cap).filter(
+            over_theta(F.col("inter"), F.col("sz1"), F.col("sz2")))
     g = (
         doc_toks.groupBy("toks")
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -919,9 +923,8 @@ def jaccard_threshold_pairs(
         )
     )
 
-    def keep(inter, sz1, sz2):
-        union = sz1["ts"] + sz2["ts"] - inter["ts"]
-        return ((inter["ts"] * theta_den >= union * theta_num)
+    def keep(inter, sz1, sz2, least, greatest):
+        return (over_theta(inter["ts"], sz1["ts"], sz2["ts"])
                 & (inter["rs"] >= 1))
 
     surv = blocked_pair_survivors(

@@ -27,6 +27,10 @@ CAPS: dict[str, int] = {
     "kmeans_pool_bytes": 512 * 1024 * 1024,
     # BPE (word, freq) rows for the one-task greedy trainer
     "bpe_vocab": 2_000_000,
+    # bitset kernel: one bucket-pair's float32 0/1 matrices in a task
+    "bitset_group_bytes": 1 << 28,
+    # bitset kernel: total matmul work n_docs² · n_bits
+    "bitset_flops": 10**11,
 }
 
 

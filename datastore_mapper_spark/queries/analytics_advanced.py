@@ -277,6 +277,30 @@ def ewma_dyadic_smoothing(spark, sf_dir):
     )
 
 
+def _bigram_candidate_pairs(spark, sf_dir, keep):
+    """(documents, pairs) for the containment queries: doc pairs that
+    share a word bigram (mask ``bg``) and pass ``keep`` over their
+    distinct-token sets (mask ``tk``), through
+    :func:`bitset.pair_survivors` — the blocked kernel on a degenerate
+    bigram index, the index join otherwise."""
+    from ..operators.bitset import dictionary_ids, pair_survivors
+
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
+    )
+    sh = word_bigrams(d)
+    tok_gid = dictionary_ids(toks, "tok")
+    bg_gid = dictionary_ids(sh, "g")
+    longs = {
+        "tk": toks.join(F.broadcast(tok_gid), "tok").select("doc_id", "gid"),
+        "bg": sh.join(F.broadcast(bg_gid), "g").select("doc_id", "gid"),
+    }
+    n_bits = max(tok_gid.count(), bg_gid.count())
+    return d, pair_survivors(longs, "doc_id", "bg", keep, d.count(), n_bits)
+
+
 @query(
     "containment_asymmetric_dedup",
     "LLM-pipeline",
@@ -337,59 +361,14 @@ def containment_asymmetric_dedup(spark, sf_dir):
     integer condition evaluated inside the kernel.  Only surviving
     integer counts leave the kernel; the Jaccard double division
     happens in SQL, so float semantics match the oracle."""
-    from ..operators.bitset import (
-        blocked_pair_survivors,
-        dictionary_ids,
-        gid_sets,
-        indexed_pair_intersections,
-        kernel_fits,
+    _, pairs = _bigram_candidate_pairs(
+        spark, sf_dir,
+        # containment + jaccard < 0.5 ⟺ max > 2*min (integer)
+        lambda inter, sz1, sz2, least, greatest: (
+            (inter["tk"] == least(sz1["tk"], sz2["tk"]))
+            & (greatest(sz1["tk"], sz2["tk"])
+               > 2 * least(sz1["tk"], sz2["tk"]))),
     )
-
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
-    )
-    sh = word_bigrams(d)
-    tok_gid = dictionary_ids(toks, "tok")
-    bg_gid = dictionary_ids(sh, "g")
-    n_tok = tok_gid.count()
-    n_bg = bg_gid.count()
-    n_docs = d.count()
-    tok_long = toks.join(F.broadcast(tok_gid), "tok").select("doc_id", "gid")
-    bg_long = sh.join(F.broadcast(bg_gid), "g").select("doc_id", "gid")
-    if kernel_fits(n_docs, max(n_tok, n_bg)):
-        tok_masks = gid_sets(tok_long, "doc_id", "gid", "tk")
-        bg_masks = gid_sets(bg_long, "doc_id", "gid", "bg")
-        docs = tok_masks.join(bg_masks, "doc_id")
-
-        def keep(inter, sz1, sz2):
-            import numpy as np
-
-            small = np.minimum(sz1["tk"], sz2["tk"])
-            large = np.maximum(sz1["tk"], sz2["tk"])
-            return (
-                (inter["bg"] >= 1)
-                & (inter["tk"] == small)
-                # containment + jaccard < 0.5 ⟺ max > 2*min (integer)
-                & (large > 2 * small)
-            )
-
-        pairs = blocked_pair_survivors(
-            spark, docs, "doc_id", ["tk", "bg"], keep
-        )
-    else:
-        # outside the kernel envelope (round-9 ADVICE): shared-bigram
-        # inverted-index candidates + index-joined token intersections,
-        # with the kernel's keep() re-stated as the equivalent SQL
-        pairs = indexed_pair_intersections(
-            {"tk": tok_long, "bg": bg_long}, "doc_id", "bg"
-        ).filter(
-            (F.col("bg_inter") >= 1)
-            & (F.col("tk_inter") == F.least("tk_sz1", "tk_sz2"))
-            & (F.greatest("tk_sz1", "tk_sz2")
-               > 2 * F.least("tk_sz1", "tk_sz2"))
-        )
     jac = F.col("tk_inter").cast("double") / (
         F.col("tk_sz1") + F.col("tk_sz2") - F.col("tk_inter")
     )
@@ -2636,51 +2615,11 @@ def dedup_drop_contained(spark, sf_dir):
     == min(token sz) — one binary matmul per bucket-pair, integer-
     exact, no hashing).  The kernel emits only the contained pairs;
     the drop rule and the anti-join stay in SQL."""
-    from ..operators.bitset import (
-        blocked_pair_survivors,
-        dictionary_ids,
-        gid_sets,
-        indexed_pair_intersections,
-        kernel_fits,
+    d, contained = _bigram_candidate_pairs(
+        spark, sf_dir,
+        lambda inter, sz1, sz2, least, greatest: (
+            inter["tk"] == least(sz1["tk"], sz2["tk"])),
     )
-
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
-    )
-    sh = word_bigrams(d)
-    tok_gid = dictionary_ids(toks, "tok")
-    bg_gid = dictionary_ids(sh, "g")
-    n_tok = tok_gid.count()
-    n_bg = bg_gid.count()
-    n_docs = d.count()
-    tok_long = toks.join(F.broadcast(tok_gid), "tok").select("doc_id", "gid")
-    bg_long = sh.join(F.broadcast(bg_gid), "g").select("doc_id", "gid")
-    if kernel_fits(n_docs, max(n_tok, n_bg)):
-        tok_masks = gid_sets(tok_long, "doc_id", "gid", "tk")
-        bg_masks = gid_sets(bg_long, "doc_id", "gid", "bg")
-        docs = tok_masks.join(bg_masks, "doc_id")
-
-        def keep(inter, sz1, sz2):
-            import numpy as np
-
-            shares_bigram = inter["bg"] >= 1
-            contained = inter["tk"] == np.minimum(sz1["tk"], sz2["tk"])
-            return shares_bigram & contained
-
-        contained = blocked_pair_survivors(
-            spark, docs, "doc_id", ["tk", "bg"], keep
-        )
-    else:
-        # outside the kernel envelope (round-9 ADVICE): inverted-index
-        # route with the kernel keep() re-stated in SQL
-        contained = indexed_pair_intersections(
-            {"tk": tok_long, "bg": bg_long}, "doc_id", "bg"
-        ).filter(
-            (F.col("bg_inter") >= 1)
-            & (F.col("tk_inter") == F.least("tk_sz1", "tk_sz2"))
-        )
     dropped = contained.select(
         F.when(F.col("tk_sz1") < F.col("tk_sz2"), F.col("d1"))
         .when(F.col("tk_sz2") < F.col("tk_sz1"), F.col("d2"))

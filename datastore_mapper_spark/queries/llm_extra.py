@@ -846,13 +846,7 @@ def dedup_bigram_jaccard(spark, sf_dir):
     5·min ≥ 3·max implied by jac ≥ 0.6); the Jaccard division,
     threshold, and rounding all run in Spark SQL on those integers,
     so float semantics match the oracle bit-for-bit."""
-    from ..operators.bitset import (
-        blocked_pair_survivors,
-        dictionary_ids,
-        gid_sets,
-        indexed_pair_intersections,
-        kernel_fits,
-    )
+    from ..operators.bitset import dictionary_ids, pair_survivors
     from ..operators.dedup import word_bigrams
 
     d = table(spark, sf_dir, "documents")
@@ -861,24 +855,14 @@ def dedup_bigram_jaccard(spark, sf_dir):
     n_bits = gid.count()  # vocabulary size — dictionary-tier scalar
     n_docs = d.count()  # parquet-metadata count, no scan
     shi = sh.join(F.broadcast(gid), "g").select("doc_id", "gid")
-    if kernel_fits(n_docs, n_bits):
-        docs = gid_sets(shi, "doc_id", "gid", "bg")
-
-        def keep(inter, sz1, sz2):
-            import numpy as np
-
-            small = np.minimum(sz1["bg"], sz2["bg"])
-            large = np.maximum(sz1["bg"], sz2["bg"])
-            # candidate rule (share >= 1 shingle) + integer size bound
-            return (inter["bg"] >= 1) & (5 * small >= 3 * large)
-
-        pairs = blocked_pair_survivors(spark, docs, "doc_id", ["bg"], keep)
-    else:
-        # healthy vocabulary / larger corpus: the shared-shingle
-        # inverted index is the subquadratic plan (round-9 ADVICE —
-        # never run the O(n²·V) kernel outside its envelope); the
-        # jac >= 0.6 filter below subsumes the kernel's size prune
-        pairs = indexed_pair_intersections({"bg": shi}, "doc_id", "bg")
+    # integer size bound implied by jac >= 0.6 (the filter below)
+    pairs = pair_survivors(
+        {"bg": shi}, "doc_id", "bg",
+        lambda inter, sz1, sz2, least, greatest: (
+            5 * least(sz1["bg"], sz2["bg"])
+            >= 3 * greatest(sz1["bg"], sz2["bg"])),
+        n_docs, n_bits,
+    )
     jac = F.col("bg_inter").cast("double") / (
         F.col("bg_sz1") + F.col("bg_sz2") - F.col("bg_inter")
     )
@@ -1302,7 +1286,7 @@ def neardup_jaccard_prefix(spark, sf_dir):
         long = toks.join(F.broadcast(gid), "tok").select("doc_id", "gid")
         docs = gid_sets(long, "doc_id", "gid", "tk")
 
-        def keep(inter, sz1, sz2):
+        def keep(inter, sz1, sz2, least, greatest):
             # J >= 4/5 as exact integers: 5*inter >= 4*(union)
             return inter["tk"] * 5 >= (sz1["tk"] + sz2["tk"]
                                        - inter["tk"]) * 4

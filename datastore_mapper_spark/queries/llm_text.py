@@ -381,7 +381,8 @@ def _build_near_dup_pairs(spark, sf_dir) -> DataFrame:
     # the Σ df² join + distinct), so the bitset all-pairs kernel scores
     # group pairs with blocked matmuls and only the >= 4/5 survivors
     # expand back to doc pairs; healthy-vocabulary corpora keep the
-    # inverted-index join route (bitset.kernel_fits decides).  The
+    # inverted-index join route (route.CAPS decides: jaccard_join_rows,
+    # then bitset.kernel_fits' bitset_group_bytes / bitset_flops).  The
     # final jaccard double + filter are unchanged — the kernel's
     # integer threshold is exactly the double filter (rationals with
     # denominator <= |union| sit far outside double rounding), so this

@@ -63,6 +63,7 @@ from __future__ import annotations
 
 import os
 import warnings
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -81,6 +82,9 @@ RUNTIME_CONFS: dict[str, str] = {
 #: recognized-but-inert legacy conf (sets fine, changes nothing) and the
 #: catalog's dtype branch is the real guard.
 _REQUIRED_CONFS = ("spark.sql.session.timeZone",)
+
+#: sessions :func:`configure` has applied :data:`RUNTIME_CONFS` to
+_configured: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 #: Size of Spark's JVM-wide generated-class cache
@@ -112,7 +116,17 @@ def configure(spark: SparkSession) -> SparkSession:
     Correctness-critical confs are verified after setting — a conf that
     silently fails to take is exactly how round 4 lost every query — and
     a failure to apply one raises instead of being swallowed.
+
+    The confs are applied once per ``SparkSession`` object (every
+    ``table()`` call lands here): a later call reads only the required
+    time zone and re-applies everything when it has drifted.  Keyed on
+    the session, not the application id: ``newSession()`` shares the
+    id but has its own SQL conf.
     """
+    if spark in _configured and all(
+            spark.conf.get(k, None) == RUNTIME_CONFS[k]
+            for k in _REQUIRED_CONFS):
+        return spark
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -130,6 +144,7 @@ def configure(spark: SparkSession) -> SparkSession:
                 f"engine-required conf {k} is {got!r}, expected {want!r}; "
                 "results would diverge from the DuckDB oracle"
             )
+    _configured.add(spark)
     return spark
 
 

@@ -913,10 +913,9 @@ def _load_files_dv(spark: SparkSession, path: str, m: dict,
     identical to ``read().filter(...)`` even on merge-on-read
     snapshots (round-13 ADVICE: ``read_bloom_pruned`` used to skip
     the anti-join and resurrect DV-deleted rows)."""
-    df = _load_files(spark, path, m, files)
     dvs = m.get("dvs") or []
     if not dvs:
-        return df
+        return _load_files(spark, path, m, files)
     rel, _prefix = _rel_path_expr(path)
     base = _load_files(
         spark, path, m, files,
@@ -1130,7 +1129,6 @@ def merge_upsert(
         if delete_col is not None else src,
         manifest, "merge")
     touched = _matched_data_files(spark, path, parent, manifest, src, key)
-    kept = [f for f in manifest["files"] if f not in touched]
 
     inserts = src
     if delete_col is not None:
@@ -1146,7 +1144,6 @@ def merge_upsert(
         merged = inserts
     new_files, new_parts = _write_files_observed(
         merged, path, pby, mapping=manifest.get("mapping"))
-    _ = kept  # the rebase recomputes kept against the commit-time latest
     return _rebase_commit(path, sorted(touched), new_files, "merge",
                           expect_dvs=[], new_partitions=new_parts)
 
@@ -1446,7 +1443,6 @@ def delete_where(
         )
     stats = m.get("stats") or {}
     candidates, _total = prune_files(path, column, lo, hi, version=parent)
-    kept = [f for f in m["files"] if f not in set(candidates)]
     new_files: list[str] = []
     rewrite: list[str] = []
     pcol = _physical(m, column)
@@ -1984,7 +1980,6 @@ def replace_where(
         )
     stats = m.get("stats") or {}
     candidates, _total = prune_files(path, column, lo, hi, version=parent)
-    kept = [f for f in m["files"] if f not in set(candidates)]
     rewrite = []
     pcol = _physical(m, column)
     for f in candidates:
@@ -2008,7 +2003,6 @@ def replace_where(
         merged = merged.unionByName(p)
     new_files, new_parts = _write_files_observed(
         merged, path, m.get("partition_by"), mapping=m.get("mapping"))
-    _ = kept  # the rebase recomputes kept against the commit-time latest
     return _rebase_commit(path, candidates, new_files, "replace_where",
                           expect_dvs=[], new_partitions=new_parts)
 

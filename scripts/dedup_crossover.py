@@ -17,12 +17,12 @@ for the three candidate-generation strategies the engine ships:
                pairs whose EVERY shared token is above-cap)
   - lsh      : MinHash banding (operators/dedup.minhash_signatures +
                lsh_candidate_pairs), exact-verified
-  - bitset   : packed-bitset blocked matmul kernel
-               (operators/bitset.blocked_pair_survivors) — exact like
-               prefix, but ~all-pairs work with a tiny per-pair
-               constant; ROUTED by operators/bitset.kernel_fits on
-               (doc count, vocabulary size) and reported as "routed
-               to index" where the router says no.  A second
+  - bitset   : packed-bitset blocked matmul kernel, run through
+               operators/bitset.pair_survivors — exact like prefix,
+               but ~all-pairs work with a tiny per-pair constant;
+               reported as "routed to index" where bitset.kernel_fits
+               (the route.CAPS predicate pair_survivors routes by, on
+               doc count and vocabulary size) says no.  A second
                TINY-VOCABULARY corpus section (the degenerate regime
                where every index method collapses — the shape of the
                round-8 fixture tail) shows where the kernel wins.
@@ -108,7 +108,7 @@ def make_corpus_tiny_vocab(n_docs: int) -> list[tuple[int, list[str]]]:
     return docs
 
 
-def jaccard_ok(inter, sz1, sz2) -> bool:
+def jaccard_ok(inter, sz1, sz2):
     return inter * THETA[1] >= (sz1 + sz2 - inter) * THETA[0]
 
 
@@ -163,28 +163,24 @@ def main() -> None:
 
         def run_bitset():
             from datastore_mapper_spark.operators.bitset import (
-                blocked_pair_survivors,
                 dictionary_ids,
-                gid_sets,
                 kernel_fits,
+                pair_survivors,
             )
 
             toks = doc_toks.select("doc_id", F.explode("toks").alias("tok"))
             gid = dictionary_ids(toks, "tok")
             v = gid.count()
-            if not kernel_fits(n, v):
-                return None  # router: index paths win here
-            masks = gid_sets(
-                toks.join(F.broadcast(gid), "tok").select("doc_id", "gid"),
-                "doc_id", "gid", "tk",
+            if not kernel_fits(len(corpus), v):
+                return None  # pair_survivors would run its index join
+            pairs = pair_survivors(
+                {"tk": toks.join(F.broadcast(gid), "tok")
+                 .select("doc_id", "gid")},
+                "doc_id", "tk",
+                lambda inter, s1, s2, least, greatest: (
+                    jaccard_ok(inter["tk"], s1["tk"], s2["tk"])),
+                len(corpus), v,
             )
-
-            def keep(inter, s1, s2):
-                return inter["tk"] * THETA[1] >= (
-                    s1["tk"] + s2["tk"] - inter["tk"]
-                ) * THETA[0]
-
-            pairs = blocked_pair_survivors(spark, masks, "doc_id", ["tk"], keep)
             return {(r.d1, r.d2) for r in pairs.collect()}
 
         methods = [

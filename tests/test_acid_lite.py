@@ -581,6 +581,23 @@ def test_dv_read_builds_without_jobs(spark, tdir):
     assert acid_lite._read_dvs(spark, tdir, dvs).schema == inferred
 
 
+def test_dv_read_resolves_its_files_once(spark, tdir, monkeypatch):
+    """A read of a DV table builds only the anti-joined scan: the data
+    files are resolved by one ``_load_files`` call, not by a plain scan
+    that is then discarded."""
+    acid_lite.create_table(
+        spark, tdir, _df(spark, [(i, f"r{i}") for i in range(1, 7)])
+        .coalesce(2))
+    acid_lite.delete_where_dv(spark, tdir, "k", lo=2, hi=3)
+    calls = []
+    real = acid_lite._load_files
+    monkeypatch.setattr(acid_lite, "_load_files",
+                        lambda *a, **k: calls.append(a) or real(*a, **k))
+    df = acid_lite.read(spark, tdir)
+    assert len(calls) == 1
+    assert {r.k for r in df.collect()} == {1, 4, 5, 6}
+
+
 def test_deletion_vectors_in_change_data_feed(spark, tdir):
     """CDF across a DV commit: the file set is unchanged, so the
     deletes come from the DV DELTA, resolved back to row content;

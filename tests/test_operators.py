@@ -538,9 +538,58 @@ def _pagerank_twin(spark, sf_dir):
     return got
 
 
+def _bitset_twin(build):
+    """Twin of a bitset-routed frame ``build(spark, sf_dir)``: its rows
+    (at least one) and whether its plan runs the blocked kernel."""
+
+    def twin(spark, sf_dir):
+        df = build(spark, sf_dir)
+        got = {tuple(r) for r in df.collect()}
+        assert got
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return got, "FlatMapGroupsInPandas" in plan
+
+    return twin
+
+
+def _query_frame(name, where=None):
+    def build(spark, sf_dir):
+        from datastore_mapper_spark.registry import all_queries
+
+        df = all_queries()[name].fn(spark, sf_dir)
+        return df.filter(where) if where else df
+
+    return build
+
+
+def _near_dup_frame(spark, sf_dir):
+    """The near-dup snapshot's pair builder on the documents table,
+    with the join-rows cap forced off so the bitset caps alone pick
+    the route (under that cap the join route runs on both sides)."""
+    from datastore_mapper_spark.queries.llm_text import NEAR_DUP_DF_CAP
+
+    doc_toks = table(spark, sf_dir, "documents").select(
+        "doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setitem(route.CAPS, "jaccard_join_rows", -1)
+        return dd.jaccard_threshold_pairs(doc_toks, NEAR_DUP_DF_CAP, 4, 5)
+
+
 #: cap -> {operator: (twin, tol)}; tol 0 means bit-identical, else the
 #: absolute tolerance for loops that sum floats in another order.
 _ROUTE_TWINS = {
+    "bitset_flops": {
+        "containment_asymmetric_dedup": (
+            _bitset_twin(_query_frame("containment_asymmetric_dedup")), 0),
+        "dedup_drop_contained": (
+            _bitset_twin(_query_frame("dedup_drop_contained",
+                                      "n_dropped > 0")), 0),
+        "jaccard_threshold_pairs": (_bitset_twin(_near_dup_frame), 0)},
+    "bitset_group_bytes": {
+        "dedup_bigram_jaccard": (
+            _bitset_twin(_query_frame("dedup_bigram_jaccard")), 0),
+        "neardup_jaccard_prefix": (
+            _bitset_twin(_query_frame("neardup_jaccard_prefix")), 0)},
     "bpe_vocab": {"bpe_train": (_bpe_twin, 0)},
     "cc_uncontracted_edges": {"connected_components": (_cc_twin, 0)},
     "jaccard_join_rows": {"jaccard_threshold_pairs": (_jaccard_twin, 0)},
@@ -560,7 +609,8 @@ _ROUTE_TWINS = {
 def test_forced_routes_are_twins(spark, sf_dir, monkeypatch, cap, op):
     """Each routed operator gives the same result on both sides of
     each cap it reads, both forced through ``route.CAPS`` (a cap with
-    no twin here fails collection)."""
+    no twin here fails collection).  The bitset caps' twins also show
+    that the two sides ran different routes."""
     import numpy as np
 
     twin, tol = _ROUTE_TWINS[cap][op]
@@ -568,6 +618,10 @@ def test_forced_routes_are_twins(spark, sf_dir, monkeypatch, cap, op):
     cheap = twin(spark, sf_dir)
     monkeypatch.setitem(route.CAPS, cap, -1)
     other = twin(spark, sf_dir)
+    if cap.startswith("bitset_"):
+        # the blocked kernel ran on the cheap side only
+        (cheap, kernel_ran), (other, kernel_ran_other) = cheap, other
+        assert kernel_ran and not kernel_ran_other
     if not tol:
         assert cheap == other
         return
@@ -1548,7 +1602,7 @@ def test_bitset_blocked_pairs_match_bruteforce(spark):
     got = {
         (r.d1, r.d2): (r.tk_inter, r.tk_sz1, r.tk_sz2)
         for r in blocked_pair_survivors(
-            spark, docs, "doc_id", ["tk"], lambda inter, s1, s2: inter["tk"] >= 0
+            spark, docs, "doc_id", ["tk"], lambda inter, *_: inter["tk"] >= 0
         ).collect()
     }
     want = {
@@ -1558,11 +1612,12 @@ def test_bitset_blocked_pairs_match_bruteforce(spark):
     assert got == want
 
 
-def test_bitset_kernel_router_envelope():
-    """operators/bitset.kernel_fits: the router must accept the
-    degenerate-fixture shape the kernel was built for (small vocab,
-    thousands of docs) and reject the healthy-vocabulary shapes where
-    the unpacked matrices or the total matmul work explode."""
+def test_bitset_kernel_router_envelope(monkeypatch):
+    """operators/bitset.kernel_fits under the ``route.CAPS`` bitset caps:
+    the router must accept the degenerate-fixture shape the kernel was
+    built for (small vocab, thousands of docs) and reject the
+    healthy-vocabulary shapes where the unpacked matrices or the total
+    matmul work explode."""
     from datastore_mapper_spark.operators.bitset import kernel_fits
 
     assert kernel_fits(5_000, 1_000)       # the sf0.1 fixture shape
@@ -1570,7 +1625,8 @@ def test_bitset_kernel_router_envelope():
     assert not kernel_fits(10_000, 50_000)   # flops blow the budget
     assert not kernel_fits(1_000_000, 64)    # n^2 alone blows the budget
     # memory bound: one bucket-pair's matrices must fit a task
-    assert not kernel_fits(100_000, 500_000, max_total_flops=float("inf"))
+    monkeypatch.setitem(route.CAPS, "bitset_flops", 10**18)
+    assert not kernel_fits(100_000, 500_000)
 
 
 def test_clean_scratch_reaps_only_dead_patterns(tmp_path, monkeypatch):
@@ -1647,21 +1703,6 @@ def test_indexed_pair_route_matches_kernel(spark):
         if sets[a] & sets[b]  # index route only sees candidate pairs
     }
     assert got == want
-
-
-def test_dedup_router_routes_are_twins(spark, monkeypatch):
-    """End-to-end route equivalence (round-9 ADVICE): dedup_bigram_jaccard
-    must return the identical pair set whether kernel_fits routes it to
-    the blocked bitset kernel or the inverted-index plan."""
-    import datastore_mapper_spark.operators.bitset as bitset
-    from datastore_mapper_spark.queries.llm_extra import dedup_bigram_jaccard
-
-    sf = "/root/testdata/sf0.001"
-    kernel_rows = {tuple(r) for r in dedup_bigram_jaccard(spark, sf).collect()}
-    monkeypatch.setattr(bitset, "kernel_fits", lambda *a, **k: False)
-    index_rows = {tuple(r) for r in dedup_bigram_jaccard(spark, sf).collect()}
-    assert kernel_rows == index_rows
-    assert kernel_rows  # fixture has near-dup pairs; empty would be vacuous
 
 
 def test_snapshot_build_race_keeps_winner(spark):
@@ -1884,22 +1925,6 @@ def test_jpeg_codec_round_trips():
     blob[sof + 1] = 0xC2
     with _pytest.raises(NotImplementedError):
         decode_jpeg_gray(bytes(blob))
-
-
-def test_prefix_jaccard_routes_are_twins(spark, monkeypatch):
-    """neardup_jaccard_prefix round-10 routing: the bitset kernel route
-    (degenerate vocab) and the PPJoin prefix route must return the
-    identical exact pair set."""
-    import datastore_mapper_spark.operators.bitset as bitset
-    from datastore_mapper_spark.registry import all_queries
-
-    fn = all_queries()["neardup_jaccard_prefix"].fn
-    sf = "/root/testdata/sf0.001"
-    kernel_rows = {tuple(r) for r in fn(spark, sf).collect()}
-    monkeypatch.setattr(bitset, "kernel_fits", lambda *a, **k: False)
-    ppjoin_rows = {tuple(r) for r in fn(spark, sf).collect()}
-    assert kernel_rows == ppjoin_rows
-    assert kernel_rows  # fixture has near-dup pairs
 
 
 def test_codec_fuzz_round_trips():

@@ -88,3 +88,51 @@ def test_column_calls_skip_call_site_capture(spark, monkeypatch):
     F.col("x")
     monkeypatch.undo()
     assert len(sent) < 5, f"{len(sent)} round trips for one F.col"
+
+
+_TZ = "spark.sql.session.timeZone"
+
+
+def test_configure_sets_confs_once_per_session(spark, monkeypatch):
+    """A second ``configure`` on a configured session sets no conf: it
+    only reads the required time zone."""
+    from datastore_mapper_spark.session import configure
+
+    configure(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+    monkeypatch.setattr(client, "send_command",
+                        lambda *a, **k: sent.append(a[0]) or real(*a, **k))
+    configure(spark)
+    monkeypatch.undo()
+    # a py4j call is "c\n<target>\n<method>\n...": count RuntimeConfig.set
+    sets = [c for c in sent if c.split("\n")[2:3] == ["set"]]
+    assert not sets, f"{len(sets)} conf sets on a configured session"
+
+
+def test_new_session_is_configured_by_load_tables(spark, sf_dir):
+    """``newSession()`` keeps the application id but has its own SQL
+    conf, so ``load_tables`` must configure it in full."""
+    from datastore_mapper_spark.catalog import load_tables
+    from datastore_mapper_spark.session import RUNTIME_CONFS
+
+    other = spark.newSession()
+    other.conf.set(_TZ, "America/Los_Angeles")
+    other.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+    load_tables(other, sf_dir)
+    assert other.conf.get(_TZ) == "UTC"
+    assert {k: other.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+
+
+def test_table_restores_a_drifted_time_zone(spark, sf_dir):
+    """A configured session whose time zone was changed reads UTC
+    again after its next ``table()`` call."""
+    from datastore_mapper_spark.catalog import table
+
+    spark.conf.set(_TZ, "America/Los_Angeles")
+    try:
+        table(spark, sf_dir, "orders")
+        assert spark.conf.get(_TZ) == "UTC"
+    finally:
+        spark.conf.set(_TZ, "UTC")
