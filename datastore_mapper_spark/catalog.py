@@ -40,12 +40,14 @@ TABLES = (
     "embeddings",
 )
 
-#: (app_id, sf_dir) -> {table: DataFrame}; DataFrames are lazy plans so
+#: (session, sf_dir) -> {table: DataFrame}; DataFrames are lazy plans so
 #: caching them costs nothing and saves per-query re-analysis when the
-#: driver invokes ~60 queries against the same session + sf_dir.
-_cache: dict[tuple[str, str], dict[str, DataFrame]] = {}
-#: which sf_dir's views are CURRENTLY registered, per application id
-_views_current: dict[str, str] = {}
+#: driver invokes ~60 queries against the same session + sf_dir.  Keyed
+#: by the session, not its application id: ``newSession()`` shares the
+#: id but has its own temp views, and a frame belongs to one session.
+_cache: dict[tuple[SparkSession, str], dict[str, DataFrame]] = {}
+#: which sf_dir's views are CURRENTLY registered, per session
+_views_current: dict[SparkSession, str] = {}
 
 
 def with_ts_us(df: DataFrame) -> DataFrame:
@@ -86,8 +88,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     the raw nanosecond long ``ts``.
     """
     configure(spark)
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(sf_dir))
+    key = (spark, os.path.abspath(sf_dir))
     if key in _cache:
         # temp views are registered GLOBALLY by table name: a later
         # load of a DIFFERENT sf_dir in the same session overwrote
@@ -95,10 +96,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # spark.sql("... FROM orders") caller silently reads the
         # other scale factor (surfaced round 15 by a test mixing SFs
         # in the shared session)
-        if _views_current.get(app) != key[1]:
+        if _views_current.get(spark) != key[1]:
             for name, df in _cache[key].items():
                 df.createOrReplaceTempView(name)
-            _views_current[app] = key[1]
+            _views_current[spark] = key[1]
         return _cache[key]
 
     tables: dict[str, DataFrame] = {}
@@ -109,7 +110,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         df.createOrReplaceTempView(name)
         tables[name] = df
     _cache[key] = tables
-    _views_current[app] = key[1]
+    _views_current[spark] = key[1]
     return tables
 
 

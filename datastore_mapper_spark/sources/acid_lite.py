@@ -16,12 +16,13 @@ This module implements them the way the real formats do:
   first, then writes its manifest to a temp name and hard-links it to
   ``v{N}.json`` (:func:`_create_json`).  ``link`` refuses an existing
   name, so exactly ONE writer wins a race to the same version (the
-  loser gets ``FileExistsError`` → :class:`CommitConflict`, re-reads
-  the new latest, and retries or surrenders — optimistic concurrency,
-  same protocol as Delta), and a version name only ever holds a
-  complete manifest.  Every commit goes through :func:`_commit`, which
-  keeps the table's metadata from the parent unless the op changes
-  it.
+  loser gets ``FileExistsError`` → :class:`CommitConflict`), and a
+  version name only ever holds a complete manifest.  Every writer
+  commits through the one optimistic loop :func:`_commit_loop`: read
+  the latest manifest, plan the op against it (its input checks
+  included), commit, and on a lost race re-read and re-plan — same
+  protocol as Delta.  :func:`_commit` keeps the table's metadata from
+  the parent unless the op changes it.
 * **Copy-on-write MERGE with file-level pruning.**  ``merge_upsert``
   joins the source keys against ``input_file_name()`` to find the set
   of data files that CONTAIN matched keys; only those files are
@@ -99,8 +100,39 @@ class ConstraintViolation(Exception):
 _UNSET = object()
 
 
+#: Lost version races one commit survives before it gives up.
+_RETRIES = 3
+
+
+def _commit_loop(path: str, op: str, plan) -> int:
+    """The one optimistic-concurrency loop every writer commits
+    through.  Each attempt reads the latest version ``parent`` and its
+    manifest ``pm`` (``{}`` at version 0) and calls ``plan(parent,
+    pm)``, which raises to refuse, returns an ``int`` to finish without
+    a commit (an op already in effect), or returns ``(files,
+    changes)``: the file list and manifest changes to commit as
+    ``parent + 1`` on ``pm`` (``changes`` may carry its own ``base``).
+    A lost race re-reads and re-plans, so every check a plan makes runs
+    against the manifest the op commits on; after ``_RETRIES + 1``
+    lost races :class:`CommitConflict` propagates."""
+    for _ in range(_RETRIES + 1):
+        parent = latest_version(path)
+        pm = _read_manifest(path, parent) if parent else {}
+        planned = plan(parent, pm)
+        if isinstance(planned, int):
+            return planned
+        files, changes = planned
+        try:
+            _commit(path, parent + 1, files, parent, op,
+                    **{"base": pm, **changes})
+            return parent + 1
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{op} at {path} lost {_RETRIES + 1} races")
+
+
 def _rebase_commit(path: str, touched: list[str], new_files: list[str],
-                   op: str, retries: int = 3,
+                   op: str,
                    purge_dvs: bool = False,
                    expect_dvs: list[str] | None = None,
                    new_partitions: dict | None = None,
@@ -120,7 +152,9 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
     work.  Only a racer that removed one of OUR touched files raises
     :class:`ConcurrentModification` (the caller must re-plan).  This
     is Delta/Iceberg optimistic concurrency: version numbers collide,
-    file sets decide.
+    file sets decide.  The checks below are the plan
+    :func:`_commit_loop` re-runs on every attempt, so there is no
+    check-then-commit window.
 
     ``expect_dvs`` is the deletion-vector set of the snapshot the
     caller PLANNED against.  A concurrent :func:`delete_where_dv`
@@ -134,8 +168,7 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
     evolution) must lose to a concurrent metadata-only evolution on
     the target — file-set comparison cannot see one, and rebasing
     past it would silently overwrite the concurrent evolution with
-    the staged schema (round-13 ADVICE).  Checked per attempt, inside
-    the loop, so there is no check-then-commit window.
+    the staged schema (round-13 ADVICE).
 
     ``expect_mapping`` (sentinel-defaulted: ``None`` is a legal
     expectation) is the logical->physical column mapping the caller
@@ -150,9 +183,9 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
     of them would orphan the vector and resurrect rows.  Their
     disappearance is a conflict; compatible appends still rebase."""
     removed = set(touched)
-    for _ in range(retries + 1):
-        cur = latest_version(path)
-        cm = _read_manifest(path, cur)
+    dvs = add_dvs if add_dvs else ([] if purge_dvs else None)
+
+    def plan(cur, cm):
         if expect_schema is not None and cm.get("schema") != expect_schema:
             raise ConcurrentModification(
                 f"schema changed under this {op} (a concurrent schema "
@@ -187,17 +220,13 @@ def _rebase_commit(path: str, touched: list[str], new_files: list[str],
                 "re-run against the new snapshot"
             )
         kept = [f for f in cm["files"] if f not in removed]
-        dvs = add_dvs if add_dvs else ([] if purge_dvs else None)
-        try:
-            _commit(path, cur + 1, sorted(kept) + sorted(new_files),
-                    cur, op, partitions=new_partitions, base=cm, dvs=dvs,
-                    dv_rows=add_dv_rows if dvs is not None else None,
-                    schema=schema, mapping=mapping,
-                    dropped_physical=dropped_physical)
-            return cur + 1
-        except CommitConflict:
-            continue  # version race only: rebase again
-    raise CommitConflict(f"{op} at {path} lost {retries + 1} races")
+        return sorted(kept) + sorted(new_files), dict(
+            partitions=new_partitions, dvs=dvs,
+            dv_rows=add_dv_rows if dvs is not None else None,
+            schema=schema, mapping=mapping,
+            dropped_physical=dropped_physical)
+
+    return _commit_loop(path, op, plan)
 
 
 def _manifest_dir(path: str) -> str:
@@ -222,6 +251,15 @@ def _versions(path: str) -> list[int]:
 def latest_version(path: str) -> int:
     """Highest committed version, 0 if the table does not exist."""
     return max(_versions(path), default=0)
+
+
+def _latest(path: str) -> tuple[int, dict]:
+    """``(latest version, its manifest)`` of an existing table; raises
+    ``ValueError`` when the table does not exist."""
+    v = latest_version(path)
+    if v == 0:
+        raise ValueError(f"table does not exist: {path}")
+    return v, _read_manifest(path, v)
 
 
 #: Suffix of the temp names :func:`_create_json` writes before linking.
@@ -937,26 +975,55 @@ def read(spark: SparkSession, path: str, version: int | None = None
     return _load_files_dv(spark, path, m, m["files"])
 
 
-def append(spark: SparkSession, path: str, df: DataFrame,
-           retries: int = 3) -> int:
+def append(spark: SparkSession, path: str, df: DataFrame) -> int:
     """Append-only commit: parent files carry over by reference.  On a
     nonexistent table (parent 0) the append CREATES it — the v1 commit
     still goes through the same one-winner publish, so an append racing
-    a create has exactly one winner and the loser retries as a normal
+    a create has exactly one winner and the loser re-plans as a normal
     append against the winner's manifest.  On a partitioned table the
     new rows split through the same hive-layout writer as create."""
-    return _append(path, df, retries)
+    return _append(path, df)
 
 
-def _append(path: str, df: DataFrame, retries: int,
-            txn_id: str | None = None) -> int:
+class _AppendBatch:
+    """The data write both append plans share (:func:`_append`,
+    :func:`append_evolve`): identity stamped from the high-waters of
+    ``pm0``, the :func:`_prepare_batch` gate (generated columns, CHECK
+    constraints), one write under ``pm0``'s layout and ``mapping``."""
+
+    def __init__(self, path: str, df: DataFrame, pm0: dict,
+                 mapping: dict | None):
+        self._write = lambda d: _write_files_any(
+            d, path, pm0.get("partition_by"), mapping=mapping)
+        self.stamped_from = pm0.get("identity")
+        self.identity = None
+        if self.stamped_from:
+            df, self.identity = _stamp_identity(df, self.stamped_from)
+        self.df = _prepare_batch(df, pm0, "append")
+        self.files, self.parts = self._write(self.df)
+
+    def restamp(self, pm: dict) -> None:
+        """RE-STAMP and rewrite the batch if ``pm``'s identity
+        high-waters moved past the ones it was stamped from: a racer
+        landed overlapping values, which file sets cannot show (the
+        staged files become orphans for vacuum, like any loser's)."""
+        cur = pm.get("identity") or self.stamped_from
+        if self.stamped_from and any(
+                cur[c]["hw"] != self.stamped_from[c]["hw"]
+                for c in self.stamped_from):
+            self.stamped_from = cur
+            self.df, self.identity = _stamp_identity(
+                self.df.drop(*self.identity), cur)
+            self.files, self.parts = self._write(self.df)
+
+
+def _append(path: str, df: DataFrame, txn_id: str | None = None) -> int:
     """The one append body behind :func:`append` and
-    :func:`append_idempotent`: identity stamping, the write-side gate
-    (:func:`_prepare_batch` — generated columns, CHECK constraints),
-    one data write, then the commit retry loop.  With ``txn_id`` the
-    commit also records the txn tag, and a txn found already committed
-    (before the write, or as the winner of a lost race) returns its
-    version instead."""
+    :func:`append_idempotent`: one :class:`_AppendBatch` write, then a
+    plan that re-stamps it for the manifest it commits on.  With
+    ``txn_id`` the commit also records the txn tag, and a txn found
+    already committed (before the write, or as the winner of a lost
+    race) returns its version instead."""
     os.makedirs(path, exist_ok=True)
     parent0 = latest_version(path)
     pm0 = _read_manifest(path, parent0) if parent0 else {}
@@ -964,19 +1031,9 @@ def _append(path: str, df: DataFrame, retries: int,
         seen = _known_txns(path, pm0)
         if txn_id in seen:
             return seen[txn_id]  # re-delivery: nothing written
-    ident = pm0.get("identity")
-    ident_state = None
-    if ident:
-        df, ident_state = _stamp_identity(df, ident)
-    df = _prepare_batch(df, pm0, "append")
-    files, parts = _write_files_any(df, path, pm0.get("partition_by"),
-                                    mapping=pm0.get("mapping"))
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent) if parent else {}
+    batch = _AppendBatch(path, df, pm0, pm0.get("mapping"))
+
+    def plan(parent, pm):
         txn_keys = {}
         if txn_id is not None:
             seen = _known_txns(path, pm)
@@ -986,39 +1043,23 @@ def _append(path: str, df: DataFrame, retries: int,
                 # wrote now — expire_snapshots only deletes files that
                 # expired manifests reference, so nothing else ever
                 # would (round-11 ADVICE: orphan-file leak)
-                for f in files:
+                for f in batch.files:
                     try:
                         os.unlink(os.path.join(path, f))
                     except FileNotFoundError:
                         pass
-                _cleanup_empty_dir(path, files)
+                _cleanup_empty_dir(path, batch.files)
                 return seen[txn_id]
             txn_keys = {"txn": txn_id,
                         "txns": {**seen, txn_id: parent + 1}}
-        if ident:
-            # identity is the one append state file-set comparison
-            # cannot see: a racer that stamped from the same
-            # high-water landed overlapping values — if the latest
-            # manifest's high-waters moved past the ones we planned
-            # against, RE-STAMP against them and rewrite (the staged
-            # files are orphans for vacuum, exactly like any loser's)
-            cur = pm.get("identity") or ident
-            if any(cur[c]["hw"] != ident[c]["hw"] for c in ident):
-                ident = cur
-                df, ident_state = _stamp_identity(
-                    df.drop(*ident_state.keys()), ident)
-                files, parts = _write_files_any(
-                    df, path, pm0.get("partition_by"),
-                    mapping=pm0.get("mapping"))
-        try:
-            _commit(path, parent + 1, (pm.get("files") or []) + files,
-                    parent, "append", partitions=parts, base=pm,
-                    schema=schema if not parent else None,
-                    identity=ident_state, **txn_keys)
-            return parent + 1
-        except CommitConflict:
-            continue  # blind append composes with anything: retry
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+        batch.restamp(pm)
+        schema = None if parent else ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in batch.df.schema)
+        return (pm.get("files") or []) + batch.files, dict(
+            partitions=batch.parts, schema=schema,
+            identity=batch.identity, **txn_keys)
+
+    return _commit_loop(path, "append", plan)
 
 
 def _key_list(key) -> list[str]:
@@ -1104,10 +1145,7 @@ def merge_upsert(
       manifest by reference (file-level pruning via
       ``input_file_name()``).
     """
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    manifest = _read_manifest(path, parent)
+    parent, manifest = _latest(path)
     if _has_dvs(manifest):
         raise ValueError(
             "table carries deletion vectors — run optimize() to purge "
@@ -1176,10 +1214,7 @@ def optimize(
     already meets the target — no empty commit)."""
     import math
 
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    manifest = _read_manifest(path, parent)
+    parent, manifest = _latest(path)
     files = manifest["files"]
     total = 0
     for f in files:
@@ -1235,10 +1270,7 @@ def optimize_binpack(
     hive dirs).  Commits through the standard rebase loop: touched =
     exactly the packed small files, so a concurrent edit of an
     untouched large file composes."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     if _has_dvs(m):
         raise ValueError(
             "table carries deletion vectors — run optimize() (full "
@@ -1303,10 +1335,7 @@ def optimize_where(
     rewrite of a scoped file conflicts."""
     import math
 
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    manifest = _read_manifest(path, parent)
+    parent, manifest = _latest(path)
     pby = manifest.get("partition_by")
     if not pby:
         raise ValueError(
@@ -1431,10 +1460,7 @@ def delete_where(
     file-level bound as MERGE, driven by pure manifest math instead
     of a key join.  A file wholly inside the range is dropped without
     being read.  Returns the committed version."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     if _has_dvs(m):
         raise ValueError(
             "table carries deletion vectors — run optimize() to purge "
@@ -1533,13 +1559,13 @@ def _merge_schema(old_ddl: str, df: DataFrame) -> str:
     )
 
 
-def append_evolve(spark: SparkSession, path: str, df: DataFrame,
-                  retries: int = 3) -> int:
+def append_evolve(spark: SparkSession, path: str, df: DataFrame) -> int:
     """Append with additive schema evolution: new columns widen the
     manifest schema; files written before the column existed read
     back NULL for it (parquet-by-name resolution against the manifest
     schema — the Iceberg/Delta ``mergeSchema`` contract).  Existing
-    columns must keep their types.
+    columns must keep their types.  Identity, generated columns and
+    CHECK constraints apply exactly as in :func:`append`.
 
     Composes with COLUMN MAPPING: a new column whose name collides
     with a DROPPED column's physical name (a re-add after
@@ -1548,9 +1574,8 @@ def append_evolve(spark: SparkSession, path: str, df: DataFrame,
     rows correctly read NULL for the re-added column."""
     v0 = latest_version(path)
     if v0 == 0:
-        return append(spark, path, df, retries=retries)
+        return append(spark, path, df)
     m0 = _read_manifest(path, v0)
-    pby = m0.get("partition_by")
     mapping = dict(m0.get("mapping") or {})
     old_cols = set(_schema_types(m0["schema"]))
     used_physical = set(mapping.values()) | \
@@ -1560,20 +1585,16 @@ def append_evolve(spark: SparkSession, path: str, df: DataFrame,
         if c not in old_cols and c not in mapping and c in used_physical:
             mapping[c] = f"{c}_{uuid.uuid4().hex[:8]}"
             new_mapping = True
-    df = _prepare_batch(df, m0, "append")
-    files, parts = _write_files_any(df, path, pby, mapping=mapping)
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        merged = _merge_schema(pm["schema"], df)
-        try:
-            _commit(path, parent + 1, pm["files"] + files, parent,
-                    "append", schema=merged, partitions=parts,
-                    mapping=mapping if new_mapping else None)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append to {path} lost {retries + 1} races")
+    batch = _AppendBatch(path, df, m0, mapping)
+
+    def plan(parent, pm):
+        batch.restamp(pm)
+        return pm["files"] + batch.files, dict(
+            schema=_merge_schema(pm["schema"], batch.df),
+            partitions=batch.parts, identity=batch.identity,
+            mapping=mapping if new_mapping else None)
+
+    return _commit_loop(path, "append", plan)
 
 
 def expire_snapshots(path: str, keep_from: int) -> dict:
@@ -1644,7 +1665,7 @@ def _cleanup_empty_dir(path: str, rel_files: list[str]) -> None:
 
 
 def append_idempotent(spark: SparkSession, path: str, df: DataFrame,
-                      txn_id: str, retries: int = 3) -> int:
+                      txn_id: str) -> int:
     """Exactly-once append: a commit tagged ``txn_id`` lands at most
     once per table — re-delivery of the same transaction (a retried
     streaming micro-batch, a replayed job) finds the tag in the
@@ -1655,7 +1676,7 @@ def append_idempotent(spark: SparkSession, path: str, df: DataFrame,
     state, so it survives driver restarts and checkpoint loss.
     Otherwise it is exactly :func:`append` — same identity stamping,
     constraint and generated-column gate, and commit."""
-    return _append(path, df, retries, txn_id=txn_id)
+    return _append(path, df, txn_id=txn_id)
 
 
 def _known_txns(path: str, m: dict) -> dict[str, int]:
@@ -1710,10 +1731,7 @@ def optimize_zorder(
     ``dv_rows`` twice and keeping CoW ops refusing forever."""
     from ..operators.scale import morton_code
 
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    manifest = _read_manifest(path, parent)
+    parent, manifest = _latest(path)
     df = read(spark, path, parent)
     stats = df.agg(
         F.min(col_a).alias("a_min"), F.max(col_a).alias("a_max"),
@@ -1954,10 +1972,7 @@ def replace_where(
     the range, the rest carry by reference).  The replacement frame is
     VALIDATED to lie within the range — rows outside it would silently
     clobber data the predicate promised not to touch, so they raise."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     if _has_dvs(m):
         raise ValueError(
             "table carries deletion vectors — run optimize() to purge "
@@ -2043,10 +2058,7 @@ def delete_where_dv(
     Stats pruning still bounds the scan to candidate files.  Stacked
     DV deletes accumulate sidecars; :func:`optimize` applies and
     drops them."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     candidates, _total = prune_files(path, column, lo, hi, version=parent)
     if not candidates:
         return parent  # nothing can match: no commit needed
@@ -2137,10 +2149,7 @@ def update_where_mor(
     Positional CDF reports a MoR update as delete+insert — the DV
     delta plus the new files — exactly how position-delete formats
     surface it without persisted row lineage."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     types = _schema_types(m["schema"])
     unknown = [c for c in set_exprs if c not in types]
     if unknown:
@@ -2238,10 +2247,7 @@ def replace_partitions(spark: SparkSession, path: str,
     rules match the other rewrites: a concurrent commit that removed
     one of the replaced files, or changed the deletion-vector set,
     raises :class:`ConcurrentModification`."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     pby = m.get("partition_by")
     if not pby:
         raise ValueError(
@@ -2271,8 +2277,7 @@ def replace_partitions(spark: SparkSession, path: str,
                           expect_dvs=[], new_partitions=new_parts)
 
 
-def set_partition_spec(path: str, partition_by: list[str] | None,
-                       retries: int = 3) -> int:
+def set_partition_spec(path: str, partition_by: list[str] | None) -> int:
     """Evolve the table's partition spec at a version boundary
     (Iceberg partition-spec evolution, round-12 VERDICT task 4): a
     METADATA-ONLY commit — zero data files are touched, read, or
@@ -2287,44 +2292,35 @@ def set_partition_spec(path: str, partition_by: list[str] | None,
     ``partition_by`` may be ``None``/``[]`` to evolve a partitioned
     table back to a flat layout.  Returns the committed version (the
     current one if the spec is already in effect)."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
-        new_spec = list(partition_by or [])
+    new_spec = list(partition_by or [])
+
+    def plan(parent, pm):
         specs = dict(pm.get("specs") or {})
         if not specs:
             # first evolution: the table's entire history so far is
             # one implicit spec — materialize it as spec "1"
             specs["1"] = list(pm.get("partition_by") or [])
-        cur_default = pm.get("default_spec") or "1"
-        if specs.get(cur_default) == new_spec:
+        if specs.get(pm.get("default_spec") or "1") == new_spec:
             return parent  # already in effect: no-op, no commit
         schema_cols = set(_schema_types(pm["schema"]))
         for spec in new_spec:
-            _name, src, _e, _py, _ty, _kind = _parse_transform(spec)
+            src = _parse_transform(spec)[1]
             if src not in schema_cols:
                 raise ValueError(
-                    f"partition source column {src!r} not in table "
-                    f"schema")
+                    f"partition source column {src!r} not in table schema")
         # reuse a historical spec id if the exact spec list returns
         sid = next((s for s, v in specs.items() if v == new_spec), None)
         if sid is None:
             sid = str(max(int(s) for s in specs) + 1)
             specs[sid] = new_spec
-        try:
-            # _commit tags carried files with the parent's (possibly
-            # implicit "1") spec and would tag NEW files with `sid` —
-            # a set-spec commit adds none, so the tag map is complete
-            _commit(path, parent + 1, pm["files"], parent, "set-spec",
-                    partition_by=new_spec,
-                    specs=specs, default_spec=sid)
-            return parent + 1
-        except CommitConflict:
-            continue  # version race: re-read the new latest and retry
-    raise CommitConflict(f"set_partition_spec at {path} lost "
-                         f"{retries + 1} races")
+        # _commit tags carried files with the parent's (possibly
+        # implicit "1") spec and would tag NEW files with `sid` — a
+        # set-spec commit adds none, so the tag map is complete
+        return pm["files"], dict(partition_by=new_spec, specs=specs,
+                                 default_spec=sid)
+
+    _latest(path)
+    return _commit_loop(path, "set-spec", plan)
 
 
 def _all_spec_sources(m: dict) -> set[str]:
@@ -2338,7 +2334,7 @@ def _all_spec_sources(m: dict) -> set[str]:
     }
 
 
-def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
+def rename_column(path: str, old: str, new: str) -> int:
     """Rename a column WITHOUT rewriting any data file (column
     mapping, round-12 VERDICT task 5 — the Delta name-mapping /
     Iceberg field-id mechanism): a metadata-only commit updates the
@@ -2351,11 +2347,7 @@ def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
     :func:`_physical`.  Partition-source columns (any spec in
     history) are refused — their hive dir names cannot be relabeled
     without a rewrite."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(parent, pm):
         types = _schema_types(pm["schema"])
         if old not in types:
             raise ValueError(f"no such column: {old!r}")
@@ -2382,19 +2374,14 @@ def rename_column(path: str, old: str, new: str, retries: int = 3) -> int:
         ndv = dict(pm.get("ndv_sketch") or {})
         if old in ndv:
             ndv[new] = ndv.pop(old)
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "rename-column", schema=schema, mapping=mapping,
-                    bloom_index=bloom, ndv_sketch=ndv)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"rename_column at {path} lost "
-                         f"{retries + 1} races")
+        return pm["files"], dict(schema=schema, mapping=mapping,
+                                 bloom_index=bloom, ndv_sketch=ndv)
+
+    _latest(path)
+    return _commit_loop(path, "rename-column", plan)
 
 
-def widen_column_type(path: str, col: str, new_type: str,
-                      retries: int = 3) -> int:
+def widen_column_type(path: str, col: str, new_type: str) -> int:
     """ALTER COLUMN TYPE — explicit WIDENING as a metadata-only
     commit (the DDL face of the append/merge-time widening in
     :func:`_merge_schema`): the manifest schema flips to the wider
@@ -2402,11 +2389,7 @@ def widen_column_type(path: str, col: str, new_type: str,
     every generation reads through Spark 4's parquet widening
     conversions.  Non-lattice changes and narrowings are refused —
     narrowing would make every existing file a narrowing read."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(parent, pm):
         types = _schema_types(pm["schema"])
         if col not in types:
             raise ValueError(f"no such column: {col!r}")
@@ -2416,21 +2399,14 @@ def widen_column_type(path: str, col: str, new_type: str,
                 f"cannot ALTER {col!r} {types[col]} -> {new_type}: only "
                 "lattice widenings (tinyint<smallint<int<bigint, "
                 "float<double) are metadata-only")
-        schema = ", ".join(
-            f"{n} {new_type if n == col else t}"
-            for n, t in types.items())
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "widen-column", schema=schema)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"widen_column_type at {path} lost "
-                         f"{retries + 1} races")
+        return pm["files"], dict(schema=", ".join(
+            f"{n} {new_type if n == col else t}" for n, t in types.items()))
+
+    _latest(path)
+    return _commit_loop(path, "widen-column", plan)
 
 
-def add_column_default(path: str, col: str, type_ddl: str, default,
-                       retries: int = 3) -> int:
+def add_column_default(path: str, col: str, type_ddl: str, default) -> int:
     """ADD COLUMN ... DEFAULT — the Iceberg v3 INITIAL-DEFAULT
     contract (round 16): a metadata-only commit appends the column
     to the logical schema and records ``default`` with the commit
@@ -2447,13 +2423,9 @@ def add_column_default(path: str, col: str, type_ddl: str, default,
     ``append_evolve``'s fresh-physical-name machinery instead)."""
     if not isinstance(default, (int, float, str, bool)):
         raise ValueError("initial default must be a scalar literal")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
-        types = _schema_types(pm["schema"])
-        if col in types:
+
+    def plan(parent, pm):
+        if col in _schema_types(pm["schema"]):
             raise ValueError(f"column already exists: {col!r}")
         if col in (pm.get("dropped_physical") or []):
             raise ValueError(
@@ -2462,19 +2434,14 @@ def add_column_default(path: str, col: str, type_ddl: str, default,
                 "append_evolve")
         defaults = dict(pm.get("defaults") or {})
         defaults[col] = {"value": default, "since": parent + 1}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "add-column-default",
-                    schema=f"{pm['schema']}, {col} {type_ddl}",
-                    defaults=defaults)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"add_column_default at {path} lost "
-                         f"{retries + 1} races")
+        return pm["files"], dict(schema=f"{pm['schema']}, {col} {type_ddl}",
+                                 defaults=defaults)
+
+    _latest(path)
+    return _commit_loop(path, "add-column-default", plan)
 
 
-def drop_column(path: str, col: str, retries: int = 3) -> int:
+def drop_column(path: str, col: str) -> int:
     """Drop a column WITHOUT rewriting any data file: a metadata-only
     commit removes the field from the logical schema — the physical
     column stays in the already-written immutable files and is simply
@@ -2483,11 +2450,7 @@ def drop_column(path: str, col: str, retries: int = 3) -> int:
     maps to a FRESH physical name instead of resurrecting the old
     pages' values (:func:`append_evolve`).  Partition-source columns
     are refused, same as rename."""
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        if parent == 0:
-            raise ValueError(f"table does not exist: {path}")
-        pm = _read_manifest(path, parent)
+    def plan(parent, pm):
         types = _schema_types(pm["schema"])
         if col not in types:
             raise ValueError(f"no such column: {col!r}")
@@ -2502,9 +2465,6 @@ def drop_column(path: str, col: str, retries: int = 3) -> int:
         dropped = list(pm.get("dropped_physical") or [])
         if phys not in dropped:
             dropped.append(phys)
-        schema = ", ".join(
-            f"{n} {t}" for n, t in types.items() if n != col
-        )
         # invalidate the dropped column's sidecar maps: a later
         # re-add of the same logical name maps to a FRESH physical
         # column, so sidecars built from the old pages would prune
@@ -2513,16 +2473,14 @@ def drop_column(path: str, col: str, retries: int = 3) -> int:
                  if c != col}
         ndv = {c: fm for c, fm in (pm.get("ndv_sketch") or {}).items()
                if c != col}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "drop-column", schema=schema, mapping=mapping,
-                    dropped_physical=dropped,
-                    bloom_index=bloom, ndv_sketch=ndv)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"drop_column at {path} lost "
-                         f"{retries + 1} races")
+        return pm["files"], dict(
+            schema=", ".join(f"{n} {t}" for n, t in types.items()
+                             if n != col),
+            mapping=mapping, dropped_physical=dropped,
+            bloom_index=bloom, ndv_sketch=ndv)
+
+    _latest(path)
+    return _commit_loop(path, "drop-column", plan)
 
 
 def _write_dv_sidecar(positions: DataFrame, path: str,
@@ -2602,10 +2560,7 @@ def merge_three_way(
     extras away on the rewrite path).  CDF across the merge then
     reports the widened rows with NULL-backfilled pre-images — the
     documented ``change_data_feed`` evolution contract."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    manifest = _read_manifest(path, parent)
+    parent, manifest = _latest(path)
     if _has_dvs(manifest):
         raise ValueError(
             "table carries deletion vectors — run optimize() to purge "
@@ -2775,9 +2730,7 @@ def version_as_of(path: str, ts: float) -> int:
     toward the newest eligible version).  Raises when ``ts`` predates
     the first retained commit (same contract as time travel to an
     expired version)."""
-    latest = latest_version(path)
-    if latest == 0:
-        raise ValueError(f"table does not exist: {path}")
+    _latest(path)
     best = None
     for v in _versions(path):
         mts = _read_manifest(path, v).get("ts")
@@ -2935,9 +2888,7 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     {"files_removed": n, "bytes_removed": n}."""
     import time
 
-    latest = latest_version(path)
-    if latest == 0:
-        raise ValueError(f"table does not exist: {path}")
+    _latest(path)
     referenced: set[str] = set()
     for v in _versions(path):
         m = _read_manifest(path, v)
@@ -2997,9 +2948,7 @@ def describe_history(path: str) -> list[dict]:
     version, parent, operation, commit timestamp, file/DV counts, row
     count when every entry carries footer stats (metadata-only), and
     the txn tag if the commit was idempotent.  Pure manifest math."""
-    latest = latest_version(path)
-    if latest == 0:
-        raise ValueError(f"table does not exist: {path}")
+    _latest(path)
     out = []
     for v in reversed(_versions(path)):
         m = _read_manifest(path, v)
@@ -3104,7 +3053,7 @@ def _enforce_constraints(df: DataFrame, m: dict | None, op: str) -> None:
 
 
 def add_check_constraint(spark: SparkSession, path: str, name: str,
-                         predicate: str, retries: int = 3) -> int:
+                         predicate: str) -> int:
     """ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<predicate>) —
     Delta's table-constraint mechanics: the EXISTING rows are
     validated first (one full read, the same cost Delta pays), then
@@ -3114,59 +3063,46 @@ def add_check_constraint(spark: SparkSession, path: str, name: str,
     table never sees the bad batch).  NOT NULL is the special case
     ``<col> IS NOT NULL``.  Constraints carry through every commit
     kind, survive snapshot expiry, and are dropped by
-    :func:`drop_constraint`."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m0 = _read_manifest(path, v0)
-    if name in (m0.get("constraints") or {}):
-        raise ValueError(f"constraint '{name}' already exists at {path}")
-    if not read(spark, path).filter(
-        F.coalesce(F.expr(predicate).cast("boolean"), F.lit(True))
-        == F.lit(False)
-    ).isEmpty():
-        raise ConstraintViolation(
-            f"existing rows violate CHECK ({predicate}) — constraint "
-            f"'{name}' not added"
-        )
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+    :func:`drop_constraint`.  The rows validated are those of the
+    manifest the constraint commits on: a commit that lost its race
+    re-validates when the files, deletion vectors or schema moved."""
+    validated = None
+
+    def plan(parent, pm):
+        nonlocal validated
         cons = dict(pm.get("constraints") or {})
         if name in cons:
             raise ValueError(f"constraint '{name}' already exists at {path}")
+        snapshot = (pm["files"], pm.get("dvs"), pm["schema"])
+        if snapshot != validated:
+            if not _load_files_dv(spark, path, pm, pm["files"]).filter(
+                F.coalesce(F.expr(predicate).cast("boolean"), F.lit(True))
+                == F.lit(False)
+            ).isEmpty():
+                raise ConstraintViolation(
+                    f"existing rows violate CHECK ({predicate}) — "
+                    f"constraint '{name}' not added"
+                )
+            validated = snapshot
         cons[name] = predicate
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "add_constraint", constraints=cons)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"add_constraint at {path} lost {retries + 1} races")
+        return pm["files"], dict(constraints=cons)
+
+    _latest(path)
+    return _commit_loop(path, "add_constraint", plan)
 
 
-def drop_constraint(path: str, name: str, retries: int = 3) -> int:
+def drop_constraint(path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — metadata-only commit."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+    def plan(parent, pm):
         cons = dict(pm.get("constraints") or {})
         if name not in cons:
             raise ValueError(f"unknown constraint '{name}' at {path}")
         del cons[name]
-        try:
-            # an explicit {} clears the carry (None would inherit)
-            _commit(path, parent + 1, pm["files"], parent,
-                    "drop_constraint", constraints=cons)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"drop_constraint at {path} lost {retries + 1} races")
+        # an explicit {} clears the carry (None would inherit)
+        return pm["files"], dict(constraints=cons)
+
+    _latest(path)
+    return _commit_loop(path, "drop_constraint", plan)
 
 
 # --------------------------------------------------------------------
@@ -3200,7 +3136,7 @@ def _validate_restore_constraints(spark: SparkSession, path: str,
 
 
 def restore_table(path: str, version: int | None = None,
-                  tag: str | None = None, retries: int = 3,
+                  tag: str | None = None,
                   spark: SparkSession | None = None) -> int:
     """RESTORE TABLE ... TO VERSION AS OF <v> / tag (Delta RESTORE):
     commit a NEW version whose snapshot state — file list, schema,
@@ -3232,8 +3168,7 @@ def restore_table(path: str, version: int | None = None,
     v = list_tags(path).get(tag) if tag is not None else int(version)
     if v is None:
         raise ValueError(f"unknown tag '{tag}' at {path}")
-    if latest_version(path) == 0:
-        raise ValueError(f"table does not exist: {path}")
+    _latest(path)
     if not os.path.exists(_manifest_path(path, v)):
         raise ValueError(
             f"version {v} is not retained at {path} (expired?)")
@@ -3248,9 +3183,9 @@ def restore_table(path: str, version: int | None = None,
             f"cannot restore {path} to v{v}: {len(missing)} data "
             f"file(s) were vacuumed (e.g. {sorted(missing)[:2]})")
     validated: dict | None = None
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
+
+    def plan(parent, pm):
+        nonlocal validated
         kept_cons = pm.get("constraints") or {}
         if kept_cons and kept_cons != validated:
             if spark is None:
@@ -3259,14 +3194,11 @@ def restore_table(path: str, version: int | None = None,
                     "spark= to revalidate the restored snapshot")
             _validate_restore_constraints(spark, path, tm, kept_cons)
             validated = dict(kept_cons)
-        try:
-            _commit(path, parent + 1, tm["files"], parent, "restore",
-                    base=tm, restore_of=v, txns=pm.get("txns") or {},
-                    constraints=kept_cons)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"restore at {path} lost {retries + 1} races")
+        return tm["files"], dict(base=tm, restore_of=v,
+                                 txns=pm.get("txns") or {},
+                                 constraints=kept_cons)
+
+    return _commit_loop(path, "restore", plan)
 
 
 # --------------------------------------------------------------------
@@ -3357,8 +3289,7 @@ def metadata_table(spark: SparkSession, path: str, kind: str,
 # Write-Audit-Publish (Iceberg WAP / Delta staged commits)
 # --------------------------------------------------------------------
 
-def publish(spark: SparkSession, staging_path: str, main_path: str,
-            retries: int = 3) -> int:
+def publish(spark: SparkSession, staging_path: str, main_path: str) -> int:
     """WRITE-AUDIT-PUBLISH: fast-forward MAIN by the changes staged on
     a :func:`shallow_clone` of it — the Iceberg WAP / audit-branch
     pattern.  The flow is::
@@ -3449,7 +3380,7 @@ def publish(spark: SparkSession, staging_path: str, main_path: str,
             moved_parts[dst_rel] = sparts[rel]
     return _rebase_commit(
         main_path, sorted(dropped), sorted(moved), "wap_publish",
-        retries=retries, expect_dvs=[],
+        expect_dvs=[],
         new_partitions=moved_parts or None, schema=schema,
         # staged evolution: main's schema must still be the clone
         # point's at COMMIT time, not just at the pre-check above —
@@ -3579,7 +3510,7 @@ def read_branch(spark: SparkSession, path: str, name: str,
 
 
 def publish_branch(spark: SparkSession, path: str, name: str,
-                   retries: int = 3, retain: bool = False) -> int:
+                   retain: bool = False) -> int:
     """FAST-FORWARD PUBLISH a branch to main — Iceberg's
     ``fast_forward('main', '<branch>')`` with Delta-WAP squash
     semantics: the branch's net effect since its fork point lands on
@@ -3602,7 +3533,7 @@ def publish_branch(spark: SparkSession, path: str, name: str,
     bp = branch_path(path, name)
     if latest_version(bp) == 0:
         raise ValueError(f"unknown branch '{name}' at {path}")
-    v = publish(spark, bp, path, retries=retries)
+    v = publish(spark, bp, path)
     drop_branch(path, name)
     if retain:
         create_branch(path, name, version=v)
@@ -3773,109 +3704,112 @@ def _bloom_hashes(v, m: int, k: int) -> list[int]:
 
 
 def build_bloom_index(spark: SparkSession, path: str, column: str,
-                      fpp: float = 0.01, retries: int = 3) -> int:
+                      fpp: float = 0.01) -> int:
     """CREATE BLOOMFILTER INDEX on ``column``: one column-pruned
     distributed pass over the live files that lack a sidecar, folding
     per-Arrow-batch partial bitmaps keyed by file; the driver ORs the
     partials (O(files·bloom_bytes), the same envelope as the manifest)
     and commits ``blooms/`` sidecars plus the {file: sidecar} map as a
     METADATA-ONLY version.  Per-file sizing comes from the manifest's
-    footer row counts, so fpp holds per file without a pre-count."""
+    footer row counts, so fpp holds per file without a pre-count.  A
+    commit that lost its race indexes the files the winner added."""
+    return _commit_sidecars(
+        path, "bloom_index", "bloom_index", column,
+        lambda m, todo: _bloom_sidecars(spark, path, m, column, todo, fpp))
+
+
+def _commit_sidecars(path: str, op: str, key: str, column: str,
+                     build) -> int:
+    """Commit ``column``'s {file: sidecar} map under manifest ``key``
+    as a METADATA-ONLY version.  ``build(m, todo)`` writes sidecars for
+    the files ``todo`` of snapshot ``m`` and returns {file: sidecar};
+    it runs on the live files that lack one, so a commit that lost its
+    race also covers the files the winner added."""
+    built: dict[str, str] = {}  # file -> sidecar, across attempts
+
+    def plan(parent, pm):
+        idx = dict(pm.get(key) or {})
+        existing = idx.get(column) or {}
+        todo = [f for f in pm["files"] if f not in existing
+                and f not in built]
+        if todo:
+            built.update(build(pm, todo))
+        live = set(pm["files"])
+        idx[column] = {f: sc for f, sc in {**existing, **built}.items()
+                       if f in live}
+        return pm["files"], {key: idx}
+
+    _latest(path)
+    return _commit_loop(path, op, plan)
+
+
+def _bloom_sidecars(spark: SparkSession, path: str, m: dict, column: str,
+                    todo: list[str], fpp: float) -> dict[str, str]:
+    """Build and write one ``blooms/`` sidecar per file in ``todo``
+    (snapshot ``m``); returns {file: sidecar}.  A file with only NULLs
+    or no rows gets an all-zero bitmap."""
     import base64
 
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m0 = _read_manifest(path, v0)
-    if column != _physical(m0, column) and column not in \
-            _schema_types(m0["schema"]):
+    import numpy as np
+    import pandas as pd
+
+    if column != _physical(m, column) and column not in \
+            _schema_types(m["schema"]):
         raise ValueError(f"unknown column {column!r}")
-    existing = ((m0.get("bloom_index") or {}).get(column) or {})
-    todo = [f for f in m0["files"] if f not in existing]
-    stats = m0.get("stats") or {}
-    if todo:
-        import numpy as np
-        import pandas as pd
+    stats = m.get("stats") or {}
+    sizing = {
+        f: _bloom_params(
+            int((stats.get(f) or {}).get("::rows", 10000) or 10000), fpp)
+        for f in todo
+    }
+    rel_expr, _pre = _rel_path_expr(path)
+    df = (_load_files(spark, path, m, todo)
+          .select(F.col(column).alias("__v"), rel_expr))
+    bc = spark.sparkContext.broadcast(sizing)
 
-        sizing = {
-            f: _bloom_params(
-                int((stats.get(f) or {}).get("::rows", 10000) or 10000),
-                fpp)
-            for f in todo
-        }
-        rel_expr, _pre = _rel_path_expr(path)
-        df = (_load_files(spark, path, m0, todo)
-              .select(F.col(column).alias("__v"), rel_expr))
-        bc = spark.sparkContext.broadcast(sizing)
+    def fold(it):
+        partial: dict[str, "np.ndarray"] = {}
+        sz = bc.value
+        for pdf in it:
+            for v, rel in zip(pdf["__v"], pdf["__rel"]):
+                if v is None or rel not in sz:
+                    continue
+                m_bits, k = sz[rel]
+                bits = partial.get(rel)
+                if bits is None:
+                    bits = partial.setdefault(
+                        rel, np.zeros((m_bits + 7) // 8, np.uint8))
+                for h in _bloom_hashes(
+                        int(v) if not isinstance(v, str) else v,
+                        m_bits, k):
+                    bits[h >> 3] |= 1 << (h & 7)
+        yield pd.DataFrame({
+            "rel": list(partial),
+            "bits": [b.tobytes() for b in partial.values()],
+        })
 
-        def fold(it):
-            partial: dict[str, "np.ndarray"] = {}
-            sz = bc.value
-            for pdf in it:
-                for v, rel in zip(pdf["__v"], pdf["__rel"]):
-                    if v is None or rel not in sz:
-                        continue
-                    m_bits, k = sz[rel]
-                    bits = partial.get(rel)
-                    if bits is None:
-                        bits = partial.setdefault(
-                            rel, np.zeros((m_bits + 7) // 8, np.uint8))
-                    for h in _bloom_hashes(
-                            int(v) if not isinstance(v, str) else v,
-                            m_bits, k):
-                        bits[h >> 3] |= 1 << (h & 7)
-            yield pd.DataFrame({
-                "rel": list(partial),
-                "bits": [b.tobytes() for b in partial.values()],
-            })
-
-        parts = df.mapInPandas(fold, "rel string, bits binary")
-        merged: dict[str, bytearray] = {}
-        for r in parts.collect():  # O(files x partitions-touching-file)
-            cur = merged.get(r.rel)
-            if cur is None:
-                merged[r.rel] = bytearray(r.bits)
-            else:
-                for i, byte in enumerate(r.bits):
-                    cur[i] |= byte
-        bdir = os.path.join(path, "blooms")
-        os.makedirs(bdir, exist_ok=True)
-        new_map = dict(existing)
-        for rel, bits in merged.items():
-            m_bits, k = sizing[rel]
-            name = f"blooms/{uuid.uuid4().hex[:16]}.json"
-            with open(os.path.join(path, name), "w") as fh:
-                fh.write(json.dumps({
-                    "column": column, "m": m_bits, "k": k,
-                    "bits": base64.b64encode(bytes(bits)).decode(),
-                }))
-            new_map[rel] = name
-        for rel in todo:
-            if rel not in merged:  # file with only NULLs / no rows
-                m_bits, k = sizing[rel]
-                name = f"blooms/{uuid.uuid4().hex[:16]}.json"
-                with open(os.path.join(path, name), "w") as fh:
-                    fh.write(json.dumps({
-                        "column": column, "m": m_bits, "k": k,
-                        "bits": base64.b64encode(
-                            bytes((m_bits + 7) // 8)).decode(),
-                    }))
-                new_map[rel] = name
-    else:
-        new_map = dict(existing)
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        idx = dict(pm.get("bloom_index") or {})
-        idx[column] = {f: s for f, s in new_map.items()
-                       if f in set(pm["files"])}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "bloom_index", bloom_index=idx)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"bloom_index at {path} lost {retries + 1} races")
+    parts = df.mapInPandas(fold, "rel string, bits binary")
+    merged: dict[str, bytearray] = {}
+    for r in parts.collect():  # O(files x partitions-touching-file)
+        cur = merged.get(r.rel)
+        if cur is None:
+            merged[r.rel] = bytearray(r.bits)
+        else:
+            for i, byte in enumerate(r.bits):
+                cur[i] |= byte
+    os.makedirs(os.path.join(path, "blooms"), exist_ok=True)
+    out = {}
+    for rel in todo:
+        m_bits, k = sizing[rel]
+        bits = merged.get(rel) or bytes((m_bits + 7) // 8)
+        name = f"blooms/{uuid.uuid4().hex[:16]}.json"
+        with open(os.path.join(path, name), "w") as fh:
+            fh.write(json.dumps({
+                "column": column, "m": m_bits, "k": k,
+                "bits": base64.b64encode(bytes(bits)).decode(),
+            }))
+        out[rel] = name
+    return out
 
 
 def prune_files_bloom(spark_or_none, path: str, column: str, value,
@@ -3929,30 +3863,21 @@ def read_bloom_pruned(spark: SparkSession, path: str, column: str,
 # Sort order (Iceberg SORT ORDER / Delta OPTIMIZE ... ZORDER's 1-D kin)
 # --------------------------------------------------------------------
 
-def set_sort_order(path: str, columns: list[str], retries: int = 3) -> int:
+def set_sort_order(path: str, columns: list[str]) -> int:
     """ALTER TABLE ... WRITE ORDERED BY (Iceberg sort-order spec):
     declare the table's clustering columns as a METADATA-ONLY commit.
     The declaration is advisory until :func:`optimize_sorted`
     materializes it — exactly Iceberg's contract, where the sort
     order applies to FUTURE rewrites, not retroactively."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m0 = _read_manifest(path, v0)
-    known = set(_schema_types(m0["schema"]))
-    missing = [c for c in columns if c not in known]
-    if missing:
-        raise ValueError(f"unknown sort columns: {missing}")
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "set_sort_order", sort_order=list(columns))
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"set_sort_order at {path} lost races")
+    def plan(parent, pm):
+        known = set(_schema_types(pm["schema"]))
+        missing = [c for c in columns if c not in known]
+        if missing:
+            raise ValueError(f"unknown sort columns: {missing}")
+        return pm["files"], dict(sort_order=list(columns))
+
+    _latest(path)
+    return _commit_loop(path, "set_sort_order", plan)
 
 
 def optimize_sorted(spark: SparkSession, path: str,
@@ -3967,10 +3892,7 @@ def optimize_sorted(spark: SparkSession, path: str,
     global-sort machinery) + per-partition sort; the commit replaces
     every file atomically, purging any deletion vectors like
     ``optimize``."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     order = m.get("sort_order")
     if not order:
         raise ValueError("no sort order declared — set_sort_order first")
@@ -3990,7 +3912,7 @@ def optimize_sorted(spark: SparkSession, path: str,
 # --------------------------------------------------------------------
 
 def write_ndv_sketches(spark: SparkSession, path: str, column: str,
-                       lg_k: int = 12, retries: int = 3) -> int:
+                       lg_k: int = 12) -> int:
     """ANALYZE-equivalent: attach a mergeable HLL sketch of
     ``column`` to every live data file lacking one — the Iceberg
     puffin-sidecar design (theta/HLL sketches next to the data,
@@ -4000,48 +3922,27 @@ def write_ndv_sketches(spark: SparkSession, path: str, column: str,
     land as immutable ``ndv/`` sidecars plus a {file: sidecar} map in
     a METADATA-ONLY commit.  Re-running after appends sketches ONLY
     the new files — the incremental-ANALYZE property that keeps
-    stats maintenance O(new data) at 100 TB."""
-    v0 = latest_version(path)
-    if v0 == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m0 = _read_manifest(path, v0)
-    existing = ((m0.get("ndv_sketch") or {}).get(column) or {})
-    todo = [f for f in m0["files"] if f not in existing]
-    new_map = dict(existing)
-    if todo:
-        rel_expr, _pre = _rel_path_expr(path)
+    stats maintenance O(new data) at 100 TB; a commit that lost its
+    race sketches the files the winner added the same way."""
+    def sketch(m, todo):
         per_file = (
-            _load_files(spark, path, m0, todo)
-            .select(F.col(column).alias("__v"), rel_expr)
+            _load_files(spark, path, m, todo)
+            .select(F.col(column).alias("__v"), _rel_path_expr(path)[0])
             .groupBy("__rel")
             .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("__sk"))
             .collect()  # one row per file, each a ~KB sketch
         )
-        sdir = os.path.join(path, "ndv")
-        os.makedirs(sdir, exist_ok=True)
-        done = set()
+        os.makedirs(os.path.join(path, "ndv"), exist_ok=True)
+        out = dict.fromkeys(todo, "")  # all-NULL / empty file: NDV 0
         for r in per_file:
             name = f"ndv/{uuid.uuid4().hex[:16]}.bin"
             with open(os.path.join(path, name), "wb") as fh:
                 fh.write(bytes(r["__sk"]))
-            new_map[r["__rel"]] = name
-            done.add(r["__rel"])
-        for f in todo:
-            if f not in done:
-                new_map[f] = ""  # all-NULL / empty file: NDV 0
-    for _ in range(retries + 1):
-        parent = latest_version(path)
-        pm = _read_manifest(path, parent)
-        idx = dict(pm.get("ndv_sketch") or {})
-        idx[column] = {f: s for f, s in new_map.items()
-                       if f in set(pm["files"])}
-        try:
-            _commit(path, parent + 1, pm["files"], parent,
-                    "analyze_ndv", ndv_sketch=idx)
-            return parent + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"write_ndv_sketches at {path} lost races")
+            out[r["__rel"]] = name
+        return out
+
+    return _commit_sidecars(path, "analyze_ndv", "ndv_sketch", column,
+                            sketch)
 
 
 def table_ndv(spark: SparkSession, path: str, column: str,
@@ -4090,10 +3991,7 @@ def optimize_sorted_incremental(spark: SparkSession, path: str
     join the rewrite set (sound).  Returns ``(version, n_rewritten,
     n_total)``; a fully-clustered table returns ``(parent, 0, n)``
     with no empty commit."""
-    parent = latest_version(path)
-    if parent == 0:
-        raise ValueError(f"table does not exist: {path}")
-    m = _read_manifest(path, parent)
+    parent, m = _latest(path)
     order = m.get("sort_order")
     if not order:
         raise ValueError("no sort order declared — set_sort_order first")

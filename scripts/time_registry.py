@@ -38,6 +38,7 @@ file after every query, so a crashed JVM loses nothing.
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import json
@@ -52,10 +53,21 @@ sys.path.insert(0, REPO)
 from bench import _gate_on_load, _load_prev_bench  # noqa: E402
 
 
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Time every registered query (or the named ones) at "
+        "one scale factor, slowest first.",
+        epilog="Each query runs $SPARK_GRAFT_SWEEP_RUNS times (default 2).")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("out_path", nargs="?", default="/tmp/time_registry.json")
+    ap.add_argument("query", nargs="*",
+                    help="time only these queries (default: all)")
+    return ap.parse_args(argv)
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/time_registry.json"
-    only = sys.argv[3:]
+    args = _parse_args()
+    sf_dir, out_path, only = args.sf_dir, args.out_path, args.query
     n_runs = int(os.environ.get("SPARK_GRAFT_SWEEP_RUNS", "2"))
     env_warnings: list[str] = []
     load_info = _gate_on_load(env_warnings)

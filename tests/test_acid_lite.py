@@ -1231,30 +1231,164 @@ def test_spec_evolution_mixed_read_and_prune(spark, tdir):
     assert g1_sel and all("day=0/" in f for f in g1_sel)
 
 
-def test_set_partition_spec_race_retries(spark, tdir, monkeypatch):
-    """A concurrent append landing between the evolution's snapshot
-    read and its commit must NOT be lost: the evolution retries onto
-    the new latest and carries the appended file, tagged with the
-    spec that wrote it (the pre-evolution spec)."""
-    acid_lite.create_table(spark, tdir, _pdf(spark, [(1, "a", 0)]))
-    orig_commit = acid_lite._commit
-    state = {"raced": False}
+def _lose_races(monkeypatch, land, every: bool = False) -> dict:
+    """Patch ``_commit`` so that its first call (each call, with
+    ``every``) runs ``land()`` — a concurrent commit that lands first —
+    and then loses the version race.  Commits made by ``land`` itself
+    go through.  Returns the counter of lost races."""
+    orig = acid_lite._commit
+    state = {"landing": False, "lost": 0}
 
-    def racing_commit(path, version, files, parent, op, **kw):
-        if op == "set-spec" and not state["raced"]:
-            state["raced"] = True
-            acid_lite.append(spark, tdir, _pdf(spark, [(2, "b", 1)]))
-        return orig_commit(path, version, files, parent, op, **kw)
+    def racing(path, version, files, parent, op, **kw):
+        if state["landing"] or (state["lost"] and not every):
+            return orig(path, version, files, parent, op, **kw)
+        state["landing"] = True
+        try:
+            land()
+        finally:
+            state["landing"] = False
+        state["lost"] += 1
+        raise acid_lite.CommitConflict(
+            f"version {version} lost to a concurrent commit")
 
-    monkeypatch.setattr(acid_lite, "_commit", racing_commit)
-    v = acid_lite.set_partition_spec(tdir, ["day"])
-    m = acid_lite._read_manifest(tdir, v)
-    assert m["op"] == "set-spec" and v == 3
-    # both rows survive; the appended (flat-spec) file is tagged "1"
-    got = {(r.k, r.day) for r in acid_lite.read(spark, tdir).collect()}
-    assert got == {(1, 0), (2, 1)}
-    assert set(m["file_spec"].values()) == {"1"}
-    assert m["specs"]["1"] == [] and m["specs"][m["default_spec"]] == ["day"]
+    monkeypatch.setattr(acid_lite, "_commit", racing)
+    return state
+
+
+_RACED_OPS = ("set_partition_spec", "rename_column", "widen_column_type",
+              "add_column_default", "drop_column", "add_check_constraint",
+              "drop_constraint", "restore_table", "build_bloom_index",
+              "set_sort_order", "write_ndv_sketches", "append_evolve")
+
+
+@pytest.mark.parametrize("op", _RACED_OPS)
+def test_every_commit_replans_after_a_lost_race(spark, tdir, monkeypatch,
+                                                op):
+    """A concurrent append landing between an op's plan and its commit
+    is never lost: the op re-plans on the new latest, commits one
+    version later, and its own effect reads back.  restore_table
+    replaces the snapshot by contract, so its table reads the
+    target's rows.  Set-spec also tags the appended file with the
+    spec that wrote it (the pre-evolution one)."""
+    mk = lambda rows, ddl="k bigint, v int": spark.createDataFrame(
+        rows, ddl).coalesce(1)
+    acid_lite.create_table(spark, tdir, mk([(1, 10)]))
+    if op == "drop_constraint":
+        acid_lite.add_check_constraint(spark, tdir, "pos", "v > 0")
+    elif op == "restore_table":
+        acid_lite.append(spark, tdir, mk([(5, 50)]))
+    v = acid_lite.latest_version(tdir)
+    lost = _lose_races(
+        monkeypatch, lambda: acid_lite.append(spark, tdir, mk([(2, 20)])))
+    if op == "set_partition_spec":
+        got = acid_lite.set_partition_spec(tdir, ["bucket(2, k)"])
+    elif op == "rename_column":
+        got = acid_lite.rename_column(tdir, "v", "w")
+    elif op == "widen_column_type":
+        got = acid_lite.widen_column_type(tdir, "v", "bigint")
+    elif op == "add_column_default":
+        got = acid_lite.add_column_default(tdir, "d", "int", 7)
+    elif op == "drop_column":
+        got = acid_lite.drop_column(tdir, "v")
+    elif op == "add_check_constraint":
+        got = acid_lite.add_check_constraint(spark, tdir, "pos", "v > 0")
+    elif op == "drop_constraint":
+        got = acid_lite.drop_constraint(tdir, "pos")
+    elif op == "restore_table":
+        got = acid_lite.restore_table(tdir, version=1)
+    elif op == "build_bloom_index":
+        got = acid_lite.build_bloom_index(spark, tdir, "k")
+    elif op == "set_sort_order":
+        got = acid_lite.set_sort_order(tdir, ["v"])
+    elif op == "write_ndv_sketches":
+        got = acid_lite.write_ndv_sketches(spark, tdir, "k")
+    else:
+        got = acid_lite.append_evolve(
+            spark, tdir, mk([(3, 30, 9)], "k bigint, v int, x bigint"))
+    assert lost["lost"] == 1 and got == v + 2
+    assert acid_lite.latest_version(tdir) == got
+    m = acid_lite._read_manifest(tdir, got)
+    rows = acid_lite.read(spark, tdir).collect()
+    if op == "restore_table":
+        assert m["restore_of"] == 1
+        assert {(r.k, r.v) for r in rows} == {(1, 10)}
+        return
+    assert {1, 2} <= {r.k for r in rows}  # the concurrent row survives
+    if op == "set_partition_spec":
+        assert m["specs"]["1"] == []
+        assert m["specs"][m["default_spec"]] == ["bucket(2, k)"]
+        assert set(m["file_spec"].values()) == {"1"}
+    elif op == "rename_column":
+        assert {r.k: r.w for r in rows} == {1: 10, 2: 20}
+    elif op == "widen_column_type":
+        assert m["schema"] == "k bigint, v bigint"
+        assert {r.k: r.v for r in rows} == {1: 10, 2: 20}
+    elif op == "add_column_default":
+        assert {r.k: r.d for r in rows} == {1: 7, 2: 7}
+    elif op == "drop_column":
+        assert all("v" not in r.asDict() for r in rows)
+    elif op == "add_check_constraint":
+        assert m["constraints"] == {"pos": "v > 0"}
+    elif op == "drop_constraint":
+        assert not m.get("constraints")
+    elif op == "build_bloom_index":
+        assert set(m["bloom_index"]["k"]) == set(m["files"])
+        files, _ = acid_lite.prune_files_bloom(None, tdir, "k", 2)
+        assert len(files) == 1
+    elif op == "set_sort_order":
+        assert m["sort_order"] == ["v"]
+    elif op == "write_ndv_sketches":
+        assert acid_lite.table_ndv(spark, tdir, "k") == (2, True)
+    else:
+        assert {r.k: r.x for r in rows} == {1: None, 2: None, 3: 9}
+
+
+def test_commit_gives_up_after_losing_every_race(spark, tdir, monkeypatch):
+    """An op that loses every version race raises CommitConflict after
+    ``_RETRIES + 1`` attempts and commits nothing of its own; every
+    concurrent commit that beat it stays."""
+    mk = lambda rows: spark.createDataFrame(rows, "k bigint, v int")
+    acid_lite.create_table(spark, tdir, mk([(1, 10)]))
+    lost = _lose_races(
+        monkeypatch, lambda: acid_lite.append(spark, tdir, mk([(2, 20)])),
+        every=True)
+    with pytest.raises(acid_lite.CommitConflict, match="lost 4 races"):
+        acid_lite.set_sort_order(tdir, ["v"])
+    assert lost["lost"] == acid_lite._RETRIES + 1
+    latest = acid_lite.latest_version(tdir)
+    assert latest == 1 + lost["lost"]
+    assert not acid_lite._read_manifest(tdir, latest).get("sort_order")
+
+
+def test_add_check_constraint_validates_the_rows_it_commits_on(
+        spark, tdir, monkeypatch):
+    """A violating row that lands while the constraint is being added
+    is validated too: after the lost race the constraint re-checks the
+    new snapshot and refuses, so no version ever declares a CHECK its
+    rows break."""
+    mk = lambda rows: spark.createDataFrame(rows, "k bigint, v bigint")
+    acid_lite.create_table(spark, tdir, mk([(1, 5)]))
+    _lose_races(monkeypatch,
+                lambda: acid_lite.append(spark, tdir, mk([(2, -5)])))
+    with pytest.raises(acid_lite.ConstraintViolation):
+        acid_lite.add_check_constraint(spark, tdir, "pos", "v > 0")
+    assert acid_lite.latest_version(tdir) == 2
+    assert not acid_lite._read_manifest(tdir, 2).get("constraints")
+
+
+def test_set_sort_order_checks_the_schema_it_commits_on(
+        spark, tdir, monkeypatch):
+    """A column dropped while a sort order naming it is being set
+    makes the sort order fail: the column check runs on the manifest
+    the commit lands on, so no version names a column its schema
+    lacks (optimize_sorted would then fail on it)."""
+    acid_lite.create_table(spark, tdir, spark.createDataFrame(
+        [(1, 2, 3)], "k bigint, a bigint, b bigint"))
+    _lose_races(monkeypatch, lambda: acid_lite.drop_column(tdir, "a"))
+    with pytest.raises(ValueError, match="unknown sort columns"):
+        acid_lite.set_sort_order(tdir, ["a"])
+    assert acid_lite.latest_version(tdir) == 2
+    assert not acid_lite._read_manifest(tdir, 2).get("sort_order")
 
 
 def test_spec_evolution_composes_with_rewrites(spark, tdir):
@@ -2856,8 +2990,9 @@ def test_identity_restamps_when_losing_append_race(spark, tdir,
 # --------------------------------------------------------------------
 
 _FEATURES = ("mapping", "constraints", "generated", "identity", "sort_order")
-_WRITE_OPS = ("append", "append_idempotent", "merge_upsert",
-              "delete_where_dv", "optimize", "restore_table")
+_WRITE_OPS = ("append", "append_idempotent", "append_evolve",
+              "merge_upsert", "delete_where_dv", "optimize",
+              "restore_table")
 #: Keys of one commit or one file set, never table metadata.
 _NOT_TABLE_KEYS = {"version", "parent", "op", "ts", "txn", "restore_of",
                    "clone_of", "files", "stats", "partitions", "file_spec",
@@ -2865,14 +3000,17 @@ _NOT_TABLE_KEYS = {"version", "parent", "op", "ts", "txn", "restore_of",
 #: Table keys each op is meant to change.
 _OP_CHANGES = {"append": {"identity"},
                "append_idempotent": {"identity", "txns"},
+               "append_evolve": {"identity", "schema"},
                "merge_upsert": set(), "delete_where_dv": {"dvs", "dv_rows"},
                "optimize": set(), "restore_table": set()}
 #: (id, v) rows each op leaves on the feature table, whose rows are
 #: {1: 10, 2: 20, 4: 40} before it; append_idempotent's equivalent
-#: plain op is append, and restore_table goes back past an append of 3.
+#: plain op is append (append_evolve's adds a column ``w``), and
+#: restore_table goes back past an append of 3.
 _BASE_ROWS = {1: 10, 2: 20, 4: 40}
 _OP_ROWS = {"append": {**_BASE_ROWS, 3: 30},
             "append_idempotent": {**_BASE_ROWS, 3: 30},
+            "append_evolve": {**_BASE_ROWS, 3: 30},
             "merge_upsert": {**_BASE_ROWS, 2: 25, 3: 30},
             "delete_where_dv": {1: 10, 4: 40},
             "optimize": _BASE_ROWS, "restore_table": _BASE_ROWS}
@@ -2917,7 +3055,8 @@ def test_every_write_op_keeps_table_metadata(spark, tmp_path,
     change, and the table reads the rows the equivalent plain op gives.
     append_idempotent used to commit through a second writer that
     dropped mapping (rows read NULL), constraints and identity, and
-    skipped the CHECK / generated-column / identity gate."""
+    skipped the CHECK / generated-column / identity gate; append_evolve
+    never stamped identity values (its rows read NULL)."""
     import shutil
 
     t = str(tmp_path / "t")
@@ -2940,6 +3079,11 @@ def test_every_write_op_keeps_table_metadata(spark, tmp_path,
         v = acid_lite.append_idempotent(spark, t, batch([(3, 30)]), "tx1")
         assert acid_lite.append_idempotent(
             spark, t, batch([(3, 30)]), "tx1") == v  # re-delivery
+    elif op == "append_evolve":
+        v = acid_lite.append_evolve(spark, t, spark.createDataFrame(
+            [(3, 30, 7)], f"id bigint, {vcol} bigint, w bigint"))
+        assert acid_lite._read_manifest(t, v)["schema"] == \
+            acid_lite._read_manifest(t, parent)["schema"] + ", w bigint"
     elif op == "merge_upsert":
         v = acid_lite.merge_upsert(
             spark, t, batch([(2, 25), (3, 30)]), key="id")
@@ -2967,11 +3111,13 @@ def test_every_write_op_keeps_table_metadata(spark, tmp_path,
         rids = [r.rid for r in rows]
         assert None not in rids and len(set(rids)) == len(rids)
     if feature == "constraints" and op in ("append", "append_idempotent",
-                                           "merge_upsert"):
+                                           "append_evolve", "merge_upsert"):
         bad = batch([(9, -5)])
         with pytest.raises(acid_lite.ConstraintViolation):
             if op == "append":
                 acid_lite.append(spark, t, bad)
+            elif op == "append_evolve":
+                acid_lite.append_evolve(spark, t, bad)
             elif op == "append_idempotent":
                 acid_lite.append_idempotent(spark, t, bad, "tx-bad")
             else:

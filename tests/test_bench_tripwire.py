@@ -167,3 +167,20 @@ def test_executor_ms_without_ui(spark, sf_dir):
     finally:
         sc.setJobGroup(None, None)
     assert _executor_ms(spark, "bench_test_executor_ms") > 0
+
+
+def test_time_registry_help_exits_before_spark():
+    """``--help`` prints the usage of the three positionals and exits
+    0 without starting a Spark session (it used to be read as
+    ``sf_dir`` and start a full sweep)."""
+    import os
+    import subprocess
+    import sys
+
+    script = os.path.join(os.path.dirname(bench.__file__), "scripts",
+                          "time_registry.py")
+    out = subprocess.run([sys.executable, script, "--help"],
+                         capture_output=True, text=True, timeout=30)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.startswith("usage: time_registry.py")
+    assert "sf_dir" in out.stdout and "query" in out.stdout

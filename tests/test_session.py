@@ -113,16 +113,21 @@ def test_configure_sets_confs_once_per_session(spark, monkeypatch):
 
 def test_new_session_is_configured_by_load_tables(spark, sf_dir):
     """``newSession()`` keeps the application id but has its own SQL
-    conf, so ``load_tables`` must configure it in full."""
+    conf and temp views, so ``load_tables`` must configure it in full
+    and hand it frames and views of its own, not the cached ones of the
+    first session."""
     from datastore_mapper_spark.catalog import load_tables
     from datastore_mapper_spark.session import RUNTIME_CONFS
 
+    load_tables(spark, sf_dir)
     other = spark.newSession()
     other.conf.set(_TZ, "America/Los_Angeles")
     other.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    load_tables(other, sf_dir)
+    tables = load_tables(other, sf_dir)
     assert other.conf.get(_TZ) == "UTC"
     assert {k: other.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+    assert tables["orders"].sparkSession is other
+    assert other.sql("SELECT count(*) FROM orders").first()[0] > 0
 
 
 def test_table_restores_a_drifted_time_zone(spark, sf_dir):
