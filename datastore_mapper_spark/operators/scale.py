@@ -115,15 +115,12 @@ def salted_join(
     return joined.drop("__salt")
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 8,
-) -> None:
-    """Sort-on-write data layout: range-partition then sort within
-    partitions on ``sort_cols`` before writing parquet.  Each output
-    file covers a disjoint, tight key range, so parquet row-group
+def range_sorted(df: DataFrame, sort_cols: list[str],
+                 n_files: int = 8) -> DataFrame:
+    """The range-sort layout: range-partition ``df`` into ``n_files``
+    partitions on ``sort_cols`` (sampled range boundaries, Spark's
+    global-sort machinery) and sort within each, so every file written
+    from it covers a disjoint, tight key range and parquet row-group
     min/max statistics let later selective scans skip whole files —
     the at-rest locality lever for the 100 TB predicate-heavy workload
     (the read-side complement of :func:`write_bucketed`, which
@@ -133,14 +130,9 @@ def write_sorted(
     predicate scans 1 879 rows from the sorted layout vs all 15 000
     from a shuffled layout.  Caveat: Spark does not evaluate parquet
     row-group stats for timestamp_ntz predicates — sort on a
-    numeric/date key (epoch day/int key) for prunable layouts.
-    """
-    (
-        df.repartitionByRange(n_files, *sort_cols)
+    numeric/date key (epoch day/int key) for prunable layouts."""
+    return df.repartitionByRange(n_files, *sort_cols) \
         .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def morton_code(a: Column, b: Column, bits: int = 16) -> Column:
@@ -160,27 +152,22 @@ def morton_code(a: Column, b: Column, bits: int = 16) -> Column:
     return code
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 8,
-) -> None:
-    """Z-order data layout: sort-on-write by the Morton interleave of
-    TWO columns, so row-group min/max statistics prune selective scans
-    on EITHER column — the multi-dimensional generalization of
-    :func:`write_sorted` (which prunes only its own sort key).  The
-    technique behind Delta/Iceberg Z-ORDER clustering, expressed as a
-    plain sort key.
+def zordered(df: DataFrame, col_a: str, col_b: str, n_files: int = 8,
+             bits: int = 8) -> DataFrame | None:
+    """The Z-order layout: :func:`range_sorted` on the Morton
+    interleave of TWO columns, so row-group min/max statistics prune
+    selective scans on EITHER column — the multi-dimensional
+    generalization of a one-key sort, and the technique behind
+    Delta/Iceberg Z-ORDER clustering, expressed as a plain sort key.
+    Returns None when either column has no non-NULL value (nothing to
+    cluster on).
 
     Both columns are min/max-scaled to the ``bits``-bit domain first
-    (one tiny stats aggregate at write time, the analogue of Delta's
-    range-boundary sampling): interleaving RAW values lets the wider
-    column's high bits dominate the sort and the narrow column gets no
-    locality at all — found empirically with custkey (8-bit) vs
-    orderkey (14-bit)."""
+    (one tiny stats aggregate, the analogue of Delta's range-boundary
+    sampling): interleaving RAW values lets the wider column's high
+    bits dominate the sort and the narrow column gets no locality at
+    all — found empirically with custkey (8-bit) vs orderkey
+    (14-bit)."""
     stats = df.agg(
         F.min(col_a).alias("a_min"),
         F.max(col_a).alias("a_max"),
@@ -188,10 +175,7 @@ def write_zordered(
         F.max(col_b).alias("b_max"),
     ).first()
     if stats.a_min is None or stats.b_min is None:
-        # empty input: nothing to cluster — write the (schema-bearing)
-        # empty dataset instead of crashing on the min/max probe
-        df.write.mode("overwrite").parquet(path)
-        return
+        return None
     domain = (1 << bits) - 1
 
     def scaled(col: str, lo, hi) -> Column:
@@ -205,14 +189,8 @@ def write_zordered(
         scaled(col_b, stats.b_min, stats.b_max),
         bits,
     )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
+    return range_sorted(df.withColumn("__z", z), ["__z"], n_files) \
         .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def band_equi_join(
@@ -253,40 +231,6 @@ def band_equi_join(
         .filter((rk >= lk) & (rk <= lk + F.expr(f"INTERVAL {band_units} {unit}")))
         .drop("__bucket")
     )
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    src_path: str,
-    dest_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a fragmented parquet directory
-    into ceil(total_bytes / target_file_bytes) files.  The lakehouse
-    maintenance job every streaming/foreachBatch sink eventually needs
-    — thousands of kilobyte files turn a 100 TB scan into a listing +
-    task-overhead disaster; 128 MB files match
-    ``spark.sql.files.maxPartitionBytes`` so one task reads one file.
-    Writes to ``dest_path`` (atomic swap is the metastore/table
-    format's job, not a filesystem rename here); returns the target
-    file count."""
-    import math
-    import os
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(src_path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        spark.read.parquet(src_path)
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(dest_path)
-    )
-    return n_files
 
 
 # ---------------------------------------------------------------------------

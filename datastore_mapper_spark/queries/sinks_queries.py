@@ -153,17 +153,18 @@ def sink_csv_json_roundtrip(spark, sf_dir):
 )
 def sink_sorted_layout_pruned_scan(spark, sf_dir):
     """Sort-on-write layout round trip: rewrite orders range-sorted by
-    o_orderkey (operators/scale.write_sorted), then run a selective key
+    o_orderkey (operators/scale.range_sorted), then run a selective key
     range scan over the sorted copy — parquet row-group min/max stats
     skip every file outside the range (pruning measured in
     tests/test_scale_ops.py::test_sorted_write_prunes_row_groups).
     Values must equal the same predicate on the unsorted source, which
     is what the oracle computes."""
-    from ..operators.scale import write_sorted
+    from ..operators.scale import range_sorted
 
     o = table(spark, sf_dir, "orders")
     dest = _scratch_dir("sorted_orders_layout", sf_dir)
-    write_sorted(o, dest, ["o_orderkey"], n_files=8)
+    range_sorted(o, ["o_orderkey"], n_files=8) \
+        .write.mode("overwrite").parquet(dest)
     back = spark.read.parquet(dest).filter(
         F.col("o_orderkey").between(2000, 2600)
     )
@@ -195,11 +196,13 @@ def sink_zorder_layout_pruned_scan(spark, sf_dir):
     measured in tests/test_scale_ops.py::
     test_zorder_write_prunes_on_both_columns), and both must match the
     plain filters over the unsorted source."""
-    from ..operators.scale import write_zordered
+    from ..operators.scale import zordered
 
     o = table(spark, sf_dir, "orders")
     dest = _scratch_dir("zorder_orders_layout", sf_dir)
-    write_zordered(o, dest, "o_custkey", "o_orderkey", n_files=8)
+    # no non-NULL key (empty input): write the schema-bearing frame
+    z = zordered(o, "o_custkey", "o_orderkey", n_files=8)
+    (o if z is None else z).write.mode("overwrite").parquet(dest)
     back = spark.read.schema(o.schema).parquet(dest)
     a = back.filter(F.col("o_custkey").between(10, 40)).agg(
         F.lit("by_custkey").alias("probe"),

@@ -32,6 +32,14 @@ This module implements them the way the real formats do:
   and it is asserted by pytest (untouched file paths must appear
   verbatim in the child manifest).
 * **Time travel.**  ``read(path, version=K)`` resolves manifest K.
+* **One data-file writer, one OPTIMIZE rewrite.**  Every data and
+  DV file is written by :func:`_write_files`, in the layout of the
+  manifest the op planned on (column mapping, partition spec); a
+  failed, fileless or (on request) zero-row write leaves no
+  directory.  The six ``optimize*`` variants are each a file
+  selection plus an arrangement (coalesce, ``operators/scale``'s
+  range sort or z-order) handed to :func:`_rewrite`, which writes
+  through that writer and makes one rebase commit.
 * **OPTIMIZE (round 11).**  :func:`optimize` compacts small files
   into ~128 MB targets as a committed, row-identical version — the
   parent snapshot (and any reader on it) is untouched.
@@ -76,7 +84,7 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -293,25 +301,6 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
-def _write_files(df: DataFrame, path: str,
-                 dir_sink: list | None = None) -> list[str]:
-    """Write ``df`` as immutable parquet files under ``data/<uuid>/``
-    and return their table-relative paths.  ``dir_sink``, when given,
-    receives the rel dir — an EMPTY write yields no .parquet files but
-    still creates the dir (with ``_SUCCESS``), and the observed-empty
-    rollback needs its name to reap the orphan (r16 ADVICE)."""
-    rel_dir = os.path.join("data", uuid.uuid4().hex[:12])
-    if dir_sink is not None:
-        dir_sink.append(rel_dir)
-    dest = os.path.join(path, rel_dir)
-    df.write.mode("error").parquet(dest)
-    return sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(dest)
-        if f.endswith(".parquet")
-    )
-
-
 def _parse_transform(spec: str):
     """An Iceberg-style partition-spec entry -> (derived_name,
     source_col, spark_expr_fn, py_fn, sql_type_fn).
@@ -330,9 +319,7 @@ def _parse_transform(spec: str):
     * ``"month(col)"``     — ``yyyy-MM`` string of a date/timestamp:
       monotone under lexicographic order.
     """
-    import re as _re
-
-    m = _re.fullmatch(r"\s*bucket\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*", spec)
+    m = re.fullmatch(r"\s*bucket\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*", spec)
     if m:
         n, col = int(m.group(1)), m.group(2)
         return (
@@ -341,7 +328,7 @@ def _parse_transform(spec: str):
             lambda v, n=n: None if v is None else int(v) % n,
             "bigint", "bucket",
         )
-    m = _re.fullmatch(r"\s*truncate\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*", spec)
+    m = re.fullmatch(r"\s*truncate\(\s*(\d+)\s*,\s*(\w+)\s*\)\s*", spec)
     if m:
         w, col = int(m.group(1)), m.group(2)
         return (
@@ -351,7 +338,7 @@ def _parse_transform(spec: str):
             lambda v, w=w: None if v is None else int(v) - int(v) % w,
             "bigint", "truncate",
         )
-    m = _re.fullmatch(r"\s*month\(\s*(\w+)\s*\)\s*", spec)
+    m = re.fullmatch(r"\s*month\(\s*(\w+)\s*\)\s*", spec)
     if m:
         col = m.group(1)
         def _to_month(v):
@@ -393,96 +380,59 @@ def _parse_partition_values(rel: str, partition_by: list[str]) -> dict:
     return out
 
 
-def _write_files_partitioned(
-    df: DataFrame, path: str, partition_by: list[str],
-    dir_sink: list | None = None,
-) -> tuple[list[str], dict[str, dict]]:
-    """Write ``df`` hive-partitioned under ``data/<uuid>/`` and return
-    (relative file paths, {file: {derived-col: str-value}}).  The
-    partition VALUES live in the directory names (and therefore in
-    the manifest), not in the data files — the hive/Iceberg layout;
-    the split itself is Spark's distributed ``partitionBy`` writer,
-    never a driver loop over values.  Transform specs (bucket /
-    truncate / month) add their derived column just for the write —
-    the SOURCE column stays in the data files (hidden partitioning),
-    while identity columns live only in the dirs and are re-attached
-    on read."""
+def _write_files(df: DataFrame, path: str, m: dict, root: str = "data",
+                 drop_empty: bool = False
+                 ) -> tuple[list[str], dict[str, dict] | None, int]:
+    """The one data-file writer: write ``df`` as immutable parquet
+    files under ``<root>/<uuid12>/`` in the layout of manifest ``m``
+    (the one the caller planned on) and return ``(table-relative
+    files, {file: {derived-col: str-value}} or None, rows)``.
+
+    * Column mapping: logical columns are renamed to their PHYSICAL
+      names (:func:`rename_column`), so files written after a rename
+      store the same physical column as files written before it.
+      Partition-source columns are never mapped (rename/drop of one
+      is refused), so hive dir names stay stable.
+    * Partitioning: a partitioned ``m`` splits through Spark's
+      distributed ``partitionBy`` writer; transform specs (bucket /
+      truncate / month) add their derived column just for the write —
+      the source column stays in the data files (hidden partitioning)
+      while identity columns live only in the dirs.  The partition
+      VALUES come back from the dir names, never a driver loop.
+    * ``rows`` sums the new files' parquet-footer row counts.
+    * A failed write, a write that produced no file, and (with
+      ``drop_empty``) a write of zero rows remove the never-referenced
+      directory and return ``([], None, 0)``."""
+    mapping = m.get("mapping")
+    if mapping:
+        df = df.select(*[F.col(c).alias(mapping.get(c, c))
+                         for c in df.columns])
     names = []
-    for spec in partition_by:
+    for spec in m.get("partition_by") or []:
         name, _src, expr_fn, _py, _ty, _kind = _parse_transform(spec)
         names.append(name)
         if expr_fn is not None:
             df = df.withColumn(name, expr_fn())
-    rel_dir = os.path.join("data", uuid.uuid4().hex[:12])
-    if dir_sink is not None:
-        dir_sink.append(rel_dir)
-    dest = os.path.join(path, rel_dir)
-    df.write.partitionBy(*names).mode("error").parquet(dest)
-    files: list[str] = []
-    parts: dict[str, dict] = {}
-    for root, _dirs, fnames in os.walk(dest):
-        for fn in fnames:
-            if fn.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(root, fn), path)
-                files.append(rel)
-                parts[rel] = _parse_partition_values(rel, names)
-    return sorted(files), parts
+    dest = os.path.join(path, root, uuid.uuid4().hex[:12])
+    writer = df.write.mode("error")
+    try:
+        (writer.partitionBy(*names) if names else writer).parquet(dest)
+    except Exception:
+        shutil.rmtree(dest, ignore_errors=True)
+        raise
+    files = sorted(os.path.relpath(os.path.join(d, f), path)
+                   for d, _dirs, fns in os.walk(dest)
+                   for f in fns if f.endswith(".parquet"))
+    import pyarrow.parquet as pq
 
-
-def _to_physical(df: DataFrame, mapping: dict | None) -> DataFrame:
-    """Rename a logical frame's columns to their PHYSICAL names before
-    a write (column mapping, :func:`rename_column`): physical names
-    are immutable once written, so files written after a rename store
-    the SAME physical column as files written before it and one read
-    schema covers every generation."""
-    if not mapping:
-        return df
-    return df.select(*[
-        F.col(c).alias(mapping.get(c, c)) for c in df.columns
-    ])
-
-
-def _write_files_observed(
-    df: DataFrame, path: str, partition_by: list[str] | None,
-    mapping: dict | None = None,
-) -> tuple[list[str], dict[str, dict] | None]:
-    """Write ``df``'s files with the row count riding the write as an
-    observation; an observed-EMPTY write is rolled back by deleting
-    the freshly-created (never referenced) ``data/<uuid>/`` dir and
-    returns ``([], None)`` — externally identical to the old
-    ``limit(1).count()``-probe-then-write shape, minus the probe job
-    that re-executed the whole merge plan."""
-    obs = Observation()
-    dirs: list[str] = []
-    new_files, new_parts = _write_files_any(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), path,
-        partition_by, mapping=mapping, dir_sink=dirs)
-    if int(obs.get["n"]) == 0:
-        # reap the never-referenced data/<uuid>/ dir UNCONDITIONALLY:
-        # an empty write yields zero .parquet files but still leaves
-        # the dir + _SUCCESS behind (r16 ADVICE orphan-leak fix)
-        for rel_dir in dirs:
-            shutil.rmtree(os.path.join(path, rel_dir),
-                          ignore_errors=True)
-        return [], None
-    return new_files, new_parts
-
-
-def _write_files_any(
-    df: DataFrame, path: str, partition_by: list[str] | None,
-    mapping: dict | None = None,
-    dir_sink: list | None = None,
-) -> tuple[list[str], dict[str, dict] | None]:
-    """Route to the partitioned or flat writer by the table's layout.
-    ``mapping`` (logical -> physical column names) is applied before
-    the write; partition-source columns are never mapped (rename/drop
-    of a partition column is refused), so the hive dir names stay
-    stable across renames."""
-    df = _to_physical(df, mapping)
-    if partition_by:
-        return _write_files_partitioned(df, path, partition_by,
-                                        dir_sink=dir_sink)
-    return _write_files(df, path, dir_sink=dir_sink), None
+    rows = sum(pq.read_metadata(os.path.join(path, f)).num_rows
+               for f in files)
+    if not files or (drop_empty and rows == 0):
+        shutil.rmtree(dest, ignore_errors=True)
+        return [], None, 0
+    parts = ({f: _parse_partition_values(f, names) for f in files}
+             if names else None)
+    return files, parts, rows
 
 
 def _typed_partition_value(v: str | None, sql_type: str):
@@ -909,7 +859,8 @@ def create_table(spark: SparkSession, path: str, df: DataFrame,
             raise ValueError(
                 f"partition source columns not in frame: {missing}")
     os.makedirs(path, exist_ok=True)
-    files, parts = _write_files_any(df, path, partition_by)
+    files, parts, _rows = _write_files(
+        df, path, m={"partition_by": partition_by})
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema
     )
@@ -930,7 +881,7 @@ def _rel_path_expr(path: str):
     ).alias("__rel"), prefix
 
 
-#: The deletion-vector sidecar layout :func:`_write_dv_sidecar` writes.
+#: The deletion-vector sidecar layout (``(file, row position)`` rows).
 DV_SCHEMA = "rel string, row_index bigint"
 
 
@@ -993,8 +944,8 @@ class _AppendBatch:
 
     def __init__(self, path: str, df: DataFrame, pm0: dict,
                  mapping: dict | None):
-        self._write = lambda d: _write_files_any(
-            d, path, pm0.get("partition_by"), mapping=mapping)
+        self._write = lambda d: _write_files(
+            d, path, m={**pm0, "mapping": mapping})[:2]
         self.stamped_from = pm0.get("identity")
         self.identity = None
         if self.stamped_from:
@@ -1172,7 +1123,6 @@ def merge_upsert(
     if delete_col is not None:
         inserts = inserts.filter(~F.col(delete_col))
     inserts = inserts.drop(*([delete_col] if delete_col else []))
-    pby = manifest.get("partition_by")
     if touched:
         touched_df = _load_files(spark, path, manifest, sorted(touched))
         survivors = touched_df.join(
@@ -1180,10 +1130,67 @@ def merge_upsert(
         merged = survivors.unionByName(inserts.select(*touched_df.columns))
     else:
         merged = inserts
-    new_files, new_parts = _write_files_observed(
-        merged, path, pby, mapping=manifest.get("mapping"))
+    new_files, new_parts, _rows = _write_files(
+        merged, path, m=manifest, drop_empty=True)
     return _rebase_commit(path, sorted(touched), new_files, "merge",
                           expect_dvs=[], new_partitions=new_parts)
+
+
+def _file_bytes(path: str, f: str, missing: int = 0) -> int:
+    """On-disk size of data file ``f`` (``missing`` when unreadable)."""
+    try:
+        return os.path.getsize(os.path.join(path, f))
+    except OSError:
+        return missing
+
+
+def _rewrite(spark: SparkSession, path: str, m: dict,
+             groups: list[list[str]] | None, arrange, op: str) -> int:
+    """The one OPTIMIZE rewrite (Iceberg's ``rewrite_data_files``: a
+    file selection plus a binpack / sort / z-order strategy): load
+    each file group of snapshot ``m``, arrange it (``arrange``:
+    DataFrame -> DataFrame), write it through :func:`_write_files` and
+    make ONE :func:`_rebase_commit` replacing the groups' files.
+
+    ``groups=None`` rewrites the whole snapshot: it reads through the
+    DV anti-join (:func:`read`) and PURGES the deletion vectors — the
+    rewritten files hold only live rows.  A partial rewrite (a list of
+    groups) refuses a table with deletion vectors: it cannot purge
+    vectors keyed to files outside its scope.  Empty ``groups``, or an
+    arrangement returning None (nothing to arrange on), commits
+    nothing and returns ``m``'s version.  Touched = the rewritten
+    files, so a concurrent append rebases (its files carry alongside)
+    and a concurrent rewrite of a touched file or DV change raises
+    :class:`ConcurrentModification`."""
+    whole = groups is None
+    if whole:
+        groups = [m["files"]]
+    elif _has_dvs(m):
+        raise ValueError(
+            f"table carries deletion vectors — run optimize() to purge "
+            f"them before {op} (a partial rewrite cannot purge vectors "
+            "keyed to files outside its scope)")
+    frames = [arrange(_load_files_dv(spark, path, m, g)) for g in groups]
+    if not frames or any(df is None for df in frames):
+        return m["version"]
+    new_files: list[str] = []
+    new_parts: dict[str, dict] = {}
+    for df in frames:
+        files, parts, _rows = _write_files(df, path, m=m)
+        new_files += files
+        new_parts.update(parts or {})
+    return _rebase_commit(path, [f for g in groups for f in g],
+                          sorted(new_files), op, purge_dvs=whole,
+                          expect_dvs=m.get("dvs") or [],
+                          new_partitions=new_parts or None)
+
+
+def _n_target(path: str, files: list[str], target_file_bytes: int) -> int:
+    """Output file count that compacts ``files`` to ~target size."""
+    import math
+
+    total = sum(_file_bytes(path, f) for f in files)
+    return max(1, math.ceil(total / target_file_bytes))
 
 
 def optimize(
@@ -1202,47 +1209,21 @@ def optimize(
     foreachBatch sink eventually needs: thousands of kilobyte files
     turn a 100 TB scan into a listing + task-overhead disaster, while
     128 MB files match ``spark.sql.files.maxPartitionBytes`` so one
-    task reads one file (same sizing rule as
-    ``operators/scale.compact_parquet_dir``, here routed through the
-    table format's atomic commit instead of a bare directory swap).
-
-    Concurrency: OPTIMIZE races writers like any commit — if another
-    commit lands first, the one-winner publish rejects ours and
-    :class:`CommitConflict` propagates.  Re-running against the new
-    latest is always safe (compaction is idempotent on content).
-    Returns the committed version (the parent itself when the table
-    already meets the target — no empty commit)."""
-    import math
-
-    parent, manifest = _latest(path)
-    files = manifest["files"]
-    total = 0
-    for f in files:
-        try:
-            total += os.path.getsize(os.path.join(path, f))
-        except OSError:
-            pass
-    n_target = max(1, math.ceil(total / target_file_bytes))
-    if len(files) <= n_target and not _has_dvs(manifest):
+    task reads one file.  The rewrite purges deletion vectors and
+    rebases over concurrent appends (:func:`_rewrite`).  Returns the
+    committed version (the parent itself when the table already meets
+    the target — no empty commit)."""
+    parent, m = _latest(path)
+    n_target = _n_target(path, m["files"], target_file_bytes)
+    if len(m["files"]) <= n_target and not _has_dvs(m):
         return parent  # already compact — nothing to rewrite
-    # read() applies any deletion vectors, so the compacted rewrite
-    # PURGES them: the commit below carries dvs=[] explicitly
-    df = read(spark, path, parent)
     # coalesce, not repartition: narrow dependency — compaction must
     # not shuffle 100 TB, it concatenates co-resident row groups.  On
     # a partitioned table the hive writer re-splits each coalesced
     # task by value, so the bound is n_target files PER PARTITION
     # (real OPTIMIZE is per-partition too).
-    new_files, new_parts = _write_files_any(
-        df.coalesce(n_target), path, manifest.get("partition_by"),
-        mapping=manifest.get("mapping"))
-    # touched = every parent file: a concurrent APPEND rebases cleanly
-    # (its files carry alongside the compacted set); a concurrent
-    # rewrite of any compacted file raises ConcurrentModification
-    return _rebase_commit(path, files, new_files, "optimize",
-                          purge_dvs=True,
-                          expect_dvs=manifest.get("dvs") or [],
-                          new_partitions=new_parts)
+    return _rewrite(spark, path, m, None,
+                    lambda df: df.coalesce(n_target), "optimize")
 
 
 def optimize_binpack(
@@ -1270,28 +1251,19 @@ def optimize_binpack(
     hive dirs).  Commits through the standard rebase loop: touched =
     exactly the packed small files, so a concurrent edit of an
     untouched large file composes."""
-    parent, m = _latest(path)
-    if _has_dvs(m):
-        raise ValueError(
-            "table carries deletion vectors — run optimize() (full "
-            "rewrite purges them) before bin-packing compaction")
+    _parent, m = _latest(path)
     if m.get("partition_by"):
         raise ValueError(
             "partitioned table — use optimize_where() per partition")
     if min_file_bytes is None:
         min_file_bytes = target_file_bytes // 2
-    sized = []
-    for f in m["files"]:
-        try:
-            sized.append((f, os.path.getsize(os.path.join(path, f))))
-        except OSError:
-            sized.append((f, target_file_bytes))  # unknown: never pack
-    small = [(f, s) for f, s in sized if s < min_file_bytes]
-    if len(small) <= 1:
-        return parent  # nothing to consolidate
+    sized = [(f, _file_bytes(path, f, missing=target_file_bytes))
+             for f in m["files"]]  # unknown size: never pack
     bins: list[list] = []
     sizes: list[int] = []
-    for f, s in sorted(small, key=lambda x: (-x[1], x[0])):
+    for f, s in sorted(sized, key=lambda x: (-x[1], x[0])):
+        if s >= min_file_bytes:
+            continue
         for i, used in enumerate(sizes):
             if used + s <= target_file_bytes:
                 bins[i].append(f)
@@ -1300,16 +1272,8 @@ def optimize_binpack(
         else:
             bins.append([f])
             sizes.append(s)
-    bins = [b for b in bins if len(b) >= 2]
-    if not bins:
-        return parent
-    touched, new_files = [], []
-    for b in bins:
-        df = _load_files(spark, path, m, sorted(b))
-        new_files.extend(_write_files(df.coalesce(1), path))
-        touched.extend(b)
-    return _rebase_commit(path, sorted(touched), sorted(new_files),
-                          "optimize-binpack", expect_dvs=[])
+    return _rewrite(spark, path, m, [sorted(b) for b in bins if len(b) >= 2],
+                    lambda df: df.coalesce(1), "optimize-binpack")
 
 
 def optimize_where(
@@ -1333,10 +1297,8 @@ def optimize_where(
     Concurrency is the standard logical rebase: a concurrent append
     or an edit of a DIFFERENT partition composes; a concurrent
     rewrite of a scoped file conflicts."""
-    import math
-
-    parent, manifest = _latest(path)
-    pby = manifest.get("partition_by")
+    _parent, m = _latest(path)
+    pby = m.get("partition_by")
     if not pby:
         raise ValueError(
             "optimize_where needs an identity-partitioned table "
@@ -1345,35 +1307,15 @@ def optimize_where(
     if bad_keys:
         raise ValueError(
             f"{bad_keys} are not partition columns of {pby}")
-    if _has_dvs(manifest):
-        raise ValueError(
-            "table carries deletion vectors — run full optimize() "
-            "first (a scoped rewrite cannot purge out-of-scope "
-            "vectors soundly)")
-    parts_map = manifest.get("partitions") or {}
-
-    def _match(f: str) -> bool:
-        pv = parts_map.get(f) or {}
-        return all(str(pv.get(k)) == str(v)
-                   for k, v in partition_values.items())
-
-    scoped = [f for f in manifest["files"] if _match(f)]
-    total = 0
-    for f in scoped:
-        try:
-            total += os.path.getsize(
-                f if os.path.isabs(f) else os.path.join(path, f))
-        except OSError:
-            pass
-    n_target = max(1, math.ceil(total / target_file_bytes))
-    if len(scoped) <= n_target:
-        return parent  # partition already compact — no empty commit
-    df = _load_files(spark, path, manifest, scoped)
-    new_files, new_parts = _write_files_any(
-        df.coalesce(n_target), path, pby,
-        mapping=manifest.get("mapping"))
-    return _rebase_commit(path, scoped, new_files, "optimize-where",
-                          expect_dvs=[], new_partitions=new_parts)
+    parts_map = m.get("partitions") or {}
+    scoped = [f for f in m["files"]
+              if all(str((parts_map.get(f) or {}).get(k)) == str(v)
+                     for k, v in partition_values.items())]
+    n_target = _n_target(path, scoped, target_file_bytes)
+    # an already-compact partition makes no empty commit
+    return _rewrite(spark, path, m,
+                    [scoped] if len(scoped) > n_target else [],
+                    lambda df: df.coalesce(n_target), "optimize-where")
 
 
 def _physical(m: dict, column: str) -> str:
@@ -1495,9 +1437,8 @@ def delete_where(
         if hi is not None:
             cond = cond & (c <= F.lit(hi))
         survivors = df.filter(~cond | c.isNull())
-        new_files, new_parts = _write_files_observed(
-            survivors, path, m.get("partition_by"),
-            mapping=m.get("mapping"))
+        new_files, new_parts, _rows = _write_files(
+            survivors, path, m=m, drop_empty=True)
     return _rebase_commit(path, candidates, new_files, "delete",
                           expect_dvs=[], new_partitions=new_parts)
 
@@ -1729,48 +1670,16 @@ def optimize_zorder(
     them onto all-new files would double-delete nothing (positions
     are keyed to the old files) while making ``count_rows`` subtract
     ``dv_rows`` twice and keeping CoW ops refusing forever."""
-    from ..operators.scale import morton_code
+    from ..operators.scale import zordered
 
-    parent, manifest = _latest(path)
-    df = read(spark, path, parent)
-    stats = df.agg(
-        F.min(col_a).alias("a_min"), F.max(col_a).alias("a_max"),
-        F.min(col_b).alias("b_min"), F.max(col_b).alias("b_max"),
-    ).first()
-    if stats.a_min is None or stats.b_min is None:
-        return parent  # empty snapshot: nothing to cluster
-    domain = (1 << bits) - 1
-
-    def scaled(col, lo, hi):
-        span = max(int(hi) - int(lo), 1)
-        return F.floor(
-            (F.col(col).cast("double") - float(lo)) / span * domain
-        ).cast("long")
-
-    z = morton_code(
-        scaled(col_a, stats.a_min, stats.a_max),
-        scaled(col_b, stats.b_min, stats.b_max),
-        bits,
-    )
-    zdf = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
+    _parent, m = _latest(path)
     # partitioned tables: the hive writer re-splits each z-run by
     # partition value — files stay z-sorted WITHIN each partition, so
-    # both partition pruning and z-range stats pruning apply
-    new_files, new_parts = _write_files_any(
-        zdf, path, manifest.get("partition_by"),
-        mapping=manifest.get("mapping"))
-    # touched = every parent file (the rewrite replaces the snapshot);
-    # rebase semantics match optimize(): a concurrent append carries
-    # alongside, a concurrent rewrite or DV delete conflicts
-    return _rebase_commit(path, manifest["files"], new_files,
-                          "optimize-zorder", purge_dvs=True,
-                          expect_dvs=manifest.get("dvs") or [],
-                          new_partitions=new_parts)
+    # both partition pruning and z-range stats pruning apply.  No
+    # non-NULL value in either column: nothing to cluster, no commit.
+    return _rewrite(spark, path, m, None,
+                    lambda df: zordered(df, col_a, col_b, n_files, bits),
+                    "optimize-zorder")
 
 
 def change_data_feed(
@@ -2016,8 +1925,8 @@ def replace_where(
     merged = pieces[0]
     for p in pieces[1:]:
         merged = merged.unionByName(p)
-    new_files, new_parts = _write_files_observed(
-        merged, path, m.get("partition_by"), mapping=m.get("mapping"))
+    new_files, new_parts, _rows = _write_files(
+        merged, path, m=m, drop_empty=True)
     return _rebase_commit(path, candidates, new_files, "replace_where",
                           expect_dvs=[], new_partitions=new_parts)
 
@@ -2077,9 +1986,8 @@ def delete_where_dv(
     hits = scan.filter(cond & c.isNotNull())
     # the table-root-prefix soundness guard rides INSIDE row_index
     # (raise_error on the unsound branch, pruning-proof), and the
-    # new-position count rides the sidecar write as an observation —
-    # ONE scan execution and ONE job where the old shape paid a
-    # limit(1).count() probe plus a count() that each re-ran the scan
+    # new-position count is the sidecar's footer row count — ONE scan
+    # execution and ONE job, no probe or count() re-running the scan
     positions = hits.select(
         F.col("__rel").alias("rel"),
         F.when(F.col("__fp").startswith(prefix), F.col("__ri"))
@@ -2092,21 +2000,14 @@ def delete_where_dv(
         prior = _read_dvs(spark, path, old_dvs)
         positions = positions.join(prior, ["rel", "row_index"],
                                    "left_anti")
-    obs = Observation()
-    positions = positions.observe(obs, F.count(F.lit(1)).alias("n"))
     try:
-        new_dvs, dv_dir = _write_dv_sidecar(positions, path,
-                                            with_dir=True)
+        new_dvs, _parts, n_new = _write_files(
+            positions, path, m={}, root="dv", drop_empty=True)
     except Exception as exc:  # the guard fires lazily inside the write
         _reraise_unsound_scan(exc)  # RuntimeError, old contract
         raise
-    n_new = int(obs.get["n"])
     if n_new == 0:
-        # delete matched nothing new: drop the empty sidecar dir, no
-        # empty commit (externally identical to the old probe-first
-        # shape — the uuid dir was never referenced by any manifest)
-        shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-        return parent
+        return parent  # matched nothing new: no empty commit
     # standard optimistic-retry commit (round-14 ADVICE, applied to
     # both MoR mutators): rebase over compatible appends; conflict on
     # any DV change and on a concurrent rewrite dropping a scanned
@@ -2210,9 +2111,9 @@ def update_where_mor(
     if gen:
         upd = upd.drop(*[g for g in gen if g in upd.columns])
     upd = _prepare_batch(upd, m, "update")
-    new_files, new_parts = _write_files_any(
-        upd, path, m.get("partition_by"), mapping=m.get("mapping"))
-    new_dvs = _write_dv_sidecar(positions, path)
+    new_files, new_parts, _rows = _write_files(upd, path, m=m)
+    new_dvs, _parts, _rows = _write_files(
+        positions, path, m={}, root="dv", drop_empty=True)
     # standard optimistic-retry commit, like every other mutator
     # (round-14 ADVICE): rebase over compatible appends; conflict on
     # any DV change (expect_dvs — the images were computed net of
@@ -2261,8 +2162,7 @@ def replace_partitions(spark: SparkSession, path: str,
             "leave their vectors dangling)"
         )
     df = _prepare_batch(df, m, "replace_partitions")
-    new_files, new_parts = _write_files_partitioned(
-        _to_physical(df, m.get("mapping")), path, pby)
+    new_files, new_parts, _rows = _write_files(df, path, m=m)
     if not new_files:
         return parent  # empty batch: no partitions to replace
     replaced = {
@@ -2334,6 +2234,36 @@ def _all_spec_sources(m: dict) -> set[str]:
     }
 
 
+#: Manifest maps keyed by LOGICAL column name: a rename re-keys them,
+#: a drop removes the column's entry.
+_COLUMN_KEYED = ("bloom_index", "ndv_sketch", "defaults")
+
+
+def _refuse_dependents(pm: dict, col: str, op: str) -> None:
+    """Refuse to ``op`` column ``col`` while other metadata names it —
+    a CHECK constraint, a generated column's expression or the sort
+    order (Delta's ``DELTA_CONSTRAINT_DEPENDENT_COLUMN_CHANGE``): the
+    schema change would commit, then every later append (or
+    :func:`optimize_sorted`) would fail at analysis.  Expressions match
+    by identifier token, case-insensitively; a false positive (say, the
+    name inside a string literal) only refuses."""
+    name = col.lower()
+
+    def uses(expr: str) -> bool:
+        return name in {t.lower() for t in re.findall(r"[A-Za-z_]\w*", expr)}
+
+    refs = [f"CHECK constraint {c!r}"
+            for c, pred in (pm.get("constraints") or {}).items() if uses(pred)]
+    refs += [f"generated column {g!r}"
+             for g, expr in (pm.get("generated") or {}).items() if uses(expr)]
+    if name in {c.lower() for c in pm.get("sort_order") or []}:
+        refs.append(f"sort order {pm['sort_order']}")
+    if refs:
+        raise ValueError(
+            f"cannot {op} {col!r}: {', '.join(refs)} reference(s) it — "
+            "drop or change those first")
+
+
 def rename_column(path: str, old: str, new: str) -> int:
     """Rename a column WITHOUT rewriting any data file (column
     mapping, round-12 VERDICT task 5 — the Delta name-mapping /
@@ -2357,25 +2287,23 @@ def rename_column(path: str, old: str, new: str) -> int:
             raise ValueError(
                 f"{old!r} is a partition-source column — rename "
                 "requires a layout rewrite, not a mapping commit")
+        _refuse_dependents(pm, old, "rename")
         mapping = dict(pm.get("mapping") or {})
         mapping[new] = mapping.pop(old, old)
         schema = ", ".join(
             f"{new if n == old else n} {t}" for n, t in types.items()
         )
-        # per-column sidecar maps are keyed by LOGICAL name: re-key
-        # them with the rename (values are unchanged, so the sidecars
-        # stay valid under the new name) — leaving them under the old
-        # key would let a later re-add of that name consult stale
-        # sidecars built from the old column's values, a silent
-        # false-negative prune (round-13 ADVICE)
-        bloom = dict(pm.get("bloom_index") or {})
-        if old in bloom:
-            bloom[new] = bloom.pop(old)
-        ndv = dict(pm.get("ndv_sketch") or {})
-        if old in ndv:
-            ndv[new] = ndv.pop(old)
-        return pm["files"], dict(schema=schema, mapping=mapping,
-                                 bloom_index=bloom, ndv_sketch=ndv)
+        # per-column maps are keyed by LOGICAL name: re-key them with
+        # the rename (values are unchanged, so they stay valid under
+        # the new name) — left under the old key, a sidecar would
+        # serve a later re-add of that name (a silent false-negative
+        # prune, round-13 ADVICE) and an initial default would stop
+        # applying to the renamed column
+        keyed = {k: dict(pm.get(k) or {}) for k in _COLUMN_KEYED}
+        for cols in keyed.values():
+            if old in cols:
+                cols[new] = cols.pop(old)
+        return pm["files"], dict(schema=schema, mapping=mapping, **keyed)
 
     _latest(path)
     return _commit_loop(path, "rename-column", plan)
@@ -2460,50 +2388,27 @@ def drop_column(path: str, col: str) -> int:
             raise ValueError(
                 f"{col!r} is a partition-source column — drop "
                 "requires a layout rewrite, not a mapping commit")
+        _refuse_dependents(pm, col, "drop")
         mapping = dict(pm.get("mapping") or {})
         phys = mapping.pop(col, col)
         dropped = list(pm.get("dropped_physical") or [])
         if phys not in dropped:
             dropped.append(phys)
-        # invalidate the dropped column's sidecar maps: a later
+        # invalidate the dropped column's per-column maps: a later
         # re-add of the same logical name maps to a FRESH physical
         # column, so sidecars built from the old pages would prune
-        # falsely (round-13 ADVICE; mirrors dropped_physical)
-        bloom = {c: fm for c, fm in (pm.get("bloom_index") or {}).items()
-                 if c != col}
-        ndv = {c: fm for c, fm in (pm.get("ndv_sketch") or {}).items()
-               if c != col}
+        # falsely (round-13 ADVICE; mirrors dropped_physical) and the
+        # old initial default would fill the re-added column's
+        # pre-add rows, which must read NULL
+        keyed = {k: {c: v for c, v in (pm.get(k) or {}).items() if c != col}
+                 for k in _COLUMN_KEYED}
         return pm["files"], dict(
             schema=", ".join(f"{n} {t}" for n, t in types.items()
                              if n != col),
-            mapping=mapping, dropped_physical=dropped,
-            bloom_index=bloom, ndv_sketch=ndv)
+            mapping=mapping, dropped_physical=dropped, **keyed)
 
     _latest(path)
     return _commit_loop(path, "drop-column", plan)
-
-
-def _write_dv_sidecar(positions: DataFrame, path: str,
-                      with_dir: bool = False):
-    """Write a (rel, row_index) position frame as a deletion-vector
-    parquet sidecar under ``dv/<uuid>/``; returns relative paths
-    (plus the sidecar dir itself when ``with_dir``, so an
-    observed-empty write can be rolled back without a count job)."""
-    rel_dir = os.path.join("dv", uuid.uuid4().hex[:12])
-    dest = os.path.join(path, rel_dir)
-    try:
-        positions.write.mode("error").parquet(dest)
-    except Exception:
-        # a failed write (e.g. the table-root soundness guard firing
-        # lazily inside the position projection) must not leak the
-        # partially-written, never-referenced dv/<uuid>/ dir
-        shutil.rmtree(dest, ignore_errors=True)
-        raise
-    files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(dest) if f.endswith(".parquet")
-    )
-    return (files, rel_dir) if with_dir else files
 
 
 def merge_three_way(
@@ -2616,7 +2521,6 @@ def merge_three_way(
                     mp[c] = f"{c}_{uuid.uuid4().hex[:8]}"
             eff_mapping = mp or None
     touched = _matched_data_files(spark, path, parent, manifest, src, key)
-    pby = manifest.get("partition_by")
 
     in_scope = None
     drop_whole: list[str] = []
@@ -2675,7 +2579,8 @@ def merge_three_way(
             ).localCheckpoint()
             n_dv = positions.count()
             if n_dv:
-                dv_files = _write_dv_sidecar(positions, path)
+                dv_files, _parts, _rows = _write_files(
+                    positions, path, m={}, root="dv", drop_empty=True)
 
     inserts = src
     if delete_col is not None:
@@ -2700,8 +2605,9 @@ def merge_three_way(
                 inserts.select(*touched_df.columns))
     else:
         merged = inserts
-    new_files, new_parts = _write_files_observed(
-        merged, path, pby, mapping=eff_mapping)
+    new_files, new_parts, _rows = _write_files(
+        merged, path, m={**manifest, "mapping": eff_mapping},
+        drop_empty=True)
     return _rebase_commit(
         path, sorted(touched) + drop_whole, new_files, "merge3",
         expect_dvs=[], new_partitions=new_parts,
@@ -3365,8 +3271,6 @@ def publish(spark: SparkSession, staging_path: str, main_path: str) -> int:
                 "clone point — re-stage from the new main")
         schema = sm["schema"]
     # move staged local files into main (same filesystem: pure rename)
-    import shutil
-
     token = f"wap-{uuid.uuid4().hex[:8]}"
     sparts = sm.get("partitions") or {}
     moved, moved_parts = [], {}
@@ -3544,8 +3448,6 @@ def drop_branch(path: str, name: str) -> None:
     """DROP BRANCH: remove the branch table (its manifests and its
     LOCAL files only — fork-point files are absolute refs into main
     and are never touched, the clone deletion contract)."""
-    import shutil
-
     bp = branch_path(path, name)
     if latest_version(bp) == 0:
         raise ValueError(f"unknown branch '{name}' at {path}")
@@ -3892,19 +3794,15 @@ def optimize_sorted(spark: SparkSession, path: str,
     global-sort machinery) + per-partition sort; the commit replaces
     every file atomically, purging any deletion vectors like
     ``optimize``."""
-    parent, m = _latest(path)
+    from ..operators.scale import range_sorted
+
+    _parent, m = _latest(path)
     order = m.get("sort_order")
     if not order:
         raise ValueError("no sort order declared — set_sort_order first")
-    df = read(spark, path, parent)
     n = n_files or max(1, len(m["files"]))
-    out = df.repartitionByRange(n, *order).sortWithinPartitions(*order)
-    new_files, parts = _write_files_any(
-        out, path, m.get("partition_by"), mapping=m.get("mapping"))
-    return _rebase_commit(path, list(m["files"]), new_files,
-                          "optimize_sort", purge_dvs=True,
-                          expect_dvs=m.get("dvs") or [],
-                          new_partitions=parts)
+    return _rewrite(spark, path, m, None,
+                    lambda df: range_sorted(df, order, n), "optimize_sort")
 
 
 # --------------------------------------------------------------------
@@ -3991,15 +3889,12 @@ def optimize_sorted_incremental(spark: SparkSession, path: str
     join the rewrite set (sound).  Returns ``(version, n_rewritten,
     n_total)``; a fully-clustered table returns ``(parent, 0, n)``
     with no empty commit."""
-    parent, m = _latest(path)
+    from ..operators.scale import range_sorted
+
+    _parent, m = _latest(path)
     order = m.get("sort_order")
     if not order:
         raise ValueError("no sort order declared — set_sort_order first")
-    if _has_dvs(m):
-        raise ValueError(
-            "table carries deletion vectors — run optimize() to purge "
-            "them before reclustering (the rewrite reads files "
-            "directly and would resurrect deleted rows)")
     col = _physical(m, order[0])
     stats = m.get("stats") or {}
     ranged, unranged = [], []
@@ -4014,28 +3909,21 @@ def optimize_sorted_incremental(spark: SparkSession, path: str
             ranged.append((s[0], s[1], f))
     ranged.sort(key=lambda t: (t[0], t[1], t[2]))
     clusters: list[list[str]] = []
-    cur: list[str] = []
     cur_hi = None
     for lo, hi, f in ranged:
-        if cur and lo <= cur_hi:
-            cur.append(f)
+        if clusters and lo <= cur_hi:
+            clusters[-1].append(f)
             cur_hi = max(cur_hi, hi)
         else:
-            if cur:
-                clusters.append(cur)
-            cur, cur_hi = [f], hi
-    if cur:
-        clusters.append(cur)
-    rewrite = [f for c in clusters if len(c) >= 2 for f in c] + unranged
+            clusters.append([f])
+            cur_hi = hi
+    rewrite = sorted(
+        [f for c in clusters if len(c) >= 2 for f in c] + unranged)
     if len(rewrite) < 2:
-        return parent, 0, len(m["files"])
-    df = _load_files(spark, path, m, sorted(rewrite))
-    out = df.repartitionByRange(len(rewrite), *order) \
-        .sortWithinPartitions(*order)
-    new_files, parts = _write_files_any(
-        out, path, m.get("partition_by"), mapping=m.get("mapping"))
-    v = _rebase_commit(path, sorted(rewrite), new_files,
-                       "recluster", expect_dvs=[], new_partitions=parts)
+        rewrite = []  # fully clustered: no empty commit
+    v = _rewrite(spark, path, m, [rewrite] if rewrite else [],
+                 lambda df: range_sorted(df, order, len(rewrite)),
+                 "recluster")
     return v, len(rewrite), len(m["files"])
 
 

@@ -11,15 +11,26 @@ Usage: python scripts/check_contract.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Run every registered query (or the named ones) on "
+        "Spark and on the DuckDB oracle and compare the results.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("query", nargs="*",
+                    help="check only these queries (default: all)")
+    return ap.parse_args(argv)
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    args = _parse_args()
+    sf_dir, only = args.sf_dir, set(args.query)
 
     from datastore_mapper_spark.registry import all_queries
     from datastore_mapper_spark.session import get_session

@@ -22,6 +22,7 @@ Usage: python scripts/empty_input_differential.py [out.json]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -49,8 +50,18 @@ EMPTY_INPUT_KNOWN = {
 }
 
 
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Run every registered query on zero-row fixture "
+        "tables on Spark and on the DuckDB oracle and write the "
+        "per-query statuses as JSON.")
+    ap.add_argument("out_path", nargs="?", default="EMPTY_INPUT.json",
+                    metavar="out.json")
+    return ap.parse_args(argv)
+
+
 def main() -> int:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "EMPTY_INPUT.json"
+    out_path = _parse_args().out_path
 
     from datastore_mapper_spark.registry import all_queries
     from datastore_mapper_spark.session import get_session

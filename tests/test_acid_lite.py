@@ -806,11 +806,11 @@ def test_replace_partitions_race(spark, tdir, monkeypatch):
     acid_lite.create_table(
         spark, tdir, _pdf(spark, [(1, "old", 0), (2, "old", 1)]),
         partition_by=["day"])
-    orig_write = acid_lite._write_files_partitioned
+    orig_write = acid_lite._write_files
     state = {"raced": False}
 
-    def racing_write(df, path, pby, **kw):
-        out = orig_write(df, path, pby, **kw)
+    def racing_write(df, path, **kw):
+        out = orig_write(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             # concurrent DELETE rewrites the day=0 file the overwrite
@@ -818,7 +818,7 @@ def test_replace_partitions_race(spark, tdir, monkeypatch):
             acid_lite.delete_where(spark, tdir, "k", lo=1, hi=1)
         return out
 
-    monkeypatch.setattr(acid_lite, "_write_files_partitioned", racing_write)
+    monkeypatch.setattr(acid_lite, "_write_files", racing_write)
     with pytest.raises(acid_lite.ConcurrentModification):
         acid_lite.replace_partitions(
             spark, tdir, _pdf(spark, [(100, "new", 0)]))
@@ -911,17 +911,17 @@ def test_merge_three_way_conflicts_on_concurrent_dv(spark, tdir,
     snapshot)."""
     acid_lite.create_table(
         spark, tdir, _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1))
-    orig = acid_lite._write_files_any
+    orig = acid_lite._write_files
     state = {"raced": False}
 
-    def racing(df, path, pby, **kw):
-        out = orig(df, path, pby, **kw)
+    def racing(df, path, **kw):
+        out = orig(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             acid_lite.delete_where_dv(spark, tdir, "k", lo=3, hi=3)
         return out
 
-    monkeypatch.setattr(acid_lite, "_write_files_any", racing)
+    monkeypatch.setattr(acid_lite, "_write_files", racing)
     with pytest.raises(acid_lite.ConcurrentModification, match="deletion"):
         acid_lite.merge_three_way(
             spark, tdir, _df(spark, [(1, "UPD")]), "k")
@@ -1069,20 +1069,20 @@ def test_remove_orphan_files(spark, tdir, monkeypatch):
         spark, tdir, _df(spark, [(1, "a"), (2, "b")]).coalesce(1))
     # manufacture a conflict-aborted delete: the loser wrote its
     # survivor files, then raised ConcurrentModification
-    orig = acid_lite._write_files_any
+    orig = acid_lite._write_files
     state = {"raced": False}
 
-    def racing(df, path, pby, **kw):
-        out = orig(df, path, pby, **kw)
+    def racing(df, path, **kw):
+        out = orig(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             acid_lite.delete_where_dv(spark, tdir, "k", lo=2, hi=2)
         return out
 
-    monkeypatch.setattr(acid_lite, "_write_files_any", racing)
+    monkeypatch.setattr(acid_lite, "_write_files", racing)
     with pytest.raises(acid_lite.ConcurrentModification):
         acid_lite.delete_where(spark, tdir, "k", hi=1)
-    monkeypatch.setattr(acid_lite, "_write_files_any", orig)
+    monkeypatch.setattr(acid_lite, "_write_files", orig)
 
     def on_disk():
         out = set()
@@ -1113,6 +1113,39 @@ def test_remove_orphan_files(spark, tdir, monkeypatch):
     # table still reads correctly (winner's DV delete intact)
     assert {r.k for r in acid_lite.read(spark, tdir).collect()} == {1}
     _ = time
+
+
+def test_failed_or_fileless_write_leaves_no_directory(spark, tdir,
+                                                      tmp_path):
+    """A write whose job fails, and a write that yields no data file,
+    remove their never-referenced ``data/<uuid>/`` directory: ``data/``
+    and ``dv/`` hold only directories the latest manifest references."""
+    from pyspark.sql import functions as F
+
+    def unreferenced(t):
+        m = acid_lite._read_manifest(t, acid_lite.latest_version(t))
+        live = {os.path.join(*f.split("/")[:2])
+                for f in m["files"] + (m.get("dvs") or [])}
+        return {os.path.join(sub, d) for sub in ("data", "dv")
+                if os.path.isdir(os.path.join(t, sub))
+                for d in os.listdir(os.path.join(t, sub))} - live
+
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]).coalesce(1))
+    # the error fires inside the write job, after Spark made the dir
+    bad = spark.range(2, 3).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") > 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.lit("x")).alias("v"))
+    with pytest.raises(Exception, match="boom"):
+        acid_lite.append(spark, tdir, bad)
+    assert acid_lite.latest_version(tdir) == 1
+    assert unreferenced(tdir) == set()
+    # an empty batch writes no partition dir, only Spark's _SUCCESS
+    t2 = str(tmp_path / "parts")
+    acid_lite.create_table(spark, t2, _pdf(spark, [(1, "a", 0)]),
+                           partition_by=["day"])
+    assert acid_lite.replace_partitions(spark, t2, _pdf(spark, [])) == 1
+    assert unreferenced(t2) == set()
 
 
 def test_describe_history(spark, tdir):
@@ -1493,30 +1526,82 @@ def test_drop_column_and_safe_readd(spark, tdir):
     assert got == {(1, None), (2, None), (3, 100.0)}
 
 
-def test_rename_then_rewrite_ops_compose(spark, tdir):
-    """delete_where / merge after a rename: filters and keys are
-    LOGICAL, rewrites store the PHYSICAL column, reads stay unified
-    — and time travel to a pre-rename version shows the old name."""
-    acid_lite.create_table(
-        spark, tdir, _df(spark, [(i, "x") for i in range(6)]).coalesce(1))
-    acid_lite.rename_column(tdir, "k", "kid")
-    acid_lite.delete_where(spark, tdir, "kid", lo=0, hi=1)
-    got = {r.kid for r in acid_lite.read(spark, tdir).collect()}
-    assert got == {2, 3, 4, 5}
-    src = spark.createDataFrame(
-        [(2, "UPD"), (99, "INS")], "kid bigint, v string")
-    acid_lite.merge_upsert(spark, tdir, src, "kid")
-    rows = {(r.kid, r.v) for r in acid_lite.read(spark, tdir).collect()}
-    assert rows == {(2, "UPD"), (3, "x"), (4, "x"), (5, "x"), (99, "INS")}
-    # pre-rename snapshot still reads under the OLD logical name
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k bigint, w bigint, day bigint")
+
+
+#: op -> (run it on the table, the (k, w) rows it must read back).
+#: Each runs after create (1,10),(4,40) + append (2,20) under ``v``,
+#: rename v -> w and append (3,30) under ``w``: three small files whose
+#: k ranges overlap, so every op rewrites them.
+_RENAMED_REWRITES = {
+    "optimize": (lambda s, t: acid_lite.optimize(s, t), None),
+    "optimize_binpack": (
+        lambda s, t: acid_lite.optimize_binpack(
+            s, t, target_file_bytes=10**7), None),
+    "optimize_where": (
+        lambda s, t: acid_lite.optimize_where(s, t, {"day": 0}), None),
+    "optimize_zorder": (
+        lambda s, t: acid_lite.optimize_zorder(s, t, "k", "w", n_files=2),
+        None),
+    "optimize_sorted": (
+        lambda s, t: (acid_lite.set_sort_order(t, ["k"]),
+                      acid_lite.optimize_sorted(s, t, n_files=2)), None),
+    "optimize_sorted_incremental": (
+        lambda s, t: (acid_lite.set_sort_order(t, ["k"]),
+                      acid_lite.optimize_sorted_incremental(s, t)), None),
+    "delete_where": (
+        lambda s, t: acid_lite.delete_where(s, t, "w", lo=40, hi=40),
+        {(1, 10), (2, 20), (3, 30)}),
+    "replace_where": (
+        lambda s, t: acid_lite.replace_where(
+            s, t, "k", 2, 2, _kv(s, [(2, 200, 0)])),
+        {(1, 10), (2, 200), (3, 30), (4, 40)}),
+    "merge_upsert": (
+        lambda s, t: acid_lite.merge_upsert(
+            s, t, _kv(s, [(2, 200, 0), (9, 90, 0)]), "k"),
+        {(1, 10), (2, 200), (3, 30), (4, 40), (9, 90)}),
+    "update_where_mor": (
+        lambda s, t: acid_lite.update_where_mor(
+            s, t, {"w": "w * 10"}, "k", 2, 2),
+        {(1, 10), (2, 200), (3, 30), (4, 40)}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RENAMED_REWRITES))
+def test_every_rewrite_keeps_renamed_columns(spark, tdir, op):
+    """Every op that writes data files after a rename stores the
+    renamed column under its PHYSICAL name: filters, keys and SET
+    expressions are LOGICAL, reads stay unified across pre- and
+    post-rename files, and time travel to a pre-rename version shows
+    the old name.  (A writer that drops the mapping stores ``w`` as a
+    new physical column, and every rewritten row reads ``w = NULL``.)"""
+    run, want = _RENAMED_REWRITES[op]
+    pby = ["day"] if op == "optimize_where" else None
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k bigint, v bigint, day bigint").coalesce(1)
+    acid_lite.create_table(spark, tdir, mk([(1, 10, 0), (4, 40, 0)]),
+                           partition_by=pby)
+    acid_lite.append(spark, tdir, mk([(2, 20, 0)]))
+    acid_lite.rename_column(tdir, "v", "w")
+    acid_lite.append(spark, tdir, _kv(spark, [(3, 30, 0)]).coalesce(1))
+    before = acid_lite._read_manifest(tdir, 4)["files"]
+    run(spark, tdir)
+    after = acid_lite._read_manifest(
+        tdir, acid_lite.latest_version(tdir))["files"]
+    assert set(after) - set(before)  # it wrote data files
+    got = {(r.k, r.w) for r in acid_lite.read(spark, tdir).collect()}
+    assert got == (want or {(1, 10), (2, 20), (3, 30), (4, 40)})
+    # the pre-rename snapshot still reads under the OLD logical name
     old = acid_lite.read(spark, tdir, version=1)
-    assert old.columns == ["k", "v"]
-    assert {r.k for r in old.collect()} == set(range(6))
+    assert "v" in old.columns and "w" not in old.columns
+    assert {(r.k, r.v) for r in old.collect()} == {(1, 10), (4, 40)}
 
 
 def test_mapping_validation(spark, tdir):
     """rename/drop refuse unknown columns, duplicate targets,
-    partition-source columns, and dropping the last column."""
+    partition-source columns, dropping the last column, and columns a
+    CHECK constraint, a generated column or the sort order names."""
     acid_lite.create_table(spark, tdir, _pdf(spark, [(1, "a", 0)]),
                            partition_by=["day"])
     with pytest.raises(ValueError):
@@ -1531,6 +1616,31 @@ def test_mapping_validation(spark, tdir):
     acid_lite.drop_column(tdir, "k")
     with pytest.raises(ValueError):
         acid_lite.drop_column(tdir, "day")  # also the only column now
+    # a column other metadata names is refused too, committing
+    # nothing: the change would land, then every later append (or
+    # optimize_sorted) would fail to resolve the old name
+    t2 = tdir + "_deps"
+    acid_lite.create_table(
+        spark, t2, spark.createDataFrame(
+            [(1, 10, 5)], "k bigint, v bigint, s bigint"),
+        generated={"g": "k * 2"})
+    acid_lite.add_check_constraint(spark, t2, "pos", "v > 0")
+    acid_lite.set_sort_order(t2, ["s"])
+    v = acid_lite.latest_version(t2)
+    with pytest.raises(ValueError, match="CHECK constraint 'pos'"):
+        acid_lite.rename_column(t2, "v", "v2")
+    with pytest.raises(ValueError, match="CHECK constraint 'pos'"):
+        acid_lite.drop_column(t2, "v")
+    with pytest.raises(ValueError, match="generated column 'g'"):
+        acid_lite.rename_column(t2, "k", "k2")
+    with pytest.raises(ValueError, match="sort order"):
+        acid_lite.drop_column(t2, "s")
+    assert acid_lite.latest_version(t2) == v
+    acid_lite.append(spark, t2, spark.createDataFrame(
+        [(2, 20, 6)], "k bigint, v bigint, s bigint"))
+    acid_lite.optimize_sorted(spark, t2)
+    assert {(r.k, r.v, r.g) for r in acid_lite.read(spark, t2).collect()} \
+        == {(1, 10, 2), (2, 20, 4)}
 
 
 # ---------------------------------------------------------------- shallow clone
@@ -2685,18 +2795,18 @@ def test_update_where_mor_rebases_over_concurrent_append(spark, tdir,
     land."""
     acid_lite.create_table(
         spark, tdir, _df(spark, [(1, "a"), (2, "b")]).coalesce(1))
-    orig = acid_lite._write_dv_sidecar
+    orig = acid_lite._write_files
     state = {"raced": False}
 
-    def racing_sidecar(positions, path, **kw):
-        dvs = orig(positions, path, **kw)
+    def racing_write(df, path, **kw):
+        out = orig(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             acid_lite.append(spark, tdir,
                              _df(spark, [(9, "z")]).coalesce(1))
-        return dvs
+        return out
 
-    monkeypatch.setattr(acid_lite, "_write_dv_sidecar", racing_sidecar)
+    monkeypatch.setattr(acid_lite, "_write_files", racing_write)
     v = acid_lite.update_where_mor(spark, tdir, {"v": "'U'"}, "k", 1, 1)
     assert acid_lite._read_manifest(tdir, v)["op"] == "update-mor"
     got = {(r.k, r.v) for r in acid_lite.read(spark, tdir).collect()}
@@ -2711,17 +2821,17 @@ def test_update_where_mor_conflicts_on_concurrent_dv_change(spark, tdir,
     acid_lite.create_table(
         spark, tdir, _df(spark, [(1, "a"), (2, "b"), (3, "c")])
         .coalesce(1))
-    orig = acid_lite._write_dv_sidecar
+    orig = acid_lite._write_files
     state = {"raced": False}
 
-    def racing_sidecar(positions, path, **kw):
-        dvs = orig(positions, path, **kw)
+    def racing_write(df, path, **kw):
+        out = orig(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             acid_lite.delete_where_dv(spark, tdir, "k", lo=3, hi=3)
-        return dvs
+        return out
 
-    monkeypatch.setattr(acid_lite, "_write_dv_sidecar", racing_sidecar)
+    monkeypatch.setattr(acid_lite, "_write_files", racing_write)
     with pytest.raises(acid_lite.ConcurrentModification, match="deletion"):
         acid_lite.update_where_mor(spark, tdir, {"v": "'U'"}, "k", 1, 1)
     # the winner (DV delete) is intact; the loser changed nothing
@@ -2966,18 +3076,18 @@ def test_identity_restamps_when_losing_append_race(spark, tdir,
     acid_lite.create_table(
         spark, tdir, mk([(1, "a")]).coalesce(1),
         identity={"sid": {"start": 1, "step": 1}})
-    orig = acid_lite._write_files_any
+    orig = acid_lite._write_files
     state = {"raced": False}
 
-    def racing(df, path, *a, **kw):
-        out = orig(df, path, *a, **kw)
+    def racing(df, path, **kw):
+        out = orig(df, path, **kw)
         if not state["raced"]:
             state["raced"] = True
             # a concurrent stamping append lands first
             acid_lite.append(spark, tdir, mk([(2, "b")]).coalesce(1))
         return out
 
-    monkeypatch.setattr(acid_lite, "_write_files_any", racing)
+    monkeypatch.setattr(acid_lite, "_write_files", racing)
     acid_lite.append(spark, tdir, mk([(3, "c")]).coalesce(1))
     rows = {r.k: r.sid for r in acid_lite.read(spark, tdir).collect()}
     assert len(set(rows.values())) == 3, rows       # no collision
@@ -3173,6 +3283,21 @@ def test_clone_and_branch_read_their_own_appends_under_a_default(
         got = {r.k: r.c for r in acid_lite.read(spark, t).collect()
                if r.k >= 8}
         assert got == {8: 5, 9: None}
+
+
+def test_initial_default_follows_rename_and_drop(spark, tdir):
+    """An initial default is keyed by logical name: a rename carries it
+    to the new name, and a drop removes it, so a re-added column of the
+    dropped name reads NULL on rows written before it was added."""
+    acid_lite.create_table(spark, tdir, _df(spark, [(1, "a")]))
+    acid_lite.add_column_default(tdir, "c", "bigint", 7)
+    acid_lite.add_column_default(tdir, "d", "bigint", 8)
+    acid_lite.rename_column(tdir, "c", "c2")
+    acid_lite.drop_column(tdir, "d")
+    acid_lite.append_evolve(spark, tdir, spark.createDataFrame(
+        [(3, "c", 70, 100)], "k bigint, v string, c2 bigint, d bigint"))
+    got = {(r.k, r.c2, r.d) for r in acid_lite.read(spark, tdir).collect()}
+    assert got == {(1, 7, None), (3, 70, 100)}
 
 
 def test_default_and_lineage_read_after_expire_snapshots(spark, tdir):

@@ -169,18 +169,27 @@ def test_executor_ms_without_ui(spark, sf_dir):
     assert _executor_ms(spark, "bench_test_executor_ms") > 0
 
 
-def test_time_registry_help_exits_before_spark():
-    """``--help`` prints the usage of the three positionals and exits
-    0 without starting a Spark session (it used to be read as
-    ``sf_dir`` and start a full sweep)."""
+#: gate script -> the positionals its ``--help`` names
+_HELP_POSITIONALS = {
+    "time_registry.py": ("sf_dir", "out_path", "query"),
+    "check_contract.py": ("sf_dir", "query"),
+    "empty_input_differential.py": ("out.json",),
+}
+
+
+@pytest.mark.parametrize("script", sorted(_HELP_POSITIONALS))
+def test_time_registry_help_exits_before_spark(script):
+    """``--help`` prints the usage of the script's positionals and
+    exits 0 without starting a Spark session (it used to be read as
+    the first positional: a full sweep, or a report file named
+    ``--help``)."""
     import os
     import subprocess
     import sys
 
-    script = os.path.join(os.path.dirname(bench.__file__), "scripts",
-                          "time_registry.py")
-    out = subprocess.run([sys.executable, script, "--help"],
+    path = os.path.join(os.path.dirname(bench.__file__), "scripts", script)
+    out = subprocess.run([sys.executable, path, "--help"],
                          capture_output=True, text=True, timeout=30)
     assert out.returncode == 0, out.stderr
-    assert out.stdout.startswith("usage: time_registry.py")
-    assert "sf_dir" in out.stdout and "query" in out.stdout
+    assert out.stdout.startswith(f"usage: {script}")
+    assert all(p in out.stdout for p in _HELP_POSITIONALS[script])

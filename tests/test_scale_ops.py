@@ -175,13 +175,13 @@ def test_sorted_write_prunes_row_groups(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from datastore_mapper_spark.catalog import table
-    from datastore_mapper_spark.operators.scale import write_sorted
+    from datastore_mapper_spark.operators.scale import range_sorted
     from datastore_mapper_spark.plans.explain import scan_output_rows
 
     o = table(spark, sf_dir, "orders")
     sorted_path = str(tmp_path / "sorted")
     shuffled_path = str(tmp_path / "shuffled")
-    write_sorted(o, sorted_path, ["o_orderkey"], n_files=8)
+    range_sorted(o, ["o_orderkey"], n_files=8).write.parquet(sorted_path)
     o.repartition(8).write.mode("overwrite").parquet(shuffled_path)
 
     pred = F.col("o_orderkey").between(100, 150)
@@ -202,15 +202,15 @@ def test_zorder_write_prunes_on_both_columns(spark, sf_dir, tmp_path):
 
     from datastore_mapper_spark.catalog import table
     from datastore_mapper_spark.operators.scale import (
-        write_sorted,
-        write_zordered,
+        range_sorted,
+        zordered,
     )
     from datastore_mapper_spark.plans.explain import scan_output_rows
 
     o = table(spark, sf_dir, "orders")
     z_path, s_path = str(tmp_path / "z"), str(tmp_path / "s")
-    write_zordered(o, z_path, "o_custkey", "o_orderkey", n_files=8)
-    write_sorted(o, s_path, ["o_orderkey"], n_files=8)
+    zordered(o, "o_custkey", "o_orderkey", n_files=8).write.parquet(z_path)
+    range_sorted(o, ["o_orderkey"], n_files=8).write.parquet(s_path)
     total = o.count()
 
     pred_b = F.col("o_orderkey").between(100, 150)
@@ -302,30 +302,6 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_compact_parquet_dir_shrinks_file_count(spark, sf_dir, tmp_path):
-    """Compaction must collapse a deliberately fragmented directory to
-    the computed target file count with identical content."""
-    import os
-
-    from datastore_mapper_spark.catalog import table
-    from datastore_mapper_spark.operators.scale import compact_parquet_dir
-
-    o = table(spark, sf_dir, "orders")
-    frag = str(tmp_path / "fragmented")
-    o.repartition(50).write.mode("overwrite").parquet(frag)
-    n_frag = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
-    assert n_frag == 50
-
-    dest = str(tmp_path / "compacted")
-    n_target = compact_parquet_dir(spark, frag, dest, target_file_bytes=1 << 30)
-    n_out = len([f for f in os.listdir(dest) if f.endswith(".parquet")])
-    assert n_out == n_target == 1
-    assert spark.read.parquet(dest).count() == o.count()
-    a = {r.o_orderkey for r in spark.read.parquet(dest).collect()}
-    b = {r.o_orderkey for r in o.collect()}
-    assert a == b
 
 
 def test_rolling_wau_hll_within_error(spark, sf_dir):
